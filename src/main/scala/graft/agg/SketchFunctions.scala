@@ -24,44 +24,53 @@ object SketchFunctions {
   import SketchAggregators._
 
   /**
-   * Thread-local memo for deserialized sketches. Broadcast-sketch probe
-   * queries pass the same serialized bytes to a scalar UDF once per row; a
-   * d×w CM is ~1.3MB, so per-row deserialization would dominate the probe
-   * (measured 14s → sub-second on a 20k-key probe). Keyed by a cheap
-   * fingerprint (length + xxhash of head/middle/tail samples) because each
-   * row hands the UDF a fresh byte-array copy — identity caching can't hit.
+   * Thread-local memo for deserialized sketches. A probe hands a scalar UDF
+   * or native expression the same serialized sketch once per row; a d×w CM
+   * is ~1.3MB and q07's Bloom ~540KB, so decoding per row would dominate
+   * the probe. Each slot keeps the caller's own array (no clone) beside its
+   * decoded value and matches in two exact steps:
+   *  - reference identity, O(1): a sketch passed as a scalar subquery
+   *    (`bloom_contains(sk.scalar(), key)`) reaches every row of a task as
+   *    the same array;
+   *  - `java.util.Arrays.equals`: a cross-joined sketch arrives as a fresh
+   *    copy per row, and a byte compare costs a fraction of a decode. The
+   *    slot then adopts the caller's array, so that caller's later rows
+   *    hit by identity.
+   * No hash or sample stands in for the bytes, so two same-shape sketches
+   * that differ in one late word never share a decode. A kept array must
+   * not be mutated afterwards; Spark never mutates a value it hands to an
+   * expression.
    */
   private final class SketchMemo[T >: Null <: AnyRef] {
     // 4 slots per thread so queries probing several broadcast sketches per
     // row (e.g. q42's 3 replicas combined with `least`) don't thrash the
     // memo back into per-row deserialization; round-robin eviction.
     private final class Slots {
-      val f1 = new Array[Long](4)
-      val f2 = new Array[Long](4)
+      val keys = new Array[Array[Byte]](4)
       val vs = new Array[AnyRef](4)
       var next = 0
     }
     private val local = new ThreadLocal[Slots] {
       override def initialValue(): Slots = new Slots
     }
-    // Fingerprint = xxhash64 of the ENTIRE byte array (two seeds). Sampling
-    // head/mid/tail bytes is NOT safe here: sparse same-shape sketches are
-    // ~all zeros with identical headers and collided in practice (a probe
-    // answered from the wrong query's sketch). Full-array hashing costs
-    // ~0.1ms/MB per row — still ~3x cheaper than deserializing, and exact.
     def get(bytes: Array[Byte], parse: Array[Byte] => T): T = {
-      val f1 = XxHash64.hashBytes(bytes, 0x5eedL)
-      val f2 = XxHash64.hashBytes(bytes, 0xfeedL)
       val s = local.get()
       var i = 0
       while (i < 4) {
-        if (s.vs(i) != null && s.f1(i) == f1 && s.f2(i) == f2)
+        if (s.keys(i) eq bytes) return s.vs(i).asInstanceOf[T]
+        i += 1
+      }
+      i = 0
+      while (i < 4) {
+        if (s.keys(i) != null && java.util.Arrays.equals(s.keys(i), bytes)) {
+          s.keys(i) = bytes
           return s.vs(i).asInstanceOf[T]
+        }
         i += 1
       }
       val v = parse(bytes)
       val slot = s.next
-      s.f1(slot) = f1; s.f2(slot) = f2; s.vs(slot) = v
+      s.keys(slot) = bytes; s.vs(slot) = v
       s.next = (slot + 1) & 3
       v
     }
@@ -157,10 +166,42 @@ object SketchFunctions {
 
   // ---- scalar query functions over serialized sketches
 
+  // The probe bodies, each defined once: the Column builders below and the
+  // SQL names in [[register]] wrap the same function, so both surfaces
+  // decode through the kernel's memo.
+
   /** Point-frequency estimate of `key` from a serialized CM sketch. */
   val cmQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
     if (bytes == null || key == null) -1L
     else cmMemo.get(bytes, CountMinSketch.deserialize).query(key)
+  private val cmTotalUdf: Array[Byte] => Long = bytes =>
+    if (bytes == null) -1L
+    else cmMemo.get(bytes, CountMinSketch.deserialize).totalWeight
+  private val topkEntriesUdf: (Array[Byte], Int) => Array[TopKEntry] = (bytes, k) =>
+    if (bytes == null) Array.empty[TopKEntry]
+    else topkMemo.get(bytes, TopKSketch.deserialize).topK(k)
+      .map(e => TopKEntry(e._1, e._2))
+  private val csQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
+    if (bytes == null || key == null) -1L
+    else csMemo.get(bytes, CountSketch.deserialize).query(key)
+  private val mgQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
+    if (bytes == null || key == null) -1L
+    else mgMemo.get(bytes, MisraGries.deserialize).query(key)
+  private val fssQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
+    if (bytes == null || key == null) -1L
+    else fssMemo.get(bytes, FilteredSpaceSaving.deserialize).query(key)
+  private val hllCountUdf: Array[Byte] => Long = bytes =>
+    if (bytes == null) -1L
+    else hllMemo.get(bytes, HyperLogLog.deserialize).estimateLong()
+  private val bloomContainsUdf: (Array[Byte], String) => Boolean = (bytes, key) =>
+    bytes != null && key != null &&
+      bloomMemo.get(bytes, BloomFilter.deserialize).mightContain(key)
+  private val kllQuantileUdf: (Array[Byte], Double) => Double = (bytes, q) =>
+    if (bytes == null) Double.NaN
+    else kllMemo.get(bytes, KllSketch.deserialize).quantile(q)
+  private val tdigestQuantileUdf: (Array[Byte], Double) => Double = (bytes, q) =>
+    if (bytes == null) Double.NaN
+    else tdMemo.get(bytes, TDigest.deserialize).quantile(q)
 
   def cm_query(sketch: Column, key: Column): Column =
     functions.udf(cmQueryUdf).apply(sketch, key)
@@ -178,13 +219,15 @@ object SketchFunctions {
     ).apply(sketch, keys)
 
   /** Probe a finished 1-row CM sketch against a LARGE key side: collects the
-    * sketch, broadcasts the DECODED object once per executor, and returns a
-    * key→estimate Column builder. Use this instead of
-    * `keys.crossJoin(broadcast(sketchDF))` + `cm_query` whenever the probe
-    * side is big — the crossJoin materializes the ~1.3MB serialized sketch
-    * into EVERY probe row (tens of GB of byte copying at 20k keys) and the
-    * memo re-fingerprints it per row; the broadcast variable does neither
-    * (measured: q28 29.6s → sub-second probe at sf0.1). */
+    * sketch at plan-build time, broadcasts the DECODED object once per
+    * executor, and returns a key→estimate Column builder. Two shapes serve
+    * a one-row sketch frame `sk` without per-row cost: this one, and the
+    * lazy `cm_query(sk.scalar(), key)`, whose scalar subquery hands every
+    * row of a task the same array (memo hit by identity, no collect before
+    * the plan runs). Avoid `keys.crossJoin(broadcast(sk))` + `cm_query`
+    * on a big probe side: the crossJoin copies the ~1.3MB serialized
+    * sketch into EVERY probe row (tens of GB of byte copying at 20k keys;
+    * measured: q28 29.6s → sub-second probe at sf0.1 on leaving it). */
   def cm_probe(sketchRow: org.apache.spark.sql.DataFrame): Column => Column = {
     val bytes = sketchRow.head().getAs[Array[Byte]](0)
     val bc = sketchRow.sparkSession.sparkContext
@@ -195,8 +238,9 @@ object SketchFunctions {
 
   /** [[cm_probe]]'s Bloom twin: collect a finished 1-row Bloom sketch,
     * broadcast the DECODED filter once per executor, return a membership
-    * Column builder. Same rationale: a `crossJoin(broadcast(bloomDF))`
-    * would copy the filter's bytes into EVERY probe row. */
+    * Column builder. Its lazy twin is `bloom_contains(sk.scalar(), key)`
+    * (q07, q112); a `crossJoin(broadcast(sk))` would copy the filter's
+    * bytes into EVERY probe row. */
   def bloom_probe(sketchRow: org.apache.spark.sql.DataFrame): Column => Column = {
     val bytes = sketchRow.head().getAs[Array[Byte]](0)
     val bc = sketchRow.sparkSession.sparkContext
@@ -218,28 +262,17 @@ object SketchFunctions {
 
   /** Total stream weight N recorded in a CM sketch (for ε·N bounds). */
   def cm_total(sketch: Column): Column =
-    functions.udf((bytes: Array[Byte]) =>
-      if (bytes == null) -1L else cmMemo.get(bytes, CountMinSketch.deserialize).totalWeight
-    ).apply(sketch)
+    functions.udf(cmTotalUdf).apply(sketch)
 
   /** Top-k entries of a serialized TopK sketch → array<struct<key,est>>. */
   def topk_entries(sketch: Column, k: Int): Column =
-    functions.udf((bytes: Array[Byte]) =>
-      if (bytes == null) Array.empty[TopKEntry]
-      else TopKSketch.deserialize(bytes).topK(k).map(e => TopKEntry(e._1, e._2))
-    ).apply(sketch)
+    functions.udf(topkEntriesUdf).apply(sketch, functions.lit(k))
 
   def cs_query(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      if (bytes == null || key == null) -1L
-      else csMemo.get(bytes, CountSketch.deserialize).query(key)
-    ).apply(sketch, key)
+    functions.udf(csQueryUdf).apply(sketch, key)
 
   def mg_query(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      if (bytes == null || key == null) -1L
-      else mgMemo.get(bytes, MisraGries.deserialize).query(key)
-    ).apply(sketch, key)
+    functions.udf(mgQueryUdf).apply(sketch, key)
 
   /** All (key, est) entries of a Misra-Gries summary. */
   def mg_entries(sketch: Column): Column =
@@ -250,10 +283,7 @@ object SketchFunctions {
     ).apply(sketch)
 
   def fss_query(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      if (bytes == null || key == null) -1L
-      else fssMemo.get(bytes, FilteredSpaceSaving.deserialize).query(key)
-    ).apply(sketch, key)
+    functions.udf(fssQueryUdf).apply(sketch, key)
 
   /** All (key, f, e) entries of an FSS summary, f desc. */
   def fss_entries(sketch: Column): Column =
@@ -265,9 +295,7 @@ object SketchFunctions {
     ).apply(sketch)
 
   def hll_count(sketch: Column): Column =
-    functions.udf((bytes: Array[Byte]) =>
-      if (bytes == null) -1L else hllMemo.get(bytes, HyperLogLog.deserialize).estimateLong()
-    ).apply(sketch)
+    functions.udf(hllCountUdf).apply(sketch)
 
   def hll_stderr(sketch: Column): Column =
     functions.udf((bytes: Array[Byte]) =>
@@ -288,15 +316,15 @@ object SketchFunctions {
       else HyperLogLog.deserialize(x).merge(HyperLogLog.deserialize(y)).serialize()
     ).apply(a, b)
 
+  /** Bloom membership of `key`. Probe a one-row sketch frame `sk` as a
+    * scalar subquery, `bloom_contains(sk.scalar(), key)`: every row of a
+    * task then sees the same array and the memo answers by identity. A
+    * `crossJoin(broadcast(sk))` copies the filter into every row. */
   def bloom_contains(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      bytes != null && key != null && bloomMemo.get(bytes, BloomFilter.deserialize).mightContain(key)
-    ).apply(sketch, key)
+    functions.udf(bloomContainsUdf).apply(sketch, key)
 
   def kll_quantile(sketch: Column, q: Column): Column =
-    functions.udf((bytes: Array[Byte], q: Double) =>
-      if (bytes == null) Double.NaN else kllMemo.get(bytes, KllSketch.deserialize).quantile(q)
-    ).apply(sketch, q)
+    functions.udf(kllQuantileUdf).apply(sketch, q)
 
   def kll_n(sketch: Column): Column =
     functions.udf((bytes: Array[Byte]) =>
@@ -304,9 +332,7 @@ object SketchFunctions {
     ).apply(sketch)
 
   def tdigest_quantile(sketch: Column, q: Column): Column =
-    functions.udf((bytes: Array[Byte], q: Double) =>
-      if (bytes == null) Double.NaN else tdMemo.get(bytes, TDigest.deserialize).quantile(q)
-    ).apply(sketch, q)
+    functions.udf(tdigestQuantileUdf).apply(sketch, q)
 
   def tdigest_rank(sketch: Column, x: Column): Column =
     functions.udf((bytes: Array[Byte], x: Double) =>
@@ -339,25 +365,15 @@ object SketchFunctions {
     r.register("mg_sketch", functions.udaf(new MgAggregator(1024), tupleStrLong))
     r.register("fss_sketch",
       functions.udaf(new FssAggregator(1024, 4096, FilteredSpaceSaving.DefaultSeed), tupleStrLong))
-    r.register("cs_query", (b: Array[Byte], k: String) =>
-      if (b == null || k == null) -1L else CountSketch.deserialize(b).query(k))
-    r.register("mg_query", (b: Array[Byte], k: String) =>
-      if (b == null || k == null) -1L else MisraGries.deserialize(b).query(k))
-    r.register("fss_query", (b: Array[Byte], k: String) =>
-      if (b == null || k == null) -1L else FilteredSpaceSaving.deserialize(b).query(k))
+    r.register("cs_query", csQueryUdf)
+    r.register("mg_query", mgQueryUdf)
+    r.register("fss_query", fssQueryUdf)
     r.register("cm_query", cmQueryUdf)
-    r.register("cm_total", (b: Array[Byte]) =>
-      if (b == null) -1L else CountMinSketch.deserialize(b).totalWeight)
-    r.register("hll_count", (b: Array[Byte]) =>
-      if (b == null) -1L else HyperLogLog.deserialize(b).estimateLong())
-    r.register("bloom_contains", (b: Array[Byte], k: String) =>
-      b != null && k != null && BloomFilter.deserialize(b).mightContain(k))
-    r.register("kll_quantile", (b: Array[Byte], q: Double) =>
-      if (b == null) Double.NaN else KllSketch.deserialize(b).quantile(q))
-    r.register("tdigest_quantile", (b: Array[Byte], q: Double) =>
-      if (b == null) Double.NaN else TDigest.deserialize(b).quantile(q))
-    r.register("topk_entries", (b: Array[Byte], k: Int) =>
-      if (b == null) Array.empty[TopKEntry]
-      else TopKSketch.deserialize(b).topK(k).map(e => TopKEntry(e._1, e._2)))
+    r.register("cm_total", cmTotalUdf)
+    r.register("hll_count", hllCountUdf)
+    r.register("bloom_contains", bloomContainsUdf)
+    r.register("kll_quantile", kllQuantileUdf)
+    r.register("tdigest_quantile", tdigestQuantileUdf)
+    r.register("topk_entries", topkEntriesUdf)
   }
 }

@@ -24,7 +24,8 @@ object CurationPipeline {
     val nTok = size(toks).cast("double")
     val score = (least(lit(1.0), nTok / 100.0)
       + size(array_distinct(toks)).cast("double") / nTok
-      // round-7: translate-based alpha test (see DedupClusterQuery)
+      // translate-based alpha test; differs from the regex only on a
+      // trailing line terminator (see DedupClusterQuery)
       + size(filter(toks, t =>
         (length(t) > 0) && (translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz", "") === lit("")))).cast("double") / nTok) / 3.0
     docs

@@ -249,8 +249,12 @@ object DedupClusterQuery {
     val score = (least(lit(1.0), nTok / 100.0)
       + size(array_distinct(toks)).cast("double") / nTok
       // all-ASCII-alpha token test as a codegen translate instead of a
-      // per-token java.util.regex match (round 7; provably equivalent:
-      // non-empty AND stripping the 52 letters empties the string)
+      // per-token java.util.regex match: non-empty AND stripping the 52
+      // letters empties the string. Equal to rlike("^[A-Za-z]+$") except on
+      // a token ending in a line terminator ("abc\n"): Java's `$` also
+      // matches before a trailing terminator, so the regex accepted it and
+      // the translate test rejects it, the end-of-string anchoring the
+      // oracle (RE2) uses
       + size(filter(toks, t =>
         (length(t) > 0) && (translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz", "") === lit("")))).cast("double") / nTok
       ) / 3.0

@@ -143,13 +143,17 @@ object RerouteQueries {
     * the running bottleneck already exceeds the incumbent (or ties it with
     * a longer prefix), with path length bounded by shortest-hops + 4 (the
     * reference's OspfLength + 4 window). Returns the best path, or None if
-    * dst is unreachable within the bound. */
+    * dst is unreachable within the bound. Every `loads` key must name two
+    * nodes in [0, n) (checked); a link is undirected, so list it once, as
+    * (a, b) and (b, a) write the same cell and the later one wins. */
   def findPathBB(src: Int, dst: Int, adj: Map[Int, Seq[Int]],
       loads: collection.Map[(Int, Int), Long], n: Int,
       shortestHops: Int): Option[Seq[Int]] = {
     val sortedAdj = sortedAdjacency(n, adj)
     val loadsArr = new Array[Long](n * n)
     loads.foreach { case ((a, b), l) =>
+      require(a >= 0 && b >= 0 && a < n && b < n,
+        s"load key ($a, $b) names a node outside [0, $n)")
       loadsArr(a * n + b) = l; loadsArr(b * n + a) = l
     }
     findPathBBCore(src, dst, sortedAdj, loadsArr, n, shortestHops)
@@ -283,7 +287,13 @@ object RerouteQueries {
     * family where the branch-and-bound search is real. STREAMING like
     * [[greedySpineRerouteStream]]: flows arrive as a single-pass iterator,
     * each (flow, new path) is reported through `onRoute` as it resolves,
-    * and only the O(links) load table persists across flows. */
+    * and only the O(links) load table persists across flows.
+    *
+    * The returned map is keyed CANONICALLY, (a, b) with a <= b: a seeded
+    * key (b, a) comes back as (a, b). It holds every seeded link (with
+    * its final load, zero included) plus every other link whose final
+    * load is non-zero; a link the run touched that nets back to zero
+    * and was not seeded is absent. */
   def greedyGridRerouteStream(flows: Iterator[(Long, Int, Int, Long)],
       loadsIn: collection.Map[(Int, Int), Long])
       (onRoute: ((Long, Int, Int, Long), Seq[Int]) => Unit)
@@ -310,8 +320,8 @@ object RerouteQueries {
       path.sliding(2).foreach { case Seq(u, v) => add(u, v, t) }
       onRoute(flow, path)
     }
-    // hand back the map contract: canonical (a <= b) keys, non-zero loads
-    // plus any key the caller seeded (zeroed entries included, as before)
+    // hand back the map contract above: canonical keys, every seeded link,
+    // and the non-zero loads
     val loads = collection.mutable.Map.empty[(Int, Int), Long]
     loadsIn.keys.foreach { case (a, b) =>
       loads(linkKey(a, b)) = loadsArr(math.min(a, b) * n + math.max(a, b))

@@ -126,16 +126,24 @@ object SketchQueries {
     * sized so false positives are deterministically zero here (verified);
     * FPP-regime behavior is ScalaTest-covered. */
   def bloomOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val cust = Tables.customer(spark, sfDir)
-    val ord = Tables.orders(spark, sfDir)
-    val members = cust.filter(col("c_custkey") % 3 === 0)
+    val members = Tables.customer(spark, sfDir)
+      .filter(col("c_custkey") % 3 === 0)
       .select(col("c_custkey").cast("string").as("k"))
     val sk = members.agg(bloom_sketch(col("k"), expectedItems = 100000, fpp = 1e-9).as("sk"))
-    val probed = ord.crossJoin(broadcast(sk))
-      .select(col("o_custkey"),
-        bloom_contains(col("sk"), col("o_custkey").cast("string")).as("hit"))
-    val trueMembers = ord.join(members.withColumnRenamed("k", "ck"),
-      col("o_custkey").cast("string") === col("ck"), "left_semi")
+    bloomProbeCounts(Tables.orders(spark, sfDir), sk, members)
+  }
+
+  /** q07's and q112's probe side: every order against the one-row Bloom
+    * frame `sk` (one binary column), and the exact count of orders whose
+    * customer is in `members` (one string key column). The filter rides a
+    * scalar subquery, so every row of a task hands `bloom_contains` the
+    * same array and the decode memo answers by identity; a cross join
+    * would copy the filter into every probe row. */
+  private[graft] def bloomProbeCounts(ord: DataFrame, sk: DataFrame,
+      members: DataFrame): DataFrame = {
+    val key = col("o_custkey").cast("string")
+    val probed = ord.select(bloom_contains(sk.scalar(), key).as("hit"))
+    val trueMembers = ord.join(members.toDF("ck"), key === col("ck"), "left_semi")
     probed.agg(
       count(lit(1)).as("probes"),
       sum(when(col("hit"), 1L).otherwise(0L)).as("bloom_positives"))

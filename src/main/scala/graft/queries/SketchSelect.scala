@@ -1,6 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.agg.SketchFunctions._
 import graft.sketch.KllSketch
@@ -54,17 +56,42 @@ object SketchSelect {
     * exact plan is the MERGE-TASK load — LocalLimit keeps ≤ k rows per
     * upstream task, so the single TakeOrdered merge sees ≤ P·k narrow rows.
     * The constant floor hard-codes the documented worst case (P = 2000,
-    * k = 4096 → 8M rows); on a narrower execution (P = 32 local cores:
-    * P·k at k = 5620 is 180K rows, trivia) the same 8M-row budget admits a
+    * k = 4096 → 8M rows); on a narrower execution (P = 32 tasks: P·k at
+    * k = 5620 is 180K rows, trivia) the same 8M-row budget admits a
     * proportionally larger k, while at P = 2000 this arm reduces exactly to
-    * the old floor. P = defaultParallelism — the scheduler's own width, no
-    * plan materialization, no action (measured: q63's top-θ at sf0.1,
-    * k = 5620 of n = 562K, paid ~1.5 s of sketch actions the exact funnel
-    * does not). */
+    * the old floor. P is the frame's own task count, [[upstreamTasks]], not
+    * the core count: a scan of thousands of splits feeds the merge
+    * thousands of k-row heaps on any number of cores (measured: q63's
+    * top-θ at sf0.1, k = 5620 of n = 562K, paid ~1.5 s of sketch actions
+    * the exact funnel does not). */
   private val FunnelMaxRows = ExactLimitMinFloor * 2000L
 
   def exactFunnelMaxK(parallelism: Int): Long =
     FunnelMaxRows / math.max(1L, parallelism.toLong)
+
+  /** How many tasks feed the exact plan's LocalLimit, read off `df`'s
+    * physical plan without running it: the partition count the plan
+    * declares (a range, a repartition, a shuffle) and, for file scans,
+    * which declare none, their split estimate (bytes over
+    * `spark.sql.files.maxPartitionBytes`); never below the session's
+    * default parallelism or shuffle width. An upper bound once AQE
+    * coalesces, which only routes a borderline k to the sketch path. */
+  private[queries] def upstreamTasks(df: DataFrame): Int = {
+    val qe = df.queryExecution
+    val conf = qe.sparkSession.sessionState.conf
+    val plan = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val scanSplits = plan.collectLeaves().collect {
+      case s: FileSourceScanExec =>
+        s.relation.sizeInBytes / math.max(1L, conf.filesMaxPartitionBytes) + 1
+    }.sum
+    Seq(qe.sparkSession.sparkContext.defaultParallelism.toLong,
+      conf.numShufflePartitions.toLong,
+      plan.outputPartitioning.numPartitions.toLong, scanSplits)
+      .max.min(Int.MaxValue.toLong).toInt
+  }
 
   /** Exact top-k rows of `df` by (`measureCol` desc, `keyCol` asc).
     * `knownN` skips the row count when the caller already has it. */
@@ -82,12 +109,11 @@ object SketchSelect {
     if (k <= ExactLimitMinFloor) exact
     else {
       val n = if (knownN >= 0) knownN else df.count()
-      val funnelK =
-        exactFunnelMaxK(dfIn.sparkSession.sparkContext.defaultParallelism)
       // the exact path must also clear limit()'s Int argument: at n beyond
       // ~4.4e12, n/1000 passes 2^31 and k.toInt would flip negative — route
       // those k to the sketch path, whose arithmetic is Long throughout
-      if ((k <= exactLimitMaxK(n) || k <= funnelK) && k <= Int.MaxValue.toLong)
+      if (k <= Int.MaxValue.toLong &&
+          (k <= exactLimitMaxK(n) || k <= exactFunnelMaxK(upstreamTasks(df))))
         exact
       else sketchTopK(df, measureCol, keyCol, k, knownN = n)
     }

@@ -540,7 +540,8 @@ object TextQueries {
     val nTok = size(toks).cast("double")
     val lengthNorm = least(lit(1.0), nTok / 100.0)
     val diversity = size(array_distinct(toks)).cast("double") / nTok
-    // round-7: translate-based alpha test (see DedupClusterQuery)
+    // translate-based alpha test; differs from the regex only on a
+    // trailing line terminator (see DedupClusterQuery)
     val alphaRatio = size(filter(toks, t =>
       (length(t) > 0) && (translate(t, "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz", "") === lit("")))).cast("double") / nTok
     val score = (lengthNorm + diversity + alphaRatio) / 3.0

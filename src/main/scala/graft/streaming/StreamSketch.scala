@@ -201,19 +201,8 @@ object StreamSketch {
         .start()
     }
     lastBloomRunBatches = SliceReplay.runToCompletion(q).batches
-    val sk = cap.result(spark)
-    val ord = Tables.orders(spark, sfDir)
-    val probed = ord.crossJoin(broadcast(sk))
-      .select(col("o_custkey"),
-        bloom_contains(col("sk"), col("o_custkey").cast("string")).as("hit"))
-    val trueMembers = ord.join(
-      spark.read.schema(schema).parquet(s"$root/in")
-        .select(col("k").as("ck")).distinct(),
-      col("o_custkey").cast("string") === col("ck"), "left_semi")
-    probed.agg(
-      count(lit(1)).as("probes"),
-      sum(when(col("hit"), 1L).otherwise(0L)).as("bloom_positives"))
-      .crossJoin(trueMembers.agg(count(lit(1)).as("true_positives")))
-      .select(col("probes"), col("bloom_positives"), col("true_positives"))
+    graft.queries.SketchQueries.bloomProbeCounts(Tables.orders(spark, sfDir),
+      cap.result(spark).select("sk"),
+      spark.read.schema(schema).parquet(s"$root/in").select(col("k")).distinct())
   }
 }

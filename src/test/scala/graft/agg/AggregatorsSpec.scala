@@ -155,4 +155,70 @@ class AggregatorsSpec extends SparkTestBase {
     assert(probe(evB, "alpha") === 0L) // same dims, same totalWeight, sparse
     assert(probe(evB, "beta") === 10000L)
   }
+
+  test("probe memo: Bloom blobs equal but for one late word, alternated on one thread") {
+    // two filters with the same length and header whose bytes differ only
+    // in the word holding `key`'s single bit, placed in the last eighth
+    val m = 64L * 1024
+    val key = Iterator.from(0).map(i => s"late$i").find { k =>
+      val f = BloomFilter(m, 1); f.add(k)
+      f.words.indexWhere(_ != 0L) >= f.words.length * 7 / 8
+    }.get
+    val withKey = BloomFilter(m, 1); withKey.add(key)
+    val a = withKey.serialize()
+    val b = a.clone()
+    val word = withKey.words.indexWhere(_ != 0L)
+    java.util.Arrays.fill(b, a.length - 8 * (withKey.words.length - word),
+      a.length - 8 * (withKey.words.length - word - 1), 0.toByte)
+    assert(a.length === b.length && !java.util.Arrays.equals(a, b))
+    assert(BloomFilter.deserialize(a).mightContain(key))
+    assert(!BloomFilter.deserialize(b).mightContain(key))
+    val even = (0 until 200).map(_ % 2 == 0)
+    // identity path: two literals, each row handed one of the same two arrays
+    val byRef = spark.range(0, 200, 1, 1)
+      .select(bloom_contains(when(col("id") % 2 === 0, lit(a)).otherwise(lit(b)),
+        lit(key)).as("hit"))
+      .as[Boolean].collect().toSeq
+    assert(byRef === even)
+    // content path: every row carries its own copy, through the SQL name
+    SketchFunctions.register(spark)
+    Seq((a, b)).toDF("a", "b").crossJoin(spark.range(0, 200, 1, 1))
+      .createOrReplaceTempView("memo_late_word_v")
+    val byCopy = spark.sql(s"""SELECT bloom_contains(IF(id % 2 = 0, a, b), '$key')
+      | AS hit FROM memo_late_word_v ORDER BY id""".stripMargin)
+      .as[Boolean].collect().toSeq
+    assert(byCopy === even)
+  }
+
+  test("SQL probe names answer like the Column API") {
+    SketchFunctions.register(spark)
+    val df = streamDf(8)
+    val sks = df.agg(
+      cm_sketch(col("k"), col("w")).as("cm"),
+      cm_topk(col("k"), col("w"), capacity = 1024).as("topk"),
+      cs_sketch(col("k"), col("w")).as("cs"),
+      mg_sketch(col("k"), col("w"), capacity = 1024).as("mg"),
+      fss_sketch(col("k"), col("w"), numEntries = 1024).as("fss"),
+      hll_sketch(col("k")).as("hll"),
+      bloom_sketch(col("k"), expectedItems = 1L << 20).as("bloom"),
+      kll_sketch(col("w").cast("double")).as("kll"),
+      tdigest_sketch(col("w").cast("double")).as("td"))
+    val probes = df.select(col("k")).distinct().limit(50).crossJoin(broadcast(sks))
+    probes.createOrReplaceTempView("sql_probe_v")
+    val viaApi = probes.select(col("k"),
+      cm_query(col("cm"), col("k")), cm_total(col("cm")),
+      to_json(topk_entries(col("topk"), 5)),
+      cs_query(col("cs"), col("k")), mg_query(col("mg"), col("k")),
+      fss_query(col("fss"), col("k")), hll_count(col("hll")),
+      bloom_contains(col("bloom"), col("k")),
+      kll_quantile(col("kll"), lit(0.5)), tdigest_quantile(col("td"), lit(0.9)))
+      .orderBy("k").collect().map(_.toSeq)
+    val viaSql = spark.sql("""SELECT k, cm_query(cm, k), cm_total(cm),
+      | to_json(topk_entries(topk, 5)), cs_query(cs, k), mg_query(mg, k),
+      | fss_query(fss, k), hll_count(hll), bloom_contains(bloom, k),
+      | kll_quantile(kll, 0.5D), tdigest_quantile(td, 0.9D)
+      | FROM sql_probe_v ORDER BY k""".stripMargin).collect().map(_.toSeq)
+    assert(viaSql.length === 50)
+    assert(viaSql.toSeq === viaApi.toSeq)
+  }
 }

@@ -379,6 +379,32 @@ class PlanGuardSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  /** The scalar subqueries that feed a `bloom_contains` probe directly,
+    * one per probe call in `df`'s executed plan. */
+  private def bloomProbeSubqueries(df: DataFrame)
+      : Seq[org.apache.spark.sql.execution.ScalarSubquery] = {
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    Walk.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
+      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
+          if u.dataType == org.apache.spark.sql.types.BooleanType => u.children.head
+    })).collect { case s: org.apache.spark.sql.execution.ScalarSubquery => s }
+  }
+
+  test("q07/q112 probe the Bloom filter as a scalar subquery, never cross-joined per row") {
+    // q07: the subquery is the Bloom build itself
+    val q07 = bloomProbeSubqueries(
+      graft.SparkEntry.queries("q07_bloom_orders")(spark, sf("sf0.001")))
+    assert(q07.size === 1, "q07's bloom_contains must read a scalar subquery")
+    assert(q07.head.plan.treeString.contains("bloomaggregator("), q07.head.plan.treeString)
+    spark.catalog.clearCache()
+    // q112: the subquery reads the stream's captured one-row filter
+    val q112 = bloomProbeSubqueries(
+      graft.SparkEntry.queries("q112_stream_bloom")(spark, sf("sf0.001")))
+    assert(q112.size === 1, "q112's bloom_contains must read a scalar subquery")
+    assert(q112.head.plan.output.map(_.name) === Seq("sk"))
+    spark.catalog.clearCache()
+  }
+
   test("q103 star join broadcasts the segment dimension and funnels top-10 through TakeOrdered") {
     val p = plan("q103_shipping_priority")
     assert(p.contains("BroadcastHashJoin"), p)

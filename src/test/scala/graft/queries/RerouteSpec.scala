@@ -84,6 +84,14 @@ class RerouteSpec extends SparkTestBase {
       math.min(d2(0)(2), 10)) === None)
   }
 
+  test("branch-and-bound rejects a load key naming a node outside [0, n)") {
+    val adj = Map(0 -> Seq(1), 1 -> Seq(0, 2), 2 -> Seq(1))
+    val e = intercept[IllegalArgumentException] {
+      RerouteQueries.findPathBB(0, 2, adj, Map((1, 3) -> 5L), 3, 2)
+    }
+    assert(e.getMessage.contains("(1, 3)"))
+  }
+
   test("property: greedy spine equals an independent slow replay on random flow sets") {
     // 50 seeded-random scenarios: k aggrs, random flows, loads built by
     // assignment (as the distributed aggregation would); the kernel must

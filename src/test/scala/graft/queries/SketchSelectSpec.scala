@@ -77,6 +77,29 @@ class SketchSelectSpec extends SparkTestBase {
     perKey.unpersist()
   }
 
+  test("exact funnel sizes from the frame's task count, not the core count") {
+    // 400 tasks, well past defaultParallelism and the shuffle width: k rows
+    // from each of them would reach the one TakeOrdered merge
+    val wide = 400
+    val df = spark.range(0, 30000, 1, wide)
+      .select(concat(lit("key"), col("id")).as("k"), (col("id") % 977).as("c"))
+    assert(wide > spark.sparkContext.defaultParallelism)
+    assert(SketchSelect.upstreamTasks(df) >= wide)
+    // k is above the n/1000 cap; a core-count funnel would admit it to the
+    // exact plan, but 400 tasks × k rows passes the merge budget
+    val k = 25000L
+    assert(k > SketchSelect.exactLimitMaxK(30000L))
+    assert(k <= SketchSelect.exactFunnelMaxK(spark.sparkContext.defaultParallelism))
+    assert(k > SketchSelect.exactFunnelMaxK(wide))
+    val got = SketchSelect.topK(df, "c", "k", k)
+    assert(got.queryExecution.optimizedPlan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }.nonEmpty, "expected the sketch path (strict ∪ ties)")
+    val want = df.orderBy(desc("c"), asc("k")).limit(k.toInt)
+      .select("k").as[String].collect().sorted
+    assert(got.select("k").as[String].collect().sorted.toSeq === want.toSeq)
+  }
+
   test("selected plan has no full-width global sort of the input") {
     val perKey = (1 to 2000).map(i => (s"key$i", (i % 37).toLong))
       .toDF("k", "true_count").cache()

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.queries.SketchQueries
+import graft.agg.SketchFunctions._
+import graft.queries.{SketchQueries, Tables}
 
 /**
  * q78 contract: the streamed heavy-hitter build equals the batch q02 build
@@ -85,5 +87,33 @@ class StreamSketchSpec extends SparkTestBase {
     val five = StreamSketch.streamBloomOrders(spark, sf("sf0.001"), slices = 5)
       .collect().map(_.toString).toSeq
     assert(five === batchBloom)
+  }
+
+  /** q07's probe in the shape the scalar subquery replaced: the one-row
+    * filter cross-joined into every order row. */
+  private def crossJoinBloomOrders(dir: String) = {
+    val members = Tables.customer(spark, dir).filter(col("c_custkey") % 3 === 0)
+      .select(col("c_custkey").cast("string").as("k"))
+    val sk = members.agg(bloom_sketch(col("k"), expectedItems = 100000, fpp = 1e-9).as("sk"))
+    val ord = Tables.orders(spark, dir)
+    val probed = ord.crossJoin(broadcast(sk))
+      .select(bloom_contains(col("sk"), col("o_custkey").cast("string")).as("hit"))
+    val trueMembers = ord.join(members.withColumnRenamed("k", "ck"),
+      col("o_custkey").cast("string") === col("ck"), "left_semi")
+    probed.agg(
+      count(lit(1)).as("probes"),
+      sum(when(col("hit"), 1L).otherwise(0L)).as("bloom_positives"))
+      .crossJoin(trueMembers.agg(count(lit(1)).as("true_positives")))
+      .collect().map(_.toString).toSeq
+  }
+
+  test("q07/q112: the scalar-subquery probe returns the cross-join shape's rows") {
+    for (dir <- Seq("sf0.001", "sf0.01")) {
+      val want = crossJoinBloomOrders(sf(dir))
+      assert(SketchQueries.bloomOrders(spark, sf(dir))
+        .collect().map(_.toString).toSeq === want, dir)
+      assert(StreamSketch.streamBloomOrders(spark, sf(dir))
+        .collect().map(_.toString).toSeq === want, dir)
+    }
   }
 }
