@@ -1,31 +1,40 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Encoder, Encoders, GraftBridge, SparkSession, SparkSessionExtensions, functions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.agg.{CmQuerySketch, CmTotalSketch, HllCountSketch, KllQuantileSketch, NativeCountMinAgg, NativeHllAgg, NativeTopKAgg, TopKEntriesSketch}
-import graft.sketch.CountMinSketch
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.types.Decimal
+import graft.agg._
+import graft.agg.SketchAggregators._
+import graft.sketch._
 
 /**
- * SparkSessionExtensions entry point — the idiomatic spark-submit wiring
- * for the native sketch surface:
+ * The sketch library's SQL function registry: [[GraftExtensions.functionDescriptions]]
+ * is the one table of SQL names, and both ways into a session read it.
+ * The idiomatic spark-submit wiring injects it at session build:
  *
  * {{{
  * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
  * }}}
  *
- * injects the SQL functions
- *  - `cm_sketch_fast(key, weight[, eps[, delta[, seed]]])` → BINARY
- *    (the [[graft.agg.NativeCountMinAgg]] build aggregate; eps/delta/seed
- *    as foldable numeric literals),
- *  - `topk_sketch_fast(key, weight[, capacity[, eps[, delta[, seed]]]])` →
- *    BINARY (the [[graft.agg.NativeTopKAgg]] heavy-hitter build),
- *  - `cm_query_sketch(sketch, key)` → BIGINT point estimate,
- *  - `cm_total_sketch(sketch)` → BIGINT total weight N,
- *  - `topk_entries_sketch(sketch, k)` → ARRAY<STRUCT<key, est>> listing,
- * so pure-SQL users (thriftserver, SQL files) get the sketch library with
- * no Scala imports. [[GraftExtensions.install]] registers the same
- * builders into an already-running session.
+ * and [[GraftExtensions.install]] registers the same names into an
+ * already-running session. The table holds
+ *  - the udaf builds and merges under their Column-API names with library
+ *    defaults (`cm_sketch(key, weight)`, `hll_sketch(key)`,
+ *    `kll_merge(sketch)`, …),
+ *  - the native builds `cm_sketch_fast(key, weight[, eps[, delta[, seed]]])`,
+ *    `topk_sketch_fast(key, weight[, capacity[, eps[, delta[, seed]]]])` and
+ *    `hll_sketch_fast(key[, p[, seed]])`, whose trailing arguments are
+ *    foldable numeric literals,
+ *  - every probe (`cm_query`, `bloom_contains`, `topk_entries`, …); the five
+ *    native probes also answer to a `*_sketch` twin name
+ *    (`cm_query_sketch`, …), built by the same builder,
+ *  - the fused array and string kernels `cosine_micro`, `dot_range`,
+ *    `intersect_count_sorted` and `cdc_cuts`,
+ * so pure-SQL users (thriftserver, SQL files) get the library with no
+ * Scala imports.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -34,110 +43,135 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def foldNum(e: Expression, name: String): Double = {
-    require(e.foldable, s"cm_sketch_fast: $name must be a literal")
+  type Builder = Seq[Expression] => Expression
+
+  /** The value of literal argument `name` of SQL function `fn`. */
+  private def literal(fn: String, e: Expression, name: String): java.lang.Number = {
+    require(e.foldable, s"$fn: $name must be a literal")
     e.eval() match {
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case n: java.lang.Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"cm_sketch_fast: $name must be numeric, got $other")
+      case d: Decimal => d.toJavaBigDecimal
+      case n: java.lang.Number => n
+      case other => throw new IllegalArgumentException(s"$fn: $name must be numeric, got $other")
     }
   }
 
-  private def buildCmSketchFast(exprs: Seq[Expression]): Expression = {
-    require(exprs.length >= 2 && exprs.length <= 5,
-      "usage: cm_sketch_fast(key, weight[, eps[, delta[, seed]]])")
-    val eps = if (exprs.length > 2) foldNum(exprs(2), "eps") else 1e-4
-    val delta = if (exprs.length > 3) foldNum(exprs(3), "delta") else 0.01
-    val seed = if (exprs.length > 4) foldNum(exprs(4), "seed").toLong
-      else CountMinSketch.DefaultSeed
-    NativeCountMinAgg(exprs.head, exprs(1), eps, delta, seed)
+  /** Literal argument `i` of `fn`, if the call passed one. */
+  private def arg(fn: String, args: Seq[Expression], i: Int, name: String): Option[java.lang.Number] =
+    args.lift(i).map(literal(fn, _, name))
+
+  /** `cm_sketch_fast`; literal arguments override these defaults. */
+  def cmSketchFast(eps: Double = 1e-4, delta: Double = 0.01,
+      seed: Long = CountMinSketch.DefaultSeed): Builder = args => {
+    val fn = "cm_sketch_fast"
+    NativeSketchAgg(CmKernel(arg(fn, args, 2, "eps").fold(eps)(_.doubleValue),
+      arg(fn, args, 3, "delta").fold(delta)(_.doubleValue),
+      arg(fn, args, 4, "seed").fold(seed)(_.longValue)), args.take(2))
   }
 
-  /** (identifier, info, builder) triples — shared by the extensions path
-    * (injectFunction at session build) and [[install]] (live session). */
-  val functionDescriptions
-      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("cm_sketch_fast"),
-      new ExpressionInfo(classOf[NativeCountMinAgg].getName, "cm_sketch_fast"),
-      buildCmSketchFast _),
-    (FunctionIdentifier("cm_query_sketch"),
-      new ExpressionInfo(classOf[CmQuerySketch].getName, "cm_query_sketch"),
-      exprs => {
-        require(exprs.length == 2, "usage: cm_query_sketch(sketch, key)")
-        CmQuerySketch(exprs.head, exprs(1))
-      }),
-    (FunctionIdentifier("cm_total_sketch"),
-      new ExpressionInfo(classOf[CmTotalSketch].getName, "cm_total_sketch"),
-      exprs => {
-        require(exprs.length == 1, "usage: cm_total_sketch(sketch)")
-        CmTotalSketch(exprs.head)
-      }),
-    (FunctionIdentifier("hll_count_sketch"),
-      new ExpressionInfo(classOf[HllCountSketch].getName, "hll_count_sketch"),
-      exprs => {
-        require(exprs.length == 1, "usage: hll_count_sketch(sketch)")
-        HllCountSketch(exprs.head)
-      }),
-    (FunctionIdentifier("kll_quantile_sketch"),
-      new ExpressionInfo(classOf[KllQuantileSketch].getName, "kll_quantile_sketch"),
-      exprs => {
-        require(exprs.length == 2, "usage: kll_quantile_sketch(sketch, q)")
-        KllQuantileSketch(exprs.head, exprs(1))
-      }),
-    (FunctionIdentifier("topk_sketch_fast"),
-      new ExpressionInfo(classOf[NativeTopKAgg].getName, "topk_sketch_fast"),
-      exprs => {
-        require(exprs.length >= 2 && exprs.length <= 6,
-          "usage: topk_sketch_fast(key, weight[, capacity[, eps[, delta[, seed]]]])")
-        val capacity = if (exprs.length > 2)
-          foldNum(exprs(2), "capacity").toInt else 4096
-        val eps = if (exprs.length > 3) foldNum(exprs(3), "eps") else 1e-4
-        val delta = if (exprs.length > 4) foldNum(exprs(4), "delta") else 0.01
-        val seed = if (exprs.length > 5) foldNum(exprs(5), "seed").toLong
-          else CountMinSketch.DefaultSeed
-        NativeTopKAgg(exprs.head, exprs(1), capacity, eps, delta, seed)
-      }),
-    (FunctionIdentifier("hll_sketch_fast"),
-      new ExpressionInfo(classOf[NativeHllAgg].getName, "hll_sketch_fast"),
-      exprs => {
-        require(exprs.length >= 1 && exprs.length <= 3,
-          "usage: hll_sketch_fast(key[, p[, seed]])")
-        val p = if (exprs.length > 1) foldNum(exprs(1), "p").toInt else 14
-        val seed = if (exprs.length > 2) foldNum(exprs(2), "seed").toLong
-          else graft.sketch.HyperLogLog.DefaultSeed
-        NativeHllAgg(exprs.head, p, seed)
-      }),
-    (FunctionIdentifier("topk_entries_sketch"),
-      new ExpressionInfo(classOf[TopKEntriesSketch].getName, "topk_entries_sketch"),
-      exprs => {
-        require(exprs.length == 2, "usage: topk_entries_sketch(sketch, k)")
-        TopKEntriesSketch(exprs.head, exprs(1))
-      }),
-    (FunctionIdentifier("cosine_micro"),
-      new ExpressionInfo(classOf[graft.agg.CosineMicro].getName, "cosine_micro"),
-      graft.agg.VectorExpressions.cosineMicroBuilder),
-    (FunctionIdentifier("dot_range"),
-      new ExpressionInfo(classOf[graft.agg.DotRange].getName, "dot_range"),
-      graft.agg.VectorExpressions.dotRangeBuilder),
-    (FunctionIdentifier("intersect_count_sorted"),
-      new ExpressionInfo(classOf[graft.agg.IntersectCountSorted].getName,
-        "intersect_count_sorted"),
-      graft.agg.VectorExpressions.intersectCountBuilder),
-    (FunctionIdentifier("cdc_cuts"),
-      new ExpressionInfo(classOf[graft.agg.CdcCuts].getName, "cdc_cuts"),
-      graft.agg.StringExpressions.cdcCutsBuilder))
-
-  /** Register the same functions into an already-running session, plus the
-    * full udaf build surface via [[graft.agg.SketchFunctions.register]]
-    * (`hll_sketch`, `kll_sketch`, `bloom_sketch`, … — Aggregator
-    * registration needs a live UDFRegistration, so those are install-only;
-    * the CM build is available on both paths as `cm_sketch_fast`). */
-  def install(spark: SparkSession): Unit = {
-    functionDescriptions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
-    graft.agg.SketchFunctions.register(spark)
+  /** `topk_sketch_fast`; literal arguments override these defaults. */
+  def topkSketchFast(capacity: Int = 4096, eps: Double = 1e-4, delta: Double = 0.01,
+      seed: Long = CountMinSketch.DefaultSeed): Builder = args => {
+    val fn = "topk_sketch_fast"
+    NativeSketchAgg(TopKKernel(arg(fn, args, 2, "capacity").fold(capacity)(_.intValue),
+      arg(fn, args, 3, "eps").fold(eps)(_.doubleValue),
+      arg(fn, args, 4, "delta").fold(delta)(_.doubleValue),
+      arg(fn, args, 5, "seed").fold(seed)(_.longValue)), args.take(2))
   }
+
+  /** `hll_sketch_fast`; literal arguments override these defaults. */
+  def hllSketchFast(p: Int = 14, seed: Long = HyperLogLog.DefaultSeed): Builder = args => {
+    val fn = "hll_sketch_fast"
+    NativeSketchAgg(HllKernel(arg(fn, args, 1, "p").fold(p)(_.intValue),
+      arg(fn, args, 2, "seed").fold(seed)(_.longValue)), args.take(1))
+  }
+
+  private type Description = (FunctionIdentifier, ExpressionInfo, Builder)
+
+  /** One table row: `build` behind an arity check that prints `usage`. */
+  private def fn(name: String, cls: Class[_], usage: String, arity: Range)(build: Builder)
+      : Description =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), args => {
+      require(arity.contains(args.length), s"usage: $name$usage")
+      build(args)
+    })
+
+  /** A native probe under its Column-API name and its `*_sketch` twin: one
+    * builder, which tags the expression with the name it was called by. */
+  private def probe(name: String, cls: Class[_], usage: String, arity: Int)(build: Builder)
+      : Seq[Description] =
+    Seq(name, s"${name}_sketch").map(n => fn(n, cls, usage, arity to arity) { args =>
+      val e = build(args)
+      e.setTagValue(FunctionRegistry.FUNC_ALIAS, n)
+      e
+    })
+
+  /** A `functions.udf` probe: the same value the Column API applies. */
+  private def udf(name: String, f: UserDefinedFunction, usage: String, arity: Int): Description =
+    fn(name, f.getClass, usage, arity to arity)(GraftBridge.udf(f.withName(name), _))
+
+  /** A udaf build or merge with library defaults. */
+  private def udaf[IN](name: String, agg: => Aggregator[IN, _, Array[Byte]], in: Encoder[IN],
+      usage: String, arity: Int): Description =
+    fn(name, agg.getClass, usage, arity to arity)(
+      GraftBridge.udaf(functions.udaf(agg, in).withName(name), _))
+
+  private val keyWeight = Encoders.product[(String, Long)]
+
+  /** Every SQL name of the library, with its builder. */
+  val functionDescriptions: Seq[Description] = Seq(
+    udaf("cm_sketch", new CmAggregator(1e-4, 0.01, CountMinSketch.DefaultSeed), keyWeight,
+      "(key, weight)", 2),
+    udaf("cm_merge", new CmMergeAggregator, Encoders.BINARY, "(sketch)", 1),
+    udaf("cm_topk", new TopKAggregator(1024, 1e-4, 0.01, CountMinSketch.DefaultSeed), keyWeight,
+      "(key, weight)", 2),
+    udaf("hll_sketch", new HllAggregator(14, HyperLogLog.DefaultSeed), Encoders.STRING,
+      "(key)", 1),
+    udaf("hll_merge", new HllMergeAggregator, Encoders.BINARY, "(sketch)", 1),
+    udaf("bloom_sketch", new BloomAggregator(1 << 20, 0.01, BloomFilter.DefaultSeed),
+      Encoders.STRING, "(key)", 1),
+    udaf("kll_sketch", new KllAggregator(200, KllSketch.DefaultSeed), Encoders.DOUBLE, "(x)", 1),
+    udaf("kll_merge", new KllMergeAggregator, Encoders.BINARY, "(sketch)", 1),
+    udaf("tdigest_sketch", new TDigestAggregator(100.0), Encoders.DOUBLE, "(x)", 1),
+    udaf("cs_sketch", new CsAggregator(5, 4096, CountSketch.DefaultSeed), keyWeight,
+      "(key, weight)", 2),
+    udaf("mg_sketch", new MgAggregator(1024), keyWeight, "(key, weight)", 2),
+    udaf("fss_sketch", new FssAggregator(1024, 4096, FilteredSpaceSaving.DefaultSeed),
+      keyWeight, "(key, weight)", 2),
+    fn("cm_sketch_fast", classOf[NativeSketchAgg[_]],
+      "(key, weight[, eps[, delta[, seed]]])", 2 to 5)(cmSketchFast()),
+    fn("topk_sketch_fast", classOf[NativeSketchAgg[_]],
+      "(key, weight[, capacity[, eps[, delta[, seed]]]])", 2 to 6)(topkSketchFast()),
+    fn("hll_sketch_fast", classOf[NativeSketchAgg[_]], "(key[, p[, seed]])", 1 to 3)(
+      hllSketchFast()),
+    udf("cs_query", SketchFunctions.csQuery, "(sketch, key)", 2),
+    udf("mg_query", SketchFunctions.mgQuery, "(sketch, key)", 2),
+    udf("fss_query", SketchFunctions.fssQuery, "(sketch, key)", 2),
+    udf("bloom_contains", SketchFunctions.bloomContains, "(sketch, key)", 2),
+    udf("tdigest_quantile", SketchFunctions.tdigestQuantile, "(sketch, q)", 2),
+    fn("cosine_micro", classOf[CosineMicro], "(vec_a, vec_b)", 2 to 2)(
+      a => CosineMicro(a(0), a(1))),
+    fn("dot_range", classOf[DotRange], "(vec_a, vec_b, start, len) with literal start/len",
+      4 to 4)(a => DotRange(a(0), a(1), literal("dot_range", a(2), "start").intValue,
+        literal("dot_range", a(3), "len").intValue)),
+    fn("intersect_count_sorted", classOf[IntersectCountSorted], "(arr_a, arr_b)", 2 to 2)(
+      a => IntersectCountSorted(a(0), a(1))),
+    fn("cdc_cuts", classOf[CdcCuts], "(text, window, div) with literal window/div", 3 to 3)(
+      a => CdcCuts(a(0), literal("cdc_cuts", a(1), "window").intValue,
+        literal("cdc_cuts", a(2), "div").intValue))
+  ) ++
+    probe("cm_query", classOf[CmQuerySketch], "(sketch, key)", 2)(a => CmQuerySketch(a(0), a(1))) ++
+    probe("cm_total", classOf[CmTotalSketch], "(sketch)", 1)(a => CmTotalSketch(a(0))) ++
+    probe("hll_count", classOf[HllCountSketch], "(sketch)", 1)(a => HllCountSketch(a(0))) ++
+    probe("kll_quantile", classOf[KllQuantileSketch], "(sketch, q)", 2)(
+      a => KllQuantileSketch(a(0), a(1))) ++
+    probe("topk_entries", classOf[TopKEntriesSketch], "(sketch, k)", 2)(
+      a => TopKEntriesSketch(a(0), a(1)))
+
+  /** Registers one builder under `name` in a live session. */
+  def register(spark: SparkSession, name: String, builder: Builder): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Registers every name of [[functionDescriptions]] into a live session. */
+  def install(spark: SparkSession): Unit =
+    functionDescriptions.foreach { case (id, _, builder) => register(spark, id.funcName, builder) }
 }

@@ -1,13 +1,16 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoders}
+import org.apache.spark.sql.GraftBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions
 import graft.sketch._
 
 /**
- * User-facing surface of the sketch library: `Column`-returning builders
- * (usable directly in `df.agg(...)`) plus SQL registration under stable
- * names. Scalar query functions decode the fixed binary layout
+ * User-facing surface of the sketch library: `Column`-returning builders,
+ * usable directly in `df.agg(...)`. Their SQL names are registered by
+ * `graft.GraftExtensions`. Scalar query functions decode the fixed binary layout
  * ([[graft.sketch.SketchIO]]), mirroring the reference's split between
  * sketch build (update loop) and the point-query service that answers key
  * batches against finished sketch state
@@ -166,45 +169,37 @@ object SketchFunctions {
 
   // ---- scalar query functions over serialized sketches
 
-  // The probe bodies, each defined once: the Column builders below and the
-  // SQL names in [[register]] wrap the same function, so both surfaces
-  // decode through the kernel's memo.
+  // The UDF probes, each defined once: the Column builders below and their
+  // SQL names in `graft.GraftExtensions` apply the same value, so both
+  // surfaces decode through the kernel's memo. cm_query, cm_total,
+  // hll_count, kll_quantile and topk_entries are native expressions
+  // ([[SketchExpressions]]) instead.
 
-  /** Point-frequency estimate of `key` from a serialized CM sketch. */
-  val cmQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
-    if (bytes == null || key == null) -1L
-    else cmMemo.get(bytes, CountMinSketch.deserialize).query(key)
-  private val cmTotalUdf: Array[Byte] => Long = bytes =>
-    if (bytes == null) -1L
-    else cmMemo.get(bytes, CountMinSketch.deserialize).totalWeight
-  private val topkEntriesUdf: (Array[Byte], Int) => Array[TopKEntry] = (bytes, k) =>
-    if (bytes == null) Array.empty[TopKEntry]
-    else topkMemo.get(bytes, TopKSketch.deserialize).topK(k)
-      .map(e => TopKEntry(e._1, e._2))
-  private val csQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
-    if (bytes == null || key == null) -1L
-    else csMemo.get(bytes, CountSketch.deserialize).query(key)
-  private val mgQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
-    if (bytes == null || key == null) -1L
-    else mgMemo.get(bytes, MisraGries.deserialize).query(key)
-  private val fssQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
-    if (bytes == null || key == null) -1L
-    else fssMemo.get(bytes, FilteredSpaceSaving.deserialize).query(key)
-  private val hllCountUdf: Array[Byte] => Long = bytes =>
-    if (bytes == null) -1L
-    else hllMemo.get(bytes, HyperLogLog.deserialize).estimateLong()
-  private val bloomContainsUdf: (Array[Byte], String) => Boolean = (bytes, key) =>
-    bytes != null && key != null &&
-      bloomMemo.get(bytes, BloomFilter.deserialize).mightContain(key)
-  private val kllQuantileUdf: (Array[Byte], Double) => Double = (bytes, q) =>
-    if (bytes == null) Double.NaN
-    else kllMemo.get(bytes, KllSketch.deserialize).quantile(q)
-  private val tdigestQuantileUdf: (Array[Byte], Double) => Double = (bytes, q) =>
-    if (bytes == null) Double.NaN
-    else tdMemo.get(bytes, TDigest.deserialize).quantile(q)
+  private[graft] val csQuery: UserDefinedFunction =
+    functions.udf((bytes: Array[Byte], key: String) =>
+      if (bytes == null || key == null) -1L
+      else csMemo.get(bytes, CountSketch.deserialize).query(key))
+  private[graft] val mgQuery: UserDefinedFunction =
+    functions.udf((bytes: Array[Byte], key: String) =>
+      if (bytes == null || key == null) -1L
+      else mgMemo.get(bytes, MisraGries.deserialize).query(key))
+  private[graft] val fssQuery: UserDefinedFunction =
+    functions.udf((bytes: Array[Byte], key: String) =>
+      if (bytes == null || key == null) -1L
+      else fssMemo.get(bytes, FilteredSpaceSaving.deserialize).query(key))
+  private[graft] val bloomContains: UserDefinedFunction =
+    functions.udf((bytes: Array[Byte], key: String) =>
+      bytes != null && key != null &&
+        bloomMemo.get(bytes, BloomFilter.deserialize).mightContain(key))
+  private[graft] val tdigestQuantile: UserDefinedFunction =
+    functions.udf((bytes: Array[Byte], q: Double) =>
+      if (bytes == null) Double.NaN
+      else tdMemo.get(bytes, TDigest.deserialize).quantile(q))
 
+  /** Point-frequency estimate of `key` from a serialized CM sketch; −1 for
+    * a null sketch or key. */
   def cm_query(sketch: Column, key: Column): Column =
-    functions.udf(cmQueryUdf).apply(sketch, key)
+    column(CmQuerySketch(expression(sketch), expression(key)))
 
   /** Batched point-frequency probe: decode the sketch ONCE, answer every
     * key in the array — the preferred probe shape when the key set fits a
@@ -260,19 +255,19 @@ object SketchFunctions {
       sk.totalWeight)
   }
 
-  /** Total stream weight N recorded in a CM sketch (for ε·N bounds). */
+  /** Total stream weight N recorded in a CM sketch (for ε·N bounds); −1
+    * for a null sketch. */
   def cm_total(sketch: Column): Column =
-    functions.udf(cmTotalUdf).apply(sketch)
+    column(CmTotalSketch(expression(sketch)))
 
-  /** Top-k entries of a serialized TopK sketch → array<struct<key,est>>. */
+  /** Top-k entries of a serialized TopK sketch → array<struct<key,est>>;
+    * empty for a null sketch. */
   def topk_entries(sketch: Column, k: Int): Column =
-    functions.udf(topkEntriesUdf).apply(sketch, functions.lit(k))
+    column(TopKEntriesSketch(expression(sketch), Literal(k)))
 
-  def cs_query(sketch: Column, key: Column): Column =
-    functions.udf(csQueryUdf).apply(sketch, key)
+  def cs_query(sketch: Column, key: Column): Column = csQuery(sketch, key)
 
-  def mg_query(sketch: Column, key: Column): Column =
-    functions.udf(mgQueryUdf).apply(sketch, key)
+  def mg_query(sketch: Column, key: Column): Column = mgQuery(sketch, key)
 
   /** All (key, est) entries of a Misra-Gries summary. */
   def mg_entries(sketch: Column): Column =
@@ -282,8 +277,7 @@ object SketchFunctions {
         .sortBy { case (k, v) => (-v, k) }.map(e => TopKEntry(e._1, e._2))
     ).apply(sketch)
 
-  def fss_query(sketch: Column, key: Column): Column =
-    functions.udf(fssQueryUdf).apply(sketch, key)
+  def fss_query(sketch: Column, key: Column): Column = fssQuery(sketch, key)
 
   /** All (key, f, e) entries of an FSS summary, f desc. */
   def fss_entries(sketch: Column): Column =
@@ -294,8 +288,9 @@ object SketchFunctions {
         .map { case (k, f, e) => FssEntry(k, f, e) }
     ).apply(sketch)
 
+  /** HLL cardinality estimate; −1 for a null sketch. */
   def hll_count(sketch: Column): Column =
-    functions.udf(hllCountUdf).apply(sketch)
+    column(HllCountSketch(expression(sketch)))
 
   def hll_stderr(sketch: Column): Column =
     functions.udf((bytes: Array[Byte]) =>
@@ -320,60 +315,21 @@ object SketchFunctions {
     * scalar subquery, `bloom_contains(sk.scalar(), key)`: every row of a
     * task then sees the same array and the memo answers by identity. A
     * `crossJoin(broadcast(sk))` copies the filter into every row. */
-  def bloom_contains(sketch: Column, key: Column): Column =
-    functions.udf(bloomContainsUdf).apply(sketch, key)
+  def bloom_contains(sketch: Column, key: Column): Column = bloomContains(sketch, key)
 
+  /** KLL quantile `q`; NaN for a null sketch, null for a null `q`. */
   def kll_quantile(sketch: Column, q: Column): Column =
-    functions.udf(kllQuantileUdf).apply(sketch, q)
+    column(KllQuantileSketch(expression(sketch), expression(q)))
 
   def kll_n(sketch: Column): Column =
     functions.udf((bytes: Array[Byte]) =>
       if (bytes == null) -1L else kllMemo.get(bytes, KllSketch.deserialize).n
     ).apply(sketch)
 
-  def tdigest_quantile(sketch: Column, q: Column): Column =
-    functions.udf(tdigestQuantileUdf).apply(sketch, q)
+  def tdigest_quantile(sketch: Column, q: Column): Column = tdigestQuantile(sketch, q)
 
   def tdigest_rank(sketch: Column, x: Column): Column =
     functions.udf((bytes: Array[Byte], x: Double) =>
       if (bytes == null) Double.NaN else tdMemo.get(bytes, TDigest.deserialize).rank(x)
     ).apply(sketch, x)
-
-  // ---- SQL registration
-
-  /** Register every aggregate + scalar under `cm_sketch`-style SQL names
-    * with library-default parameters. */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.udf
-    r.register("cm_sketch",
-      functions.udaf(new CmAggregator(1e-4, 0.01, CountMinSketch.DefaultSeed), tupleStrLong))
-    r.register("cm_merge", functions.udaf(new CmMergeAggregator, Encoders.BINARY))
-    r.register("cm_topk",
-      functions.udaf(new TopKAggregator(1024, 1e-4, 0.01, CountMinSketch.DefaultSeed), tupleStrLong))
-    r.register("hll_sketch",
-      functions.udaf(new HllAggregator(14, HyperLogLog.DefaultSeed), Encoders.STRING))
-    r.register("bloom_sketch",
-      functions.udaf(new BloomAggregator(1 << 20, 0.01, BloomFilter.DefaultSeed), Encoders.STRING))
-    r.register("kll_sketch",
-      functions.udaf(new KllAggregator(200, KllSketch.DefaultSeed),
-        Encoders.DOUBLE))
-    r.register("tdigest_sketch",
-      functions.udaf(new TDigestAggregator(100.0),
-        Encoders.DOUBLE))
-    r.register("cs_sketch",
-      functions.udaf(new CsAggregator(5, 4096, CountSketch.DefaultSeed), tupleStrLong))
-    r.register("mg_sketch", functions.udaf(new MgAggregator(1024), tupleStrLong))
-    r.register("fss_sketch",
-      functions.udaf(new FssAggregator(1024, 4096, FilteredSpaceSaving.DefaultSeed), tupleStrLong))
-    r.register("cs_query", csQueryUdf)
-    r.register("mg_query", mgQueryUdf)
-    r.register("fss_query", fssQueryUdf)
-    r.register("cm_query", cmQueryUdf)
-    r.register("cm_total", cmTotalUdf)
-    r.register("hll_count", hllCountUdf)
-    r.register("bloom_contains", bloomContainsUdf)
-    r.register("kll_quantile", kllQuantileUdf)
-    r.register("tdigest_quantile", tdigestQuantileUdf)
-    r.register("topk_entries", topkEntriesUdf)
-  }
 }

@@ -1,6 +1,7 @@
 package graft.agg
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -130,27 +131,9 @@ case class CdcCuts(child: Expression, window: Int, div: Int)
     copy(child = newChild)
 }
 
+/** Column builder of `cdc_cuts`; its SQL name is registered by
+  * `graft.GraftExtensions`. */
 object StringExpressions {
-
-  /** The ONE cdc_cuts builder — shared by [[register]] and
-    * `GraftExtensions.functionDescriptions` (the VectorExpressions
-    * discipline, so the two registration paths cannot drift). */
-  val cdcCutsBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 3,
-      "usage: cdc_cuts(text, window, div) with literal window/div")
-    def foldInt(e: Expression, name: String): Int = {
-      require(e.foldable, s"cdc_cuts: $name must be a literal")
-      e.eval() match {
-        case x: java.lang.Number => x.intValue()
-        case other =>
-          throw new IllegalArgumentException(s"cdc_cuts: $name not numeric: $other")
-      }
-    }
-    CdcCuts(exprs.head, foldInt(exprs(1), "window"), foldInt(exprs(2), "div"))
-  }
-
-  /** Idempotent session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_cuts", cdcCutsBuilder, "built-in")
+  def cdc_cuts(text: Column, window: Int, div: Int): Column =
+    column(CdcCuts(expression(text), window, div))
 }

@@ -1,6 +1,7 @@
 package graft.agg
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -314,46 +315,15 @@ case class IntersectCountSorted(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Column builders of the fused array kernels; their SQL names are
+  * registered by `graft.GraftExtensions`. */
 object VectorExpressions {
-  /** The ONE cosine_micro builder — shared by [[register]] and
-    * `GraftExtensions.functionDescriptions` so the two registration
-    * paths cannot drift. */
-  val cosineMicroBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 2, "usage: cosine_micro(vec_a, vec_b)")
-    CosineMicro(exprs.head, exprs(1))
-  }
+  def cosine_micro(a: Column, b: Column): Column =
+    column(CosineMicro(expression(a), expression(b)))
 
-  /** The ONE dot_range builder (start/len fold from literal args). */
-  val dotRangeBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 4,
-      "usage: dot_range(vec_a, vec_b, start, len) with literal start/len")
-    def foldInt(e: Expression, name: String): Int = {
-      require(e.foldable, s"dot_range: $name must be a literal")
-      e.eval() match {
-        case n: java.lang.Number => n.intValue()
-        case other =>
-          throw new IllegalArgumentException(s"dot_range: $name not numeric: $other")
-      }
-    }
-    DotRange(exprs.head, exprs(1),
-      foldInt(exprs(2), "start"), foldInt(exprs(3), "len"))
-  }
+  def dot_range(a: Column, b: Column, start: Int, len: Int): Column =
+    column(DotRange(expression(a), expression(b), start, len))
 
-  /** The ONE intersect_count_sorted builder. */
-  val intersectCountBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 2, "usage: intersect_count_sorted(arr_a, arr_b)")
-    IntersectCountSorted(exprs.head, exprs(1))
-  }
-
-  /** Idempotent session registration (the NativeCountMinAgg.register
-    * pattern) — query builders call this before constructing plans that
-    * use `call_function("cosine_micro"/"dot_range"/..., ...)`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_micro", cosineMicroBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_range", dotRangeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_count_sorted", intersectCountBuilder, "built-in")
-  }
+  def intersect_count_sorted(a: Column, b: Column): Column =
+    column(IntersectCountSorted(expression(a), expression(b)))
 }

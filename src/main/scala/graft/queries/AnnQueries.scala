@@ -48,23 +48,17 @@ object AnnQueries {
     * intermediate zip_with array, norms not re-aggregated as separate
     * subtrees). Bit-identical to `floor(cosine(a,b)·1e6).cast("long")`
     * (VectorExprSpec pins parity on adversarial vectors), so swapping it
-    * into the oracle-gated pair kernels cannot move a value. Registers the
-    * function into the active session idempotently (the temp-function
-    * registry is the public Expression→Column path). */
-  private def cosMicro(a: Column, b: Column): Column = {
-    graft.agg.VectorExpressions.register(SparkSession.active)
-    call_function("cosine_micro", a, b)
-  }
+    * into the oracle-gated pair kernels cannot move a value. */
+  private def cosMicro(a: Column, b: Column): Column =
+    graft.agg.VectorExpressions.cosine_micro(a, b)
 
   /** `dot(slice(a,start,len), slice(b,start,len))` as the fused
     * [[graft.agg.DotRange]] expression — no slice/zip_with materialization
     * per pair; bit-identical to the HOF form (VectorExprSpec). The q25
     * pair-kernel primitive (both the 16-dim prefix bound and the full
     * dot, keeping the precomputed norms). */
-  private def dotRange(a: Column, b: Column, start: Int, len: Int): Column = {
-    graft.agg.VectorExpressions.register(SparkSession.active)
-    call_function("dot_range", a, b, lit(start), lit(len))
-  }
+  private def dotRange(a: Column, b: Column, start: Int, len: Int): Column =
+    graft.agg.VectorExpressions.dot_range(a, b, start, len)
 
   /** q24: brute-force cosine top-10 neighbors for the 5 lowest-id query
     * vectors (excluding self-matches). */

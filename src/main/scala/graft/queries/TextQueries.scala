@@ -46,10 +46,8 @@ object TextQueries {
     * order-free; VectorExprSpec), with no per-pair hash set or
     * intersection array. Both set builders below sort ONCE per doc. */
   private def interCountSorted(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    graft.agg.VectorExpressions.register(SparkSession.active)
-    call_function("intersect_count_sorted", a, b)
-  }
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    graft.agg.VectorExpressions.intersect_count_sorted(a, b)
 
   /** Docs with (id, minhash band hashes, xxhash64'd shingle set) — one
     * tokenize+shingle pass per document. The hashed shingle sets ride along
@@ -2073,11 +2071,10 @@ object TextQueries {
        |else array() end""".stripMargin)
 
   private[graft] def cdcChunkRows(docs: DataFrame): DataFrame = {
-    graft.agg.StringExpressions.register(SparkSession.active)
     docs.select(col("doc_id"), col("text").as("s"), length(col("text")).as("n"))
       .filter(col("n") >= 1)
       .withColumn("bs",
-        call_function("cdc_cuts", col("s"), lit(CdcWindow), lit(CdcDiv)))
+        graft.agg.StringExpressions.cdc_cuts(col("s"), CdcWindow, CdcDiv))
       .withColumn("cuts", expr(
         """concat(array(0), bs,
           |  case when size(bs) > 0 and element_at(bs, -1) = n

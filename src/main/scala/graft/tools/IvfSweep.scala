@@ -16,7 +16,6 @@ object IvfSweep {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     spark.sparkContext.setLogLevel("ERROR")
-    graft.agg.VectorExpressions.register(spark)
     val emb = Tables.embeddings(spark, dir).cache()
     val n = emb.count()
     val every = 50
@@ -29,7 +28,7 @@ object IvfSweep {
     val brute = emb.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        call_function("cosine_micro", col("qvec"), col("embedding"))
+        graft.agg.VectorExpressions.cosine_micro(col("qvec"), col("embedding"))
           .as("sim_micro"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .select(col("query_id"), col("neighbor_id"))

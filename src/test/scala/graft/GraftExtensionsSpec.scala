@@ -1,12 +1,16 @@
 package graft
 
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, Row, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
 import graft.agg.SketchFunctions._
+import graft.sketch.{CountMinSketch, HyperLogLog, KllSketch, TopKSketch}
 
-/** The SQL function surface (GraftExtensions): native build + native scalar
-  * probes must agree bit-exactly with the Scala-API udaf/udf paths, and
-  * mistyped SQL must fail at analysis. */
+/** The SQL function surface (GraftExtensions): native builds and probes
+  * must agree bit-exactly with the Scala-API udaf builds decoded by the
+  * kernels, mistyped SQL must fail at analysis, and both ways into a
+  * session must expose the same names. */
 class GraftExtensionsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -24,11 +28,10 @@ class GraftExtensionsSpec extends SparkTestBase {
         |FROM (SELECT cm_sketch_fast(k, w) AS sk FROM ext_fixture)""".stripMargin)
       .head()
     val df = spark.table("ext_fixture")
-    val scalaRow = df.agg(cm_sketch(col("k"), col("w"), eps = 1e-4).as("sk"))
-      .select(cm_query(col("sk"), lit("k1")).as("est"), cm_total(col("sk")).as("n"))
-      .head()
-    assert(sqlRows.getLong(0) === scalaRow.getLong(0))
-    assert(sqlRows.getLong(1) === scalaRow.getLong(1))
+    val cm = CountMinSketch.deserialize(df.agg(cm_sketch(col("k"), col("w"), eps = 1e-4).as("sk"))
+      .head().getAs[Array[Byte]](0))
+    assert(sqlRows.getLong(0) === cm.query("k1"))
+    assert(sqlRows.getLong(1) === cm.totalWeight)
     // exact regime sanity: 37 keys vs width 2^15 — the estimate is exact
     val truth = df.filter(col("k") === "k1").agg(sum("w")).head().getLong(0)
     assert(sqlRows.getLong(0) === truth)
@@ -41,10 +44,9 @@ class GraftExtensionsSpec extends SparkTestBase {
         |  SELECT explode(topk_entries_sketch(sk, 10)) AS e FROM
         |    (SELECT topk_sketch_fast(k, w) AS sk FROM ext_fixture))""".stripMargin)
       .as[(String, Long)].collect().toSeq
-    val scalaRows = spark.table("ext_fixture")
+    val scalaRows = TopKSketch.deserialize(spark.table("ext_fixture")
       .agg(cm_topk(col("k"), col("w"), capacity = 4096, eps = 1e-4).as("sk"))
-      .select(explode(topk_entries(col("sk"), 10)).as("e"))
-      .select(col("e.key"), col("e.est")).as[(String, Long)].collect().toSeq
+      .head().getAs[Array[Byte]](0)).topK(10).toSeq
     assert(sqlRows === scalaRows)
     assert(sqlRows.length === 10)
     // exact regime: estimates equal the true sums
@@ -68,9 +70,9 @@ class GraftExtensionsSpec extends SparkTestBase {
   }
 
   private def df_with_seed(seed: Long): Long =
-    spark.table("ext_fixture")
+    CountMinSketch.deserialize(spark.table("ext_fixture")
       .agg(cm_sketch(col("k"), col("w"), eps = 1e-3, seed = seed).as("sk"))
-      .select(cm_query(col("sk"), lit("k2"))).head().getLong(0)
+      .head().getAs[Array[Byte]](0)).query("k2")
 
   test("hll_sketch_fast literal p/seed arguments reach the aggregate") {
     installed; fixture()
@@ -103,11 +105,11 @@ class GraftExtensionsSpec extends SparkTestBase {
     val scalaRow = df.agg(
         hll_sketch(col("k")).as("h"),
         kll_sketch(col("w").cast("double")).as("kl"))
-      .select(hll_count(col("h")).as("card"),
-        kll_quantile(col("kl"), lit(0.5)).as("med"))
       .head()
-    assert(sqlRow.getLong(0) === scalaRow.getLong(0))
-    assert(sqlRow.getDouble(1) === scalaRow.getDouble(1))
+    assert(sqlRow.getLong(0) ===
+      HyperLogLog.deserialize(scalaRow.getAs[Array[Byte]](0)).estimateLong())
+    assert(sqlRow.getDouble(1) ===
+      KllSketch.deserialize(scalaRow.getAs[Array[Byte]](1)).quantile(0.5))
     assert(sqlRow.getLong(0) === 37L) // p=14 is exact at 37 distinct keys
   }
 
@@ -126,5 +128,94 @@ class GraftExtensionsSpec extends SparkTestBase {
   test("extensions class injects without error (spark-submit wiring)") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must register all builders cleanly
+  }
+
+  test("a bad literal argument names the function it was passed to") {
+    installed; fixture()
+    val e = intercept[Exception] {
+      spark.sql("SELECT hll_sketch_fast(k, 'x') FROM ext_fixture").collect()
+    }
+    assert(e.getMessage.contains("hll_sketch_fast: p must be numeric"), e.getMessage)
+    val e2 = intercept[Exception] {
+      spark.sql("SELECT topk_sketch_fast(k, w, capacity) FROM " +
+        "(SELECT *, 4 AS capacity FROM ext_fixture)").collect()
+    }
+    assert(e2.getMessage.contains("topk_sketch_fast: capacity must be a literal"), e2.getMessage)
+  }
+
+  /** Temp-function names `install` adds to a fresh session. */
+  private def installedNames(): Set[String] = {
+    def temp(s: org.apache.spark.sql.SparkSession) =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    val fresh = spark.newSession()
+    val before = temp(fresh)
+    GraftExtensions.install(fresh)
+    temp(fresh) -- before
+  }
+
+  test("the extensions path injects exactly the names install registers") {
+    val injected = Seq.newBuilder[String]
+    val ext = new SparkSessionExtensions {
+      override def injectFunction(
+          fd: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit = {
+        injected += fd._1.funcName
+        super.injectFunction(fd)
+      }
+    }
+    new GraftExtensions().apply(ext)
+    val names = injected.result()
+    assert(names.distinct.length === names.length, "a name is registered twice")
+    assert(names.toSet === installedNames())
+  }
+
+  test("every SQL name of the earlier registries still resolves") {
+    val before = Set("cm_sketch", "cm_merge", "cm_topk", "hll_sketch", "bloom_sketch",
+      "kll_sketch", "tdigest_sketch", "cs_sketch", "mg_sketch", "fss_sketch", "cs_query",
+      "mg_query", "fss_query", "cm_query", "cm_total", "hll_count", "bloom_contains",
+      "kll_quantile", "tdigest_quantile", "topk_entries", "cm_sketch_fast", "cm_query_sketch",
+      "cm_total_sketch", "hll_count_sketch", "kll_quantile_sketch", "topk_sketch_fast",
+      "hll_sketch_fast", "topk_entries_sketch", "cosine_micro", "dot_range",
+      "intersect_count_sorted", "cdc_cuts")
+    assert(before -- installedNames() === Set.empty[String])
+  }
+
+  test("SQL names and the Column API agree on null sketch and key inputs") {
+    installed
+    val sks = Seq("a", "b", "a").toDF("k").agg(
+      cm_sketch(col("k"), lit(1L)).as("cm"), hll_sketch(col("k")).as("hll"),
+      kll_sketch(lit(1.0)).as("kll"), cm_topk(col("k"), lit(1L), capacity = 8).as("topk"))
+    val nulls = sks.select(lit(null).cast("binary").as("nb"), lit(null).cast("string").as("nk"),
+      col("cm"), col("hll"), col("kll"), col("topk"))
+    nulls.createOrReplaceTempView("ext_nulls")
+    val viaApi = nulls.select(
+      cm_query(col("nb"), lit("a")), cm_query(col("cm"), col("nk")), cm_total(col("nb")),
+      hll_count(col("nb")), kll_quantile(col("nb"), lit(0.5)),
+      kll_quantile(col("kll"), lit(null).cast("double")),
+      to_json(topk_entries(col("nb"), 3))).head()
+    assert(viaApi === Row(-1L, -1L, -1L, -1L, Double.NaN, null, "[]"))
+    for (suffix <- Seq("", "_sketch")) {
+      val viaSql = spark.sql(s"""SELECT cm_query$suffix(nb, 'a'), cm_query$suffix(cm, nk),
+        | cm_total$suffix(nb), hll_count$suffix(nb), kll_quantile$suffix(nb, 0.5D),
+        | kll_quantile$suffix(kll, CAST(NULL AS DOUBLE)),
+        | to_json(topk_entries$suffix(nb, 3)) FROM ext_nulls""".stripMargin).head()
+      assert(viaSql === viaApi, s"suffix '$suffix'")
+    }
+  }
+
+  test("SQL merges equal the Column-API merges") {
+    installed
+    val shards = spark.range(0, 4000, 1, 4).select(col("id"), (col("id") % 8).as("s"),
+        concat(lit("k"), (col("id") % 300).cast("string")).as("k"))
+      .groupBy("s").agg(cm_sketch(col("k"), lit(1L)).as("cm"), hll_sketch(col("k")).as("hll"),
+        kll_sketch(col("id").cast("double")).as("kll"))
+      .repartition(1).cache()
+    shards.createOrReplaceTempView("ext_shards")
+    val viaApi = shards.agg(cm_merge(col("cm")), hll_merge(col("hll")), kll_merge(col("kll")))
+      .head()
+    val viaSql = spark.sql("SELECT cm_merge(cm), hll_merge(hll), kll_merge(kll) FROM ext_shards")
+      .head()
+    for (i <- 0 until 3)
+      assert(java.util.Arrays.equals(viaSql.getAs[Array[Byte]](i), viaApi.getAs[Array[Byte]](i)), s"$i")
+    shards.unpersist()
   }
 }

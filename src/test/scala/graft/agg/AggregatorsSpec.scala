@@ -131,7 +131,7 @@ class AggregatorsSpec extends SparkTestBase {
   }
 
   test("SQL registration: cm_sketch/cm_query usable from spark.sql") {
-    SketchFunctions.register(spark)
+    graft.GraftExtensions.install(spark)
     streamDf(8).createOrReplaceTempView("stream_v")
     val rows = spark.sql(
       """SELECT cm_query(sk, 'key_0') AS est FROM
@@ -181,7 +181,7 @@ class AggregatorsSpec extends SparkTestBase {
       .as[Boolean].collect().toSeq
     assert(byRef === even)
     // content path: every row carries its own copy, through the SQL name
-    SketchFunctions.register(spark)
+    graft.GraftExtensions.install(spark)
     Seq((a, b)).toDF("a", "b").crossJoin(spark.range(0, 200, 1, 1))
       .createOrReplaceTempView("memo_late_word_v")
     val byCopy = spark.sql(s"""SELECT bloom_contains(IF(id % 2 = 0, a, b), '$key')
@@ -191,7 +191,7 @@ class AggregatorsSpec extends SparkTestBase {
   }
 
   test("SQL probe names answer like the Column API") {
-    SketchFunctions.register(spark)
+    graft.GraftExtensions.install(spark)
     val df = streamDf(8)
     val sks = df.agg(
       cm_sketch(col("k"), col("w")).as("cm"),

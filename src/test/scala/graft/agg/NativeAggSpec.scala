@@ -78,8 +78,8 @@ class NativeAggSpec extends SparkTestBase {
   }
 
   test("native aggregate works in groupBy and skips nulls") {
+    graft.GraftExtensions.install(spark)
     NativeCountMinAgg.register(spark, eps = 1e-3, delta = 0.01)
-    SketchFunctions.register(spark)
     val df = Seq(("g1", "a", 1L), ("g1", null, 5L), ("g2", "b", 2L), ("g1", "a", 3L))
       .toDF("g", "k", "w")
     df.createOrReplaceTempView("native_groups_v")

@@ -31,7 +31,7 @@ class StringExprSpec extends SparkTestBase {
   }
 
   private def bothPaths(texts: Seq[String]) = {
-    StringExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .select(col("doc_id"), col("text").as("s"), length(col("text")).as("n"))
@@ -42,7 +42,7 @@ class StringExprSpec extends SparkTestBase {
   }
 
   test("cdc_cuts: bit-parity with the HOF twin on the gate corpus") {
-    StringExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     val rows = Tables.documents(spark, sf("sf0.001"))
       .filter(col("text").isNotNull)
       .select(col("doc_id"), col("text").as("s"), length(col("text")).as("n"))
@@ -75,7 +75,7 @@ class StringExprSpec extends SparkTestBase {
     // 😀 = U+1F600 (two UTF-16 code units) — the native scan and the JVM
     // codepoint reference must agree; position indices are codepoint-based
     val t = "😀😀abcdef😀gh" * 4
-    StringExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     val got = Seq(t).toDF("s")
       .select(call_function("cdc_cuts", col("s"), lit(W), lit(D)).as("native"))
       .as[Seq[Int]].collect()(0)
@@ -93,7 +93,7 @@ class StringExprSpec extends SparkTestBase {
   }
 
   test("cdc_cuts: null text row yields null, not a crash") {
-    StringExpressions.register(spark)
+    graft.GraftExtensions.install(spark)
     val got = Seq(Some("abcdefghij"), None).toDF("s")
       .select(call_function("cdc_cuts", col("s"), lit(W), lit(D)).as("c"))
       .collect()

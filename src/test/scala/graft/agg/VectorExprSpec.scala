@@ -13,7 +13,7 @@ class VectorExprSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  VectorExpressions.register(spark)
+  graft.GraftExtensions.install(spark)
 
   private def hofCosMicro(a: Column, b: Column): Column = {
     def dot(x: Column, y: Column) =

@@ -1,6 +1,7 @@
 package graft.data
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.agg.SketchFunctions._
@@ -81,28 +82,57 @@ class ReferenceParitySpec extends SparkTestBase {
     assert(back === Set((Seq(1L, 2L), 10.5, 12.0), (Seq(2L, 3L), 3.25, 3.25)))
   }
 
+  /** Reroute output (path, traffic, origtraffic) of a reference-schema file. */
+  private def readReroute(path: String) =
+    spark.read.option("multiLine", "true").json(path)
+      .select(explode(col("flows")).as("f"))
+      .select(col("f.path").as("path"), col("f.traffic").as("traffic"),
+        col("f.origtraffic").as("origtraffic"))
+
+  /** Our Q6 link-load aggregation: explode consecutive path pairs into
+    * links, sum traffic per link. */
+  private def linkLoads(rer: org.apache.spark.sql.DataFrame) =
+    rer.select(col("traffic"), posexplode(expr(
+        "transform(slice(path, 1, size(path) - 1), (x, i) -> struct(x AS a, path[i + 1] AS b))"))
+        .as(Seq("i", "link")))
+      .groupBy(col("link")).agg(sum(col("traffic")).as("load"))
+
+  test("coflow and reroute fixtures in the reference schema: ingest, reroute invariant, link loads") {
+    val topo = ReferenceIO.readCoflowJson(spark, TraceShapeSpec.SpineCoflow)
+    assert(topo.count() === 200L)
+    assert(topo.agg(max(col("traffic"))).head().getDouble(0) === 42710.0)
+    val rer = readReroute(TraceShapeSpec.FattreeReroute)
+    assert(rer.count() === 24L)
+    assert(rer.agg(sum(col("traffic")), sum(col("origtraffic"))).head() === Row(588.0, 595.0))
+    // rerouted traffic never exceeds the original demand
+    assert(rer.filter(col("traffic") > col("origtraffic") + 1e-6).count() === 0L)
+    // 24 five-hop paths cross 40 distinct directed links; hand-summed max load
+    val links = linkLoads(rer)
+    assert(links.count() === 40L)
+    assert(links.agg(max(col("load"))).head().getDouble(0) === 134.0)
+  }
+
   test("ingests the reference's COMMITTED artifacts, not just shaped fixtures") {
     // the real files the reference repo ships (read-only study of its
-    // behavior): a topology coflow input and a CountMax reroute OUTPUT
-    val topo = ReferenceIO.readCoflowJson(spark,
-      "/root/reference/data/Fattree_50000.json")
+    // behavior): a topology coflow input and a CountMax reroute OUTPUT.
+    // Their sizes and shapes belong to the reference's generator, so this
+    // test needs the reference checkout's data directory, named by
+    // REFERENCE_DATA_DIR; the fixture test above covers the same schema and
+    // invariants on committed files.
+    val dir = sys.env.get("REFERENCE_DATA_DIR")
+    val topoPath = dir.fold("")(d => s"$d/Fattree_50000.json")
+    val rerPath = dir.fold("")(d => s"$d/REROUTE_CountMax_k1000_Fattree_50000.json")
+    assume(dir.isDefined && Files.exists(java.nio.file.Paths.get(topoPath)) &&
+      Files.exists(java.nio.file.Paths.get(rerPath)),
+      "REFERENCE_DATA_DIR does not hold the reference data files")
+    val topo = ReferenceIO.readCoflowJson(spark, topoPath)
     assert(topo.count() === 50000L)
     assert(topo.agg(sum(col("traffic"))).head().getDouble(0) > 0.0)
     // reroute output invariant: rerouted traffic never exceeds the original
     // demand (the reference only ever sheds load off heavy links)
-    val rer = spark.read.option("multiLine", "true")
-      .json("/root/reference/data/REROUTE_CountMax_k1000_Fattree_50000.json")
-      .select(explode(col("flows")).as("f"))
-      .select(col("f.path").as("path"), col("f.traffic").as("traffic"),
-        col("f.origtraffic").as("origtraffic"))
+    val rer = readReroute(rerPath)
     assert(rer.filter(col("traffic") > col("origtraffic") + 1e-6).count() === 0L)
-    // our Q6 link-load aggregation runs over the real artifact: explode
-    // consecutive path pairs into links, sum traffic per link
-    val links = rer
-      .select(col("traffic"), posexplode(expr(
-        "transform(slice(path, 1, size(path) - 1), (x, i) -> struct(x AS a, path[i + 1] AS b))"))
-        .as(Seq("i", "link")))
-      .groupBy(col("link")).agg(sum(col("traffic")).as("load"))
+    val links = linkLoads(rer)
     val maxLoad = links.agg(max(col("load"))).head().getDouble(0)
     assert(links.count() > 100L && maxLoad > 0.0)
   }
