@@ -145,23 +145,32 @@ final class KllSketch private (
     this
   }
 
-  /** All (value, weight) pairs, sorted by value. */
+  /** All (value, weight) pairs, sorted by value in `java.lang.Double.compare`
+    * order: each level is sorted on its own, then merged into the levels
+    * below it, so equal values keep their level order. */
   private def sortedWeighted(): (Array[Double], Array[Long]) = {
-    val total = totalItems
-    val vs = new Array[Double](total)
-    val ws = new Array[Long](total)
-    var idx = 0
+    var vs = new Array[Double](0)
+    var ws = new Array[Long](0)
     var lvl = 0
     while (lvl < levels.length) {
-      val b = levels(lvl)
+      val b = levels(lvl).toArray
+      java.util.Arrays.sort(b)
       val w = 1L << lvl
-      var j = 0
-      while (j < b.size) { vs(idx) = b(j); ws(idx) = w; idx += 1; j += 1 }
+      val outV = new Array[Double](vs.length + b.length)
+      val outW = new Array[Long](outV.length)
+      var i = 0; var j = 0; var o = 0
+      while (o < outV.length) {
+        if (j == b.length || (i < vs.length && java.lang.Double.compare(vs(i), b(j)) <= 0)) {
+          outV(o) = vs(i); outW(o) = ws(i); i += 1
+        } else {
+          outV(o) = b(j); outW(o) = w; j += 1
+        }
+        o += 1
+      }
+      vs = outV; ws = outW
       lvl += 1
     }
-    // sort pairs by value (indices sort to avoid boxing a tuple array)
-    val order = (0 until total).sortBy(vs)(Ordering.Double.TotalOrdering).toArray
-    (order.map(vs), order.map(ws))
+    (vs, ws)
   }
 
   /**
@@ -238,13 +247,20 @@ object KllSketch {
 
   def deserialize(bytes: Array[Byte]): KllSketch = {
     val bb = SketchIO.reader(bytes, SketchIO.MagicKLL, "KLL")
+    SketchIO.need(bb, 4 + 8 + 8 + 8 + 4, "KLL")
     val k = bb.getInt
     val seed = bb.getLong
     val n = bb.getLong
     val compactions = bb.getLong
     val nLevels = bb.getInt
+    require(k >= 8 && k <= (1 << 20), s"not a valid KLL sketch: k $k")
+    require(nLevels >= 0, s"not a valid KLL sketch: $nLevels levels")
+    SketchIO.need(bb, 4L * nLevels, "KLL")
     val levels = Array.fill(nLevels) {
+      SketchIO.need(bb, 4, "KLL")
       val sz = bb.getInt
+      require(sz >= 0, s"not a valid KLL sketch: level of $sz items")
+      SketchIO.need(bb, 8L * sz, "KLL")
       val b = new DoubleBuf(math.max(8, sz))
       var j = 0
       while (j < sz) { b.add(bb.getDouble); j += 1 }

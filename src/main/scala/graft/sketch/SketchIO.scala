@@ -20,11 +20,18 @@ object SketchIO {
 
   def reader(bytes: Array[Byte], expectMagic: Int, what: String): ByteBuffer = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    need(bb, 4, what)
     val magic = bb.getInt
     require(magic == expectMagic,
       s"not a serialized $what sketch (magic=0x${magic.toHexString})")
     bb
   }
+
+  /** Fails with an IllegalArgumentException naming the sketch unless `n`
+    * more bytes remain; call it before reading or allocating from a header. */
+  def need(bb: ByteBuffer, n: Long, what: String): Unit =
+    require(n <= bb.remaining,
+      s"truncated $what sketch: needs $n more bytes, ${bb.remaining} left")
 
   def putLongs(bb: ByteBuffer, xs: Array[Long]): Unit = {
     var i = 0

@@ -70,6 +70,88 @@ class QuantileSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(a.serialize(), b.serialize()))
   }
 
+  test("KLL quantile equals a boxed stable sort over the serialized levels") {
+    // (value, weight) pairs read back from the blob, sorted the way quantile
+    // sorted them before: boxed indices under Ordering.Double.TotalOrdering
+    def boxedQuantile(blob: Array[Byte], q: Double): Double = {
+      val bb = SketchIO.reader(blob, SketchIO.MagicKLL, "KLL")
+      bb.getInt; bb.getLong; bb.getLong; bb.getLong
+      val pairs = (0 until bb.getInt).flatMap { lvl =>
+        (0 until bb.getInt).map(_ => (bb.getDouble, 1L << lvl))
+      }
+      val vs = pairs.map(_._1).toArray
+      val order = (0 until vs.length).sortBy(vs)(Ordering.Double.TotalOrdering)
+      val target = math.max(1L, math.ceil(q * pairs.map(_._2).sum).toLong)
+      var cum = 0L
+      order.find { i => cum += pairs(i)._2; cum >= target }.map(vs).getOrElse(vs(order.last))
+    }
+    val rnd = new scala.util.Random(43)
+    val streams = Seq(
+      Array.fill(40000)((rnd.nextInt(100) + 1).toDouble),
+      Array.fill(40000)(rnd.nextGaussian()),
+      Array.fill(40000)(if (rnd.nextBoolean()) -0.0 else 0.0),
+      Array.fill(3000)(rnd.nextDouble()))
+    for ((xs, s) <- streams.zipWithIndex; k <- Seq(64, 200)) {
+      val kll = KllSketch(k)
+      xs.foreach(kll.update)
+      val blob = kll.serialize()
+      for (q <- 0.0 +: probs :+ 1.0) {
+        val got = kll.quantile(q)
+        val want = boxedQuantile(blob, q)
+        assert(java.lang.Double.compare(got, want) == 0, s"stream $s k=$k q=$q: $got vs $want")
+      }
+    }
+  }
+
+  test("KLL decode rejects truncated blobs and oversized headers with an error naming KLL") {
+    val kll = KllSketch(64)
+    (0 until 5000).foreach(i => kll.update(math.sin(i.toDouble)))
+    val blob = kll.serialize()
+    def rejected(bytes: Array[Byte]): Unit = {
+      val e = intercept[IllegalArgumentException](KllSketch.deserialize(bytes))
+      assert(e.getMessage.contains("KLL"), e.getMessage)
+    }
+    (0 until blob.length by 3).foreach(n => rejected(java.util.Arrays.copyOf(blob, n)))
+    rejected(java.util.Arrays.copyOf(blob, blob.length - 1))
+    // header offsets: magic 0, k 4, seed 8, n 16, compactions 24, levels 32, level-0 size 36
+    def patched(at: Int, v: Int): Array[Byte] = {
+      val b = blob.clone()
+      java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(at, v)
+      b
+    }
+    rejected(patched(32, 1 << 30))
+    rejected(patched(32, -1))
+    rejected(patched(36, 1 << 30))
+    rejected(patched(36, -5))
+    rejected(patched(4, 0))
+    val back = KllSketch.deserialize(blob)
+    assert(java.util.Arrays.equals(back.serialize(), blob))
+  }
+
+  test("t-digest decode rejects truncated blobs and oversized headers with an error naming t-digest") {
+    val td = TDigest(100)
+    (0 until 5000).foreach(i => td.update(math.sin(i.toDouble)))
+    val blob = td.serialize()
+    def rejected(bytes: Array[Byte]): Unit = {
+      val e = intercept[IllegalArgumentException](TDigest.deserialize(bytes))
+      assert(e.getMessage.contains("t-digest"), e.getMessage)
+    }
+    (0 until blob.length by 3).foreach(n => rejected(java.util.Arrays.copyOf(blob, n)))
+    rejected(java.util.Arrays.copyOf(blob, blob.length - 1))
+    // header offsets: magic 0, compression 4, centroids 12
+    def patched(f: java.nio.ByteBuffer => Unit): Array[Byte] = {
+      val b = blob.clone()
+      f(java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN))
+      b
+    }
+    rejected(patched(_.putInt(12, 1 << 30)))
+    rejected(patched(_.putInt(12, -1)))
+    rejected(patched(_.putDouble(4, 1e300)))
+    rejected(patched(_.putDouble(4, Double.NaN)))
+    val back = TDigest.deserialize(blob)
+    assert(java.util.Arrays.equals(back.serialize(), blob))
+  }
+
   test("KLL serialize round-trip") {
     val xs = (0 until 30000).map(_.toDouble)
     val kll = KllSketch(256)
