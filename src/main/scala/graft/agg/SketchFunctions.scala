@@ -45,9 +45,9 @@ object SketchFunctions {
    * expression.
    */
   private final class SketchMemo[T >: Null <: AnyRef] {
-    // 4 slots per thread so queries probing several broadcast sketches per
-    // row (e.g. q42's 3 replicas combined with `least`) don't thrash the
-    // memo back into per-row deserialization; round-robin eviction.
+    // 4 slots per thread so queries probing several sketches per row (e.g.
+    // q42's 3 replicas combined with `least`) don't thrash the memo back
+    // into per-row deserialization; round-robin eviction.
     private final class Slots {
       val keys = new Array[Array[Byte]](4)
       val vs = new Array[AnyRef](4)
@@ -197,63 +197,11 @@ object SketchFunctions {
       else tdMemo.get(bytes, TDigest.deserialize).quantile(q))
 
   /** Point-frequency estimate of `key` from a serialized CM sketch; −1 for
-    * a null sketch or key. */
+    * a null sketch or key. Probe a one-row sketch frame `sk` as
+    * `cm_query(sk.scalar(), key)`: every row of a task then sees the same
+    * array and the memo decodes once. */
   def cm_query(sketch: Column, key: Column): Column =
     column(CmQuerySketch(expression(sketch), expression(key)))
-
-  /** Batched point-frequency probe: decode the sketch ONCE, answer every
-    * key in the array — the preferred probe shape when the key set fits a
-    * row (the per-row `cm_query` UDF is for billion-key probe sides). */
-  def cm_query_each(sketch: Column, keys: Column): Column =
-    functions.udf((bytes: Array[Byte], keys: Array[String]) =>
-      if (bytes == null) Array.empty[TopKEntry]
-      else {
-        val cm = CountMinSketch.deserialize(bytes)
-        keys.map(k => TopKEntry(k, if (k == null) -1L else cm.query(k)))
-      }
-    ).apply(sketch, keys)
-
-  /** Probe a finished 1-row CM sketch against a LARGE key side: collects the
-    * sketch at plan-build time, broadcasts the DECODED object once per
-    * executor, and returns a key→estimate Column builder. Two shapes serve
-    * a one-row sketch frame `sk` without per-row cost: this one, and the
-    * lazy `cm_query(sk.scalar(), key)`, whose scalar subquery hands every
-    * row of a task the same array (memo hit by identity, no collect before
-    * the plan runs). Avoid `keys.crossJoin(broadcast(sk))` + `cm_query`
-    * on a big probe side: the crossJoin copies the ~1.3MB serialized
-    * sketch into EVERY probe row (tens of GB of byte copying at 20k keys;
-    * measured: q28 29.6s → sub-second probe at sf0.1 on leaving it). */
-  def cm_probe(sketchRow: org.apache.spark.sql.DataFrame): Column => Column = {
-    val bytes = sketchRow.head().getAs[Array[Byte]](0)
-    val bc = sketchRow.sparkSession.sparkContext
-      .broadcast(CountMinSketch.deserialize(bytes))
-    key => functions.udf((k: String) =>
-      if (k == null) -1L else bc.value.query(k)).apply(key)
-  }
-
-  /** [[cm_probe]]'s Bloom twin: collect a finished 1-row Bloom sketch,
-    * broadcast the DECODED filter once per executor, return a membership
-    * Column builder. Its lazy twin is `bloom_contains(sk.scalar(), key)`
-    * (q07, q112); a `crossJoin(broadcast(sk))` would copy the filter's
-    * bytes into EVERY probe row. */
-  def bloom_probe(sketchRow: org.apache.spark.sql.DataFrame): Column => Column = {
-    val bytes = sketchRow.head().getAs[Array[Byte]](0)
-    val bc = sketchRow.sparkSession.sparkContext
-      .broadcast(BloomFilter.deserialize(bytes))
-    key => functions.udf((k: String) =>
-      k != null && bc.value.mightContain(k)).apply(key)
-  }
-
-  /** Like [[cm_probe]] but also exposes the sketch's total weight N. */
-  def cm_probe_with_total(sketchRow: org.apache.spark.sql.DataFrame)
-      : (Column => Column, Long) = {
-    val bytes = sketchRow.head().getAs[Array[Byte]](0)
-    val sk = CountMinSketch.deserialize(bytes)
-    val bc = sketchRow.sparkSession.sparkContext.broadcast(sk)
-    (key => functions.udf((k: String) =>
-      if (k == null) -1L else bc.value.query(k)).apply(key),
-      sk.totalWeight)
-  }
 
   /** Total stream weight N recorded in a CM sketch (for ε·N bounds); −1
     * for a null sketch. */

@@ -37,24 +37,22 @@ object BoundAudit {
     * The audited keys are q40's sampled slice (`samplePred`, exact counts
     * only for the sampled keys — the full exact aggregate is what sketches
     * exist to avoid), so the plan stays scale-safe: full-stream sketch
-    * build + a filtered groupBy + a broadcast-probe pass. */
+    * build + a filtered groupBy + a probe pass. */
   def collidingSliceAudit(df: DataFrame, keyCol: String, weightCol: String,
       samplePred: Column, eps: Double, delta: Double): DataFrame = {
-    // persisted: TWO consumers (the full-stream sketch aggregate — an
-    // action inside cm_probe_with_total that also materializes the cache —
-    // and the exact sampled-slice groupBy in the returned lazy plan);
+    // persisted: TWO consumers (the full-stream sketch aggregate, read as
+    // a scalar subquery, and the exact sampled-slice groupBy);
     // uncached, the events scan ran twice per gate run (ADVICE r4).
     // Released by the gate runners' clearCache contract.
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(weightCol).cast("long").as("w"), samplePred.as("sampled"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sk = keyed.agg(cm_sketch(col("k"), col("w"), eps, delta).as("sk"))
+    val sk = keyed.agg(cm_sketch(col("k"), col("w"), eps, delta)).scalar()
     val epsEff = effectiveEps(eps)
-    val (probe, total) = cm_probe_with_total(sk)
     keyed.filter(col("sampled"))
       .groupBy(col("k")).agg(sum(col("w")).as("true_w"))
-      .select(col("k"), col("true_w"), probe(col("k")).as("est"),
-        (lit(epsEff) * lit(total).cast("double")).as("eps_n"))
+      .select(col("k"), col("true_w"), cm_query(sk, col("k")).as("est"),
+        (lit(epsEff) * cm_total(sk).cast("double")).as("eps_n"))
       .agg(
         count(lit(1)).as("n_sampled_keys"),
         // coalesce: sum() over an EMPTY key slice is NULL, which would
@@ -82,16 +80,15 @@ object BoundAudit {
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(weightCol).cast("long").as("w"), samplePred.as("sampled"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sk = keyed.agg(cm_sketch(col("k"), col("w"), eps, delta).as("sk"))
+    val sk = keyed.agg(cm_sketch(col("k"), col("w"), eps, delta)).scalar()
     val sampledExact = keyed
       .filter(col("sampled"))
       .groupBy(col("k")).agg(sum(col("w")).as("true_w"))
-    val epsEff = effectiveEps(eps)
-    val (probe, total) = cm_probe_with_total(sk)
+    val epsN = lit(effectiveEps(eps)) * cm_total(sk).cast("double")
     sampledExact
       .select(col("k"), col("true_w"),
-        probe(col("k")).as("est"),
-        (lit(epsEff) * lit(total).cast("double")).as("eps_n"))
+        cm_query(sk, col("k")).as("est"),
+        epsN.as("eps_n"))
       .agg(
         count(lit(1)).as("n_sampled_keys"),
         // coalesce on every sum/max: an empty sampled slice must read as
@@ -101,10 +98,10 @@ object BoundAudit {
         coalesce(sum(when(
           col("est").cast("double") > col("true_w").cast("double") + col("eps_n"), 1L)
           .otherwise(0L)), lit(0L)).as("over_violations"),
-        // eps_n is row-independent (ε_eff · N), so the bound column is a
-        // driver literal — identical to the oracle's expression on any
-        // slice, including an empty one (max() over empty rows is NULL)
-        lit(math.floor(epsEff * total.toDouble * 1000.0).toLong)
-          .as("eps_n_bound_milli"))
+        // eps_n is row-independent (ε_eff · N), so the bound column reads
+        // the sketch, not the rows — identical to the oracle's expression
+        // on any slice, including an empty one (max() over empty rows is
+        // NULL)
+        floor(epsN * lit(1000.0)).as("eps_n_bound_milli"))
   }
 }

@@ -21,8 +21,8 @@ import graft.agg.SketchFunctions._
  *     incrementally by OR-merging each admitted delta's shard, never
  *     rebuilt) plus a hash-only parquet index directory-partitioned by the
  *     leading hex nibble of the hash (16 buckets).
- *   - [[dedupDelta]] (per delta, cost ∝ |delta|): broadcast-probe every
- *     delta hash against the Bloom — negatives are DEFINITELY new (no
+ *   - [[dedupDelta]] (per delta, cost ∝ |delta|): probe every delta hash
+ *     against the Bloom, read as a scalar subquery — negatives are DEFINITELY new (no
  *     false negatives) and short-circuit out; the fpp-bounded positive
  *     residue is exact-verified against ONLY the index buckets that
  *     contain a candidate (partition pruning over the directory layout —
@@ -136,10 +136,10 @@ object IncrementalDedup {
     * bloom-positive candidate. */
   def dedupDelta(spark: SparkSession, delta: DataFrame, dir: String)
       : DataFrame = {
-    val probe = bloom_probe(spark.read.parquet(s"$dir/bloom"))
+    val bloom = spark.read.parquet(s"$dir/bloom").scalar()
     val hashed = delta.select(col("doc_id"), sha2(col("text"), 256).as("h"))
     // fpp-bounded residue: |true dups| + fpp·|new docs|
-    val candidates = hashed.filter(probe(col("h")))
+    val candidates = hashed.filter(bloom_contains(bloom, col("h")))
     // touched buckets: bounded METADATA collect (≤16 ids), the partition-
     // pruning predicate for the index read
     val buckets = candidates.select(bucketOf(col("h")).as("b"))

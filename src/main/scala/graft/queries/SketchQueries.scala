@@ -16,23 +16,22 @@ import graft.agg.SketchFunctions._
  * against carried ground truth (/root/reference/Simulator/Program.cs:482-512).
  *
  * Plan shapes: one whole-table aggregate builds the O(d·w) sketch (partial
- * per partition → merge), then the tiny sketch row is broadcast to the
- * key-side probe join — the Spark analogue of the reference's "build in
- * kernel, serve point queries over TCP" split
+ * per partition → merge), then every probe row reads the one-row sketch
+ * as a scalar subquery (`cm_query(sk.scalar(), key)`), so each task sees
+ * one array and decodes it once — the Spark analogue of the reference's
+ * "build in kernel, serve point queries over TCP" split
  * (/root/reference/KernelQueue/main.c:63-144).
  */
 object SketchQueries {
 
-  /** q01: CM point-frequency per event_type (collision-free width).
-    * Batched probe: the key set is collected in-plan and the sketch decoded
-    * once (`cm_query_each`), not once per probe row. */
+  /** q01: CM point-frequency per event_type (collision-free width). */
   def cmPointEventType(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
     val sk = ev.agg(cm_sketch(col("event_type"), lit(1L), eps = 1e-4).as("sk"))
-    val keys = ev.agg(collect_set(col("event_type")).as("keys"))
-    keys.crossJoin(broadcast(sk))
-      .select(explode(cm_query_each(col("sk"), col("keys"))).as("e"))
-      .select(col("e.key").as("event_type"), col("e.est").as("est_count"))
+    ev.agg(collect_set(col("event_type")).as("keys"))
+      .select(explode(col("keys")).as("event_type"))
+      .select(col("event_type"),
+        cm_query(sk.scalar(), col("event_type")).as("est_count"))
       .orderBy("event_type")
   }
 
@@ -54,13 +53,12 @@ object SketchQueries {
   def cmBoundPartkeys(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
     val keyed = li.select(col("l_partkey").cast("string").as("k"))
-    val sk = keyed.agg(cm_sketch(col("k"), lit(1L), eps = 5e-3).as("sk"))
+    val sk = keyed.agg(cm_sketch(col("k"), lit(1L), eps = 5e-3)).scalar()
     val exact = keyed.groupBy(col("k")).agg(count(lit(1)).as("true_count"))
-    val (probe, total) = cm_probe_with_total(sk)
     val est = exact
       .select(col("k"), col("true_count"),
-        probe(col("k")).as("est"),
-        lit(total).as("n"))
+        cm_query(sk, col("k")).as("est"),
+        cm_total(sk).as("n"))
     // effective epsilon of the built sketch: e / width(2^k ≥ e/eps)
     val width = graft.sketch.SketchIO.nextPow2(math.ceil(math.E / 5e-3).toInt)
     val epsEff = math.E / width
@@ -85,8 +83,7 @@ object SketchQueries {
       .agg(cm_sketch(col("lang"), lit(1L), eps = 1e-4).as("shard"))
     val merged = shards.agg(cm_merge(col("shard")).as("sk"))
     val langs = docs.select(col("lang")).distinct()
-    langs.crossJoin(broadcast(merged))
-      .select(col("lang"), cm_query(col("sk"), col("lang")).as("est_count"))
+    langs.select(col("lang"), cm_query(merged.scalar(), col("lang")).as("est_count"))
       .orderBy("lang")
   }
 
@@ -162,11 +159,10 @@ object SketchQueries {
     val keyed = li.select(col("l_partkey").cast("string").as("k"))
     val sk = keyed.agg(cm_sketch(col("k"), lit(1L), eps = 1e-4).as("sk"))
     // probe shape that survives a billion-key side: distinct keys stay a
-    // DataFrame (never funneled through one collect_set row) and the DECODED
-    // sketch rides an executor broadcast — no per-row sketch bytes
-    val probe = cm_probe(sk)
+    // DataFrame (never funneled through one collect_set row) and read the
+    // sketch as a scalar subquery — no per-row sketch bytes
     val candidates = keyed.select(col("k")).distinct()
-      .filter(probe(col("k")) > 45L)
+      .filter(cm_query(sk.scalar(), col("k")) > 45L)
       .select(col("k"))
     // phase 2: exact counts for the surviving candidate set only. The final
     // re-filter on the EXACT count costs nothing (already computed) and
@@ -185,8 +181,7 @@ object SketchQueries {
     val ev = Tables.events(spark, sfDir)
     val sk = ev.agg(cs_sketch(col("event_type"), lit(1L), depth = 5, width = 4096).as("sk"))
     ev.select(col("event_type")).distinct()
-      .crossJoin(broadcast(sk))
-      .select(col("event_type"), cs_query(col("sk"), col("event_type")).as("est_count"))
+      .select(col("event_type"), cs_query(sk.scalar(), col("event_type")).as("est_count"))
       .orderBy("event_type")
   }
 
@@ -247,7 +242,7 @@ object SketchQueries {
       val cmx = graft.sketch.CountMax(4, 4096)
       it.foreach(k => cmx.update(k, 1L))
       Iterator.single(cmx.serialize())
-    }.collect()(0) // ONE serialized-sketch row — the cm_probe bounded collect
+    }.collect()(0) // ONE serialized-sketch row; CountMax has no SQL probe
     val bc = spark.sparkContext
       .broadcast(graft.sketch.CountMax.deserialize(skBytes))
     val estOf = udf((k: String) => bc.value.query(k))
@@ -281,9 +276,8 @@ object SketchQueries {
       col("l_quantity").cast("long").as("w"))
     val sk = keyed.agg(cm_sketch(col("k"), col("w"), eps = 1e-4).as("sk"))
     keyed.select(col("k")).distinct()
-      .crossJoin(broadcast(sk))
       .select(col("k").as("l_returnflag"),
-        cm_query(col("sk"), col("k")).as("est_quantity"))
+        cm_query(sk.scalar(), col("k")).as("est_quantity"))
       .orderBy("l_returnflag")
   }
 
@@ -310,15 +304,13 @@ object SketchQueries {
   def replicatedMinCm(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
     val keyed = ev.select(col("event_type").as("k"))
-    val sks = keyed.agg(
-      cm_sketch(col("k"), lit(1L), eps = 1e-4, seed = 0x11L).as("sk1"),
-      cm_sketch(col("k"), lit(1L), eps = 1e-4, seed = 0x22L).as("sk2"),
-      cm_sketch(col("k"), lit(1L), eps = 1e-4, seed = 0x33L).as("sk3"))
-    keyed.distinct().crossJoin(broadcast(sks))
-      .select(col("k").as("event_type"),
-        least(cm_query(col("sk1"), col("k")),
-          cm_query(col("sk2"), col("k")),
-          cm_query(col("sk3"), col("k"))).as("est_count"))
+    // one frame per replica: a binary pulled out of a multi-column scalar
+    // would reach every row as a fresh copy of the ~1.3 MB blob
+    val replicas = Seq(0x11L, 0x22L, 0x33L).map(seed =>
+      cm_query(keyed.agg(cm_sketch(col("k"), lit(1L), eps = 1e-4, seed = seed))
+        .scalar(), col("k")))
+    keyed.distinct()
+      .select(col("k").as("event_type"), least(replicas: _*).as("est_count"))
       .orderBy("event_type")
   }
 
@@ -339,10 +331,9 @@ object SketchQueries {
     val sk1 = keyed.filter(col("half") === 1)
       .agg(cm_sketch(col("k"), lit(1L), eps = 1e-4).as("sk1"))
     keyed.select(col("k")).distinct()
-      .crossJoin(broadcast(sk0)).crossJoin(broadcast(sk1))
       .select(col("k").as("event_type"),
-        greatest(cm_query(col("sk0"), col("k")),
-          cm_query(col("sk1"), col("k"))).as("est_count"))
+        greatest(cm_query(sk0.scalar(), col("k")),
+          cm_query(sk1.scalar(), col("k"))).as("est_count"))
       .orderBy("event_type")
   }
 
@@ -414,8 +405,8 @@ object SketchQueries {
   def kllPrice(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
     val sk = li.agg(kll_sketch(col("l_extendedprice"), k = 65536).as("sk"))
-    probsDf(spark).crossJoin(broadcast(sk))
-      .select(col("p"), kll_quantile(col("sk"), col("p")).as("quantile_value"))
+    probsDf(spark)
+      .select(col("p"), kll_quantile(sk.scalar(), col("p")).as("quantile_value"))
       .orderBy("p")
   }
 
@@ -423,9 +414,9 @@ object SketchQueries {
   def kllNchars(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val sk = docs.agg(kll_sketch(col("n_chars").cast("double"), k = 65536).as("sk"))
-    probsDf(spark).crossJoin(broadcast(sk))
+    probsDf(spark)
       .select(col("p"),
-        kll_quantile(col("sk"), col("p")).cast("long").as("quantile_value"))
+        kll_quantile(sk.scalar(), col("p")).cast("long").as("quantile_value"))
       .orderBy("p")
   }
 
@@ -434,10 +425,12 @@ object SketchQueries {
     * t-digest accuracy at compression 200 is far tighter). */
   def tdigestPrice(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir).select(col("l_extendedprice").as("x"))
-    val sk = li.agg(tdigest_sketch(col("x"), compression = 200.0).as("sk"),
-      count(lit(1)).as("n"))
-    val withEst = probsDf(spark).crossJoin(broadcast(sk))
-      .select(col("p"), col("n"), tdigest_quantile(col("sk"), col("p")).as("est_q"))
+    // one aggregate, one scalar: the digest and n as a struct
+    val sk = li.agg(struct(tdigest_sketch(col("x"), compression = 200.0).as("sk"),
+      count(lit(1)).as("n"))).scalar()
+    val withEst = probsDf(spark)
+      .select(col("p"), sk.getField("n").as("n"),
+        tdigest_quantile(sk.getField("sk"), col("p")).as("est_q"))
     // exact rank of est_q via a broadcast of the 5 estimates against the data
     val ranks = li.crossJoin(broadcast(withEst))
       .groupBy(col("p"), col("n"), col("est_q"))
@@ -475,7 +468,7 @@ object SketchQueries {
     * Scale shape: one groupBy(user) for the exact census (persisted for
     * its two consumers: the F₂ aggregate and the top-20 funnel), one
     * whole-table sketch aggregate, TakeOrdered top-20, probes against the
-    * broadcast one-row sketch. */
+    * one-row sketch and F₂ as scalar subqueries. */
   def heavyChangeUsers(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       // driver parquet is TIMESTAMP_NTZ; the cast is exact under the
@@ -498,17 +491,17 @@ object SketchQueries {
     val f2 = exact.agg(sum(col("delta") * col("delta")).as("f2"))
     val sk = all.agg(
       cs_sketch(col("user_id").cast("string"), col("w")).as("sk"))
+    // one projection over the top-20 keeps the TakeOrdered funnel: a
+    // separate est_delta column would stay its own Project, and the sort
+    // below the limit would plan as a full global sort
+    val err = cs_query(sk.scalar(), col("user_id")) - col("delta")
     exact
       .select(col("user_id").cast("string").as("user_id"), col("c1"),
         col("c2"), col("delta"), abs(col("delta")).as("delta_abs"))
       .orderBy(desc("delta_abs"), asc("user_id"))
       .limit(20)
-      .crossJoin(broadcast(sk))
-      .crossJoin(broadcast(f2))
-      .withColumn("est_delta", cs_query(col("sk"), col("user_id")))
       .select(col("user_id"), col("c1"), col("c2"), col("delta_abs"),
-        ((col("est_delta") - col("delta")) * (col("est_delta") - col("delta"))
-          * lit(4096L) <= lit(8L) * col("f2")).as("within_bound"))
+        (err * err * lit(4096L) <= lit(8L) * f2.scalar()).as("within_bound"))
       .orderBy(desc("delta_abs"), asc("user_id"))
   }
 

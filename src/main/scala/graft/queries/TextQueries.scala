@@ -826,15 +826,14 @@ object TextQueries {
     // expectedItems would silently saturate to fpp≈1 once the benchmark
     // outgrows it, turning the prefilter into a no-op (review r3 finding)
     val benchCount = math.max(1024L, bench.count())
-    // broadcast as a DECODED filter (the cm_probe pattern — a crossJoin of
-    // the one-row sketch frame would copy the filter bytes into every
-    // probe row, the measured q28 disease)
-    val bloomHit = graft.agg.SketchFunctions.bloom_probe(
-      bench.agg(graft.agg.SketchFunctions.bloom_sketch(col("s"),
-        expectedItems = benchCount, fpp = 0.01).as("bf")))
+    // the filter rides a scalar subquery: every row of a task reads the
+    // same array, where a crossJoin of the one-row sketch frame would copy
+    // the filter bytes into every probe row
+    val bloom = bench.agg(graft.agg.SketchFunctions.bloom_sketch(col("s"),
+      expectedItems = benchCount, fpp = 0.01)).scalar()
     val corpusShingles = docs.filter(col("doc_id") % 20 =!= 0)
       .select(col("doc_id"), col("source"), explode(col("sh")).as("s"))
-      .filter(bloomHit(col("s")))
+      .filter(graft.agg.SketchFunctions.bloom_contains(bloom, col("s")))
     // exact verify of the bloom-positive residue only — no broadcast hint:
     // Spark broadcasts the bench side while it fits and falls back to a
     // shuffle join when a real benchmark suite doesn't
@@ -939,7 +938,7 @@ object TextQueries {
     *    scales.
     *
     * Builder runs one count() action to size the subset divisor (the
-    * accepted cm_probe/metric-gate pattern: a scalar action at plan-build
+    * accepted metric-gate pattern: a scalar action at plan-build
     * time, constant cost at any scale). */
   def fingerprintJoinParity(spark: SparkSession, sfDir: String): DataFrame = {
     val fpUdf = udf((text: String) => TextAnalysis.fingerprints(text))
@@ -1004,7 +1003,7 @@ object TextQueries {
     * the V probabilities ship to executors as a LITERAL MAP inside a
     * codegen'd HOF fold — scoring is then one map-side pass per document
     * with zero extra shuffle (the bounded driver materialization pattern of
-    * the q39 centroids and cm_probe). Two corpus passes total (score, then
+    * the q39 centroids). Two corpus passes total (score, then
     * flag against the mean), CCNet's own train-then-filter shape.
     *
     * Cross-engine determinism: every per-token term is pre-floored to

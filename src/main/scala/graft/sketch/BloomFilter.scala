@@ -105,11 +105,16 @@ object BloomFilter {
 
   def deserialize(bytes: Array[Byte]): BloomFilter = {
     val bb = SketchIO.reader(bytes, SketchIO.MagicBloom, "Bloom")
+    SketchIO.need(bb, 8 + 4 + 8 + 8 + 4, "Bloom")
     val numBits = bb.getLong
     val numHashes = bb.getInt
     val seed = bb.getLong
     val items = bb.getLong
     val nWords = bb.getInt
+    require(numBits >= 64 && numBits <= (1L << 36) && numHashes >= 1 &&
+      numHashes <= 64 && nWords == ((numBits + 63) >>> 6),
+      s"not a valid Bloom sketch: $numBits bits, $numHashes hashes, $nWords words")
+    SketchIO.need(bb, 8L * nWords, "Bloom")
     val words = SketchIO.getLongs(bb, nWords)
     new BloomFilter(numBits, numHashes, seed, words, items)
   }

@@ -167,10 +167,14 @@ object CountMinSketch {
 
   def deserialize(bytes: Array[Byte]): CountMinSketch = {
     val bb = SketchIO.reader(bytes, SketchIO.MagicCM, "Count-Min")
+    SketchIO.need(bb, 4 + 4 + 8 + 8, "Count-Min")
     val depth = bb.getInt
     val width = bb.getInt
     val seed = bb.getLong
     val total = bb.getLong
+    require(depth >= 1 && depth <= 64 && SketchIO.isWidth(width),
+      s"not a valid Count-Min sketch: depth $depth, width $width")
+    SketchIO.need(bb, 8L * depth * width, "Count-Min")
     val counters = SketchIO.getLongs(bb, depth * width)
     new CountMinSketch(depth, width, seed, counters, total)
   }

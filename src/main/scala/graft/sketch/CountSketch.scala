@@ -122,10 +122,14 @@ object CountSketch {
 
   def deserialize(bytes: Array[Byte]): CountSketch = {
     val bb = SketchIO.reader(bytes, Magic, "Count-Sketch")
+    SketchIO.need(bb, 4 + 4 + 8 + 8, "Count-Sketch")
     val depth = bb.getInt
     val width = bb.getInt
     val seed = bb.getLong
     val total = bb.getLong
+    require(depth >= 1 && depth <= 63 && depth % 2 == 1 && SketchIO.isWidth(width),
+      s"not a valid Count-Sketch sketch: depth $depth, width $width")
+    SketchIO.need(bb, 8L * depth * width, "Count-Sketch")
     new CountSketch(depth, width, seed,
       SketchIO.getLongs(bb, depth * width), total)
   }

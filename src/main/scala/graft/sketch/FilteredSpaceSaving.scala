@@ -172,20 +172,24 @@ object FilteredSpaceSaving {
 
   def deserialize(bytes: Array[Byte]): FilteredSpaceSaving = {
     val bb = SketchIO.reader(bytes, Magic, "FSS")
+    SketchIO.need(bb, 4 + 4 + 8 + 8, "FSS")
     val ne = bb.getInt
     val nb = bb.getInt
     val seed = bb.getLong
     val total = bb.getLong
+    require(ne >= 1 && ne <= (1 << 22) && SketchIO.isWidth(nb),
+      s"not a valid FSS sketch: $ne entries, $nb buckets")
+    SketchIO.need(bb, 8L * nb + 4, "FSS")
     val alpha = SketchIO.getLongs(bb, nb)
     val n = bb.getInt
+    require(n >= 0, s"not a valid FSS sketch: $n keys")
+    SketchIO.need(bb, 20L * n, "FSS")
     val f = new mutable.HashMap[String, Long]
     val e = new mutable.HashMap[String, Long]
     var i = 0
     while (i < n) {
-      val klen = bb.getInt
-      val kb = new Array[Byte](klen)
-      bb.get(kb)
-      val key = new String(kb, java.nio.charset.StandardCharsets.UTF_8)
+      val key = SketchIO.getString(bb, "FSS")
+      SketchIO.need(bb, 16, "FSS")
       f(key) = bb.getLong
       e(key) = bb.getLong
       i += 1

@@ -96,8 +96,11 @@ object HyperLogLog {
 
   def deserialize(bytes: Array[Byte]): HyperLogLog = {
     val bb = SketchIO.reader(bytes, SketchIO.MagicHLL, "HyperLogLog")
+    SketchIO.need(bb, 4 + 8, "HyperLogLog")
     val p = bb.getInt
     val seed = bb.getLong
+    require(p >= 4 && p <= 18, s"not a valid HyperLogLog sketch: precision $p")
+    SketchIO.need(bb, 1L << p, "HyperLogLog")
     val regs = new Array[Byte](1 << p)
     bb.get(regs)
     new HyperLogLog(p, seed, regs)

@@ -108,17 +108,20 @@ object MisraGries {
 
   def deserialize(bytes: Array[Byte]): MisraGries = {
     val bb = SketchIO.reader(bytes, Magic, "Misra-Gries")
+    SketchIO.need(bb, 4 + 8 + 8 + 4, "Misra-Gries")
     val capacity = bb.getInt
     val total = bb.getLong
     val dec = bb.getLong
     val n = bb.getInt
+    require(capacity >= 1 && capacity <= (1 << 22) && n >= 0,
+      s"not a valid Misra-Gries sketch: capacity $capacity, $n keys")
+    SketchIO.need(bb, 12L * n, "Misra-Gries")
     val m = new mutable.HashMap[String, Long]
     var i = 0
     while (i < n) {
-      val klen = bb.getInt
-      val kb = new Array[Byte](klen)
-      bb.get(kb)
-      m(new String(kb, java.nio.charset.StandardCharsets.UTF_8)) = bb.getLong
+      val key = SketchIO.getString(bb, "Misra-Gries")
+      SketchIO.need(bb, 8, "Misra-Gries")
+      m(key) = bb.getLong
       i += 1
     }
     new MisraGries(capacity, m, total, dec)

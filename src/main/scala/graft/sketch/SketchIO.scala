@@ -57,18 +57,21 @@ object SketchIO {
     out
   }
 
-  def putString(bb: ByteBuffer, s: String): Unit = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    bb.putInt(b.length)
-    bb.put(b)
-  }
-
-  def getString(bb: ByteBuffer): String = {
+  /** A length-prefixed UTF-8 key of a `what` sketch; the length is checked
+    * against the bytes left before it is allocated. */
+  def getString(bb: ByteBuffer, what: String): String = {
+    need(bb, 4, what)
     val n = bb.getInt
+    require(n >= 0, s"not a valid $what sketch: key of $n bytes")
+    need(bb, n, what)
     val b = new Array[Byte](n)
     bb.get(b)
     new String(b, java.nio.charset.StandardCharsets.UTF_8)
   }
+
+  /** A counter-matrix width as [[nextPow2]] produces it: a power of two in
+    * [1, 2^30]. */
+  def isWidth(w: Int): Boolean = w > 0 && w <= (1 << 30) && (w & (w - 1)) == 0
 
   def nextPow2(n: Int): Int = {
     require(n > 0 && n <= (1 << 30), s"size out of range: $n")

@@ -207,22 +207,25 @@ object TopKSketch {
 
   def deserialize(bytes: Array[Byte]): TopKSketch = {
     val bb = SketchIO.reader(bytes, SketchIO.MagicTopK, "TopK")
+    SketchIO.need(bb, 4 + 4, "TopK")
     val capacity = bb.getInt
     val cmLen = bb.getInt
+    require(capacity >= 1 && capacity <= (1 << 22) && cmLen >= 0,
+      s"not a valid TopK sketch: capacity $capacity, Count-Min of $cmLen bytes")
+    SketchIO.need(bb, cmLen + 4L, "TopK")
     val cmBytes = new Array[Byte](cmLen)
     bb.get(cmBytes)
     val cm = CountMinSketch.deserialize(cmBytes)
     val n = bb.getInt
+    require(n >= 0 && n <= capacity, s"not a valid TopK sketch: $n of $capacity keys")
     val sk = new TopKSketch(capacity, cm, new Array[String](capacity),
       new Array[Long](capacity), 0, new mutable.LongMap[Int](capacity * 2),
       new Array[Long](capacity))
     var i = 0
     while (i < n) {
-      val klen = bb.getInt
-      val kb = new Array[Byte](klen)
-      bb.get(kb)
+      val key = SketchIO.getString(bb, "TopK")
+      SketchIO.need(bb, 8, "TopK")
       val est = bb.getLong
-      val key = new String(kb, java.nio.charset.StandardCharsets.UTF_8)
       sk.heapInsert(key, Hash128.ofString(key, cm.seed).h1, est)
       i += 1
     }

@@ -107,8 +107,8 @@ private[graft] object SliceReplay {
 
   /** Sink for COMPLETE-mode aggregates whose re-emission is bounded by
     * construction (one sketch-sized row, or the k-row top set): each
-    * micro-batch's emission is captured via a driver collect — the
-    * cm_probe bounded-materialization discipline — and the LAST emission
+    * micro-batch's emission is captured via a bounded driver collect, and
+    * the LAST emission
     * (complete mode's final merged state) is handed back as a local
     * one-partition frame. Replaces the per-micro-batch parquet OVERWRITE +
     * read-back sink, whose commit jobs were pure fixed cost: one write job

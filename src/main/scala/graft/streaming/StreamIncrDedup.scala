@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.agg.SketchFunctions.bloom_probe
+import graft.agg.SketchFunctions.bloom_contains
 import graft.queries.{IncrementalDedup, Tables}
 
 /**
@@ -64,7 +64,8 @@ object StreamIncrDedup {
       (lit(BaseTus) + col("doc_id") * 1000L).as("tus"))
     val schema = SliceReplay.stage(spark, staged, slices, root)
 
-    val probe = bloom_probe(spark.read.parquet(s"$dir/bloom"))
+    // the one-row filter, re-read by its scalar subquery each micro-batch
+    val bloom = spark.read.parquet(s"$dir/bloom").scalar()
     // persisted (round 7): the stream-static join re-evaluates the static
     // side EVERY micro-batch — uncached, each batch re-scanned the index
     // parquet and re-ran the distinct shuffle; the cached frame is the
@@ -74,8 +75,8 @@ object StreamIncrDedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
-    val negatives = in.filter(!probe(col("h")))
-    val rescued = in.filter(probe(col("h")))
+    val negatives = in.filter(!bloom_contains(bloom, col("h")))
+    val rescued = in.filter(bloom_contains(bloom, col("h")))
       .join(index, Seq("h"), "left_outer") // stream-static, per-batch
       .filter(col("in_base").isNull)
       .select(col("h"), col("tus"))

@@ -105,8 +105,7 @@ object StreamSketch {
     lastKllRunBatches = SliceReplay.runToCompletion(q).batches
     val sk = cap.result(spark)
     Seq(0.01, 0.25, 0.5, 0.75, 0.99).toDF("p")
-      .crossJoin(broadcast(sk))
-      .select(col("p"), kll_quantile(col("sk"), col("p")).as("quantile_value"))
+      .select(col("p"), kll_quantile(sk.scalar(), col("p")).as("quantile_value"))
       .orderBy("p")
   }
 
@@ -146,14 +145,13 @@ object StreamSketch {
         .start()
     }
     lastHllRunBatches = SliceReplay.runToCompletion(q).batches
-    val sk = cap.result(spark)
+    val sk = cap.result(spark).scalar()
     spark.read.schema(schema).parquet(s"$root/in")
       .agg(countDistinct(col("k")).as("exact_users"))
-      .crossJoin(broadcast(sk))
       .select(col("exact_users"),
-        (abs(hll_count(col("sk")).cast("double")
+        (abs(hll_count(sk).cast("double")
           - col("exact_users").cast("double")) <=
-          greatest(lit(2.0), lit(3.0) * hll_stderr(col("sk"))
+          greatest(lit(2.0), lit(3.0) * hll_stderr(sk)
             * col("exact_users").cast("double"))).as("hll_within_bound"))
   }
 

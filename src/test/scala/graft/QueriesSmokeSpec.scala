@@ -85,9 +85,8 @@ class QueriesSmokeSpec extends SparkTestBase {
     val keyed = graft.queries.Tables.events(spark, sf("sf0.01"))
       .select(col("user_id").cast("string").as("k"), lit(1L).as("w"))
     val sk = keyed.agg(cm_sketch(col("k"), col("w"), eps = 0.1, delta = 0.01).as("sk"))
-    val probe = cm_probe(sk)
     val over = keyed.groupBy(col("k")).agg(count(lit(1)).as("t"))
-      .select((probe(col("k")) > col("t")).cast("long").as("o"))
+      .select((cm_query(sk.scalar(), col("k")) > col("t")).cast("long").as("o"))
       .agg(sum(col("o"))).head().getLong(0)
     assert(over > 0, "width-32 CM over 150 keys should collide")
     spark.catalog.clearCache()

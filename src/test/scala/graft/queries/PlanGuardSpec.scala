@@ -251,7 +251,8 @@ class PlanGuardSpec extends SparkTestBase {
     // the change census must funnel through per-partition heaps, never a
     // full global sort of the per-user frame
     assert(p.contains("TakeOrderedAndProject"), p)
-    // the one-row difference sketch and F2 scalar join as broadcasts
+    // the one-row difference sketch and F2 are read as scalar subqueries;
+    // nothing shuffle-joins
     assert(!p.contains("SortMergeJoin"), p)
     spark.catalog.clearCache()
   }
@@ -367,12 +368,14 @@ class PlanGuardSpec extends SparkTestBase {
 
   test("q102 bloom runtime filter sits below the join; never cartesian") {
     val p = plan("q102_bloom_join")
-    // the bloom probe (the broadcast-decoded filter applied to the fact
-    // scan) must execute BELOW the exact equi-join — executed plans print
-    // top-down, so its Filter line must come after the equi-join's
+    // the bloom probe (the filter, read as a scalar subquery, applied to
+    // the fact scan) must execute BELOW the exact equi-join — executed
+    // plans print top-down, so its Filter line must come after the
+    // equi-join's
     val joinIdx = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
       .map(p.indexOf).filter(_ >= 0).minOption.getOrElse(-1)
-    val probeIdx = p.indexOf("UDF(cast(l_orderkey")
+    val probeIdx = """UDF\(Subquery subquery#\d+, \[id=#\d+\], cast\(l_orderkey""".r
+      .findFirstMatchIn(p).map(_.start).getOrElse(-1)
     assert(joinIdx >= 0, p)
     assert(probeIdx > joinIdx, s"bloom probe must be under the join:\n$p")
     assert(!p.contains("CartesianProduct"), p)
@@ -403,6 +406,32 @@ class PlanGuardSpec extends SparkTestBase {
     assert(q112.size === 1, "q112's bloom_contains must read a scalar subquery")
     assert(q112.head.plan.output.map(_.name) === Seq("sk"))
     spark.catalog.clearCache()
+  }
+
+  test("no sketch blob rides a join: one-row sketches are probed as scalar subqueries") {
+    // a cross join of a one-row sketch frame copies the blob into every
+    // probe row; each site below reads it through `.scalar()` instead, so
+    // no nested-loop or cartesian join, in the main plan or a subquery's,
+    // may output a binary column
+    object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (q <- Seq("q01_cm_point_event_type", "q03_cm_bound_partkeys",
+        "q04_cm_salted_lang", "q08_kll_price", "q09_kll_nchars",
+        "q10_tdigest_price", "q28_filtered_hh", "q29_cs_point",
+        "q34_cm_weighted", "q40_bound_audit", "q42_replicated_min",
+        "q43_halfsketch_max", "q59_contamination", "q60_cm_colliding",
+        "q80_incremental_dedup", "q82_stream_incr_dedup", "q85_heavy_change",
+        "q90_stream_kll", "q102_bloom_join", "q105_stream_hll")) {
+      val p = graft.SparkEntry.queries(q)(spark, sf("sf0.001"))
+        .queryExecution.executedPlan
+      val carriers = Walk.collectWithSubqueries(p) {
+        case j @ (_: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec |
+            _: org.apache.spark.sql.execution.joins.CartesianProductExec)
+            if j.output.exists(_.dataType == org.apache.spark.sql.types.BinaryType) =>
+          j.nodeName
+      }
+      assert(carriers.isEmpty, s"$q: a sketch blob rides ${carriers.mkString(", ")}:\n$p")
+      spark.catalog.clearCache()
+    }
   }
 
   test("q103 star join broadcasts the segment dimension and funnels top-10 through TakeOrdered") {
