@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Encoder, Encoders, GraftBridge, SparkSession, SparkSessionExtensions, functions}
+import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.types.Decimal
 import graft.agg._
 import graft.agg.SketchAggregators._
@@ -21,13 +21,15 @@ import graft.sketch._
  *
  * and [[GraftExtensions.install]] registers the same names into an
  * already-running session. The table holds
- *  - the udaf builds and merges under their Column-API names with library
+ *  - the builds and merges under their Column-API names with library
  *    defaults (`cm_sketch(key, weight)`, `hll_sketch(key)`,
- *    `kll_merge(sketch)`, …),
- *  - the native builds `cm_sketch_fast(key, weight[, eps[, delta[, seed]]])`,
+ *    `kll_merge(sketch)`, …), whose arguments are cast as the Column API
+ *    casts them,
+ *  - the builds `cm_sketch_fast(key, weight[, eps[, delta[, seed]]])`,
  *    `topk_sketch_fast(key, weight[, capacity[, eps[, delta[, seed]]]])` and
  *    `hll_sketch_fast(key[, p[, seed]])`, whose trailing arguments are
- *    foldable numeric literals,
+ *    foldable numeric literals and whose key must be a string and weight
+ *    integral,
  *  - every probe (`cm_query`, `bloom_contains`, `topk_entries`, …); the five
  *    native probes also answer to a `*_sketch` twin name
  *    (`cm_query_sketch`, …), built by the same builder,
@@ -63,26 +65,26 @@ object GraftExtensions {
   def cmSketchFast(eps: Double = 1e-4, delta: Double = 0.01,
       seed: Long = CountMinSketch.DefaultSeed): Builder = args => {
     val fn = "cm_sketch_fast"
-    NativeSketchAgg(CmKernel(arg(fn, args, 2, "eps").fold(eps)(_.doubleValue),
+    NativeSketchAgg(CmAggregator(arg(fn, args, 2, "eps").fold(eps)(_.doubleValue),
       arg(fn, args, 3, "delta").fold(delta)(_.doubleValue),
-      arg(fn, args, 4, "seed").fold(seed)(_.longValue)), args.take(2))
+      arg(fn, args, 4, "seed").fold(seed)(_.longValue)), args.take(2), fn, coerce = false)
   }
 
   /** `topk_sketch_fast`; literal arguments override these defaults. */
   def topkSketchFast(capacity: Int = 4096, eps: Double = 1e-4, delta: Double = 0.01,
       seed: Long = CountMinSketch.DefaultSeed): Builder = args => {
     val fn = "topk_sketch_fast"
-    NativeSketchAgg(TopKKernel(arg(fn, args, 2, "capacity").fold(capacity)(_.intValue),
+    NativeSketchAgg(TopKAggregator(arg(fn, args, 2, "capacity").fold(capacity)(_.intValue),
       arg(fn, args, 3, "eps").fold(eps)(_.doubleValue),
       arg(fn, args, 4, "delta").fold(delta)(_.doubleValue),
-      arg(fn, args, 5, "seed").fold(seed)(_.longValue)), args.take(2))
+      arg(fn, args, 5, "seed").fold(seed)(_.longValue)), args.take(2), fn, coerce = false)
   }
 
   /** `hll_sketch_fast`; literal arguments override these defaults. */
   def hllSketchFast(p: Int = 14, seed: Long = HyperLogLog.DefaultSeed): Builder = args => {
     val fn = "hll_sketch_fast"
-    NativeSketchAgg(HllKernel(arg(fn, args, 1, "p").fold(p)(_.intValue),
-      arg(fn, args, 2, "seed").fold(seed)(_.longValue)), args.take(1))
+    NativeSketchAgg(HllAggregator(arg(fn, args, 1, "p").fold(p)(_.intValue),
+      arg(fn, args, 2, "seed").fold(seed)(_.longValue)), args.take(1), fn, coerce = false)
   }
 
   private type Description = (FunctionIdentifier, ExpressionInfo, Builder)
@@ -109,34 +111,27 @@ object GraftExtensions {
   private def udf(name: String, f: UserDefinedFunction, usage: String, arity: Int): Description =
     fn(name, f.getClass, usage, arity to arity)(GraftBridge.udf(f.withName(name), _))
 
-  /** A udaf build or merge with library defaults. */
-  private def udaf[IN](name: String, agg: => Aggregator[IN, _, Array[Byte]], in: Encoder[IN],
-      usage: String, arity: Int): Description =
-    fn(name, agg.getClass, usage, arity to arity)(
-      GraftBridge.udaf(functions.udaf(agg, in).withName(name), _))
-
-  private val keyWeight = Encoders.product[(String, Long)]
+  /** A build or merge with library defaults, named by its SQL name. */
+  private def agg[S <: Mergeable[S]](name: String, kernel: SketchKernel[S], usage: String)
+      : Description = {
+    val arity = kernel.inputTypes.length
+    fn(name, kernel.getClass, usage, arity to arity)(NativeSketchAgg(kernel, _, name))
+  }
 
   /** Every SQL name of the library, with its builder. */
   val functionDescriptions: Seq[Description] = Seq(
-    udaf("cm_sketch", new CmAggregator(1e-4, 0.01, CountMinSketch.DefaultSeed), keyWeight,
-      "(key, weight)", 2),
-    udaf("cm_merge", new CmMergeAggregator, Encoders.BINARY, "(sketch)", 1),
-    udaf("cm_topk", new TopKAggregator(1024, 1e-4, 0.01, CountMinSketch.DefaultSeed), keyWeight,
-      "(key, weight)", 2),
-    udaf("hll_sketch", new HllAggregator(14, HyperLogLog.DefaultSeed), Encoders.STRING,
-      "(key)", 1),
-    udaf("hll_merge", new HllMergeAggregator, Encoders.BINARY, "(sketch)", 1),
-    udaf("bloom_sketch", new BloomAggregator(1 << 20, 0.01, BloomFilter.DefaultSeed),
-      Encoders.STRING, "(key)", 1),
-    udaf("kll_sketch", new KllAggregator(200, KllSketch.DefaultSeed), Encoders.DOUBLE, "(x)", 1),
-    udaf("kll_merge", new KllMergeAggregator, Encoders.BINARY, "(sketch)", 1),
-    udaf("tdigest_sketch", new TDigestAggregator(100.0), Encoders.DOUBLE, "(x)", 1),
-    udaf("cs_sketch", new CsAggregator(5, 4096, CountSketch.DefaultSeed), keyWeight,
-      "(key, weight)", 2),
-    udaf("mg_sketch", new MgAggregator(1024), keyWeight, "(key, weight)", 2),
-    udaf("fss_sketch", new FssAggregator(1024, 4096, FilteredSpaceSaving.DefaultSeed),
-      keyWeight, "(key, weight)", 2),
+    agg("cm_sketch", CmAggregator(1e-4, 0.01, CountMinSketch.DefaultSeed), "(key, weight)"),
+    agg("cm_merge", CmMergeAggregator(), "(sketch)"),
+    agg("cm_topk", TopKAggregator(1024, 1e-4, 0.01, CountMinSketch.DefaultSeed), "(key, weight)"),
+    agg("hll_sketch", HllAggregator(14, HyperLogLog.DefaultSeed), "(key)"),
+    agg("hll_merge", HllMergeAggregator(), "(sketch)"),
+    agg("bloom_sketch", BloomAggregator(1 << 20, 0.01, BloomFilter.DefaultSeed), "(key)"),
+    agg("kll_sketch", KllAggregator(200, KllSketch.DefaultSeed), "(x)"),
+    agg("kll_merge", KllMergeAggregator(), "(sketch)"),
+    agg("tdigest_sketch", TDigestAggregator(100.0), "(x)"),
+    agg("cs_sketch", CsAggregator(5, 4096, CountSketch.DefaultSeed), "(key, weight)"),
+    agg("mg_sketch", MgAggregator(1024), "(key, weight)"),
+    agg("fss_sketch", FssAggregator(1024, 4096, FilteredSpaceSaving.DefaultSeed), "(key, weight)"),
     fn("cm_sketch_fast", classOf[NativeSketchAgg[_]],
       "(key, weight[, eps[, delta[, seed]]])", 2 to 5)(cmSketchFast()),
     fn("topk_sketch_fast", classOf[NativeSketchAgg[_]],

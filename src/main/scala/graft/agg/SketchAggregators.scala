@@ -1,14 +1,21 @@
 package graft.agg
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sketch._
 
 /**
- * Spark typed [[Aggregator]]s wrapping the pure-JVM sketch kernels.
+ * The sketch kernels behind every build and merge aggregate, each run by
+ * the one native aggregate, [[NativeSketchAgg]].
  *
- * Execution model: Catalyst runs these as ObjectHashAggregate with automatic
- * partial aggregation — `reduce` consumes rows partition-locally (the
+ * Execution model: Catalyst runs them as ObjectHashAggregate with automatic
+ * partial aggregation — `update` consumes rows partition-locally (the
  * reference's single-threaded update loop,
  * /root/reference/Simulator/Program.cs:439-474), then only the O(sketch)
  * buffers cross the shuffle and `merge` folds them. That partial→final split
@@ -16,222 +23,185 @@ import graft.sketch._
  * scale: shuffle bytes are bounded by sketch size × partitions, independent
  * of row count or key cardinality.
  *
- * Buffers are the kernel objects themselves via Kryo encoders — mutated in
- * place per partition, serialized only at the exchange. Null keys are
- * skipped (SQL-aggregate convention).
+ * A buffer is the kernel's sketch object, mutated in place per partition.
+ * It crosses the exchange (and a streaming state store) in the sketch's own
+ * binary layout, the same bytes a finished build returns; a buffer in any
+ * other form, such as a Kryo-encoded one, fails to decode with the sketch's
+ * typed `IllegalArgumentException`. A string key is hashed from its
+ * `UTF8String` bytes in place, with the same hash stream as the kernel's
+ * `String` update, so every blob is byte-identical to a kernel-only build
+ * (GoldenBytesSpec).
+ *
+ * Input rules: the analyzer casts the arguments to [[SketchKernel.inputTypes]]
+ * (an int key becomes a string, a string x a double). A null key or x is
+ * skipped; a null weight adds 0, and its key still reaches the kernel, so
+ * it can become a TopK, Misra-Gries or FSS candidate. A merge skips a null
+ * sketch and gives null when it saw none.
+ *
+ * In a plan, a Column-API call prints as the kernel's class name,
+ * lower-cased (`cmaggregator(`), and a SQL call as the name it was called
+ * by (`cm_sketch(`, `cm_sketch_fast(`).
  */
 object SketchAggregators {
 
+  /** What [[NativeSketchAgg]] needs from a sketch besides its own merge
+    * and binary layout: a fresh buffer, the per-row update off the input
+    * row, and the decoder. An abstract class, not a trait: the per-row
+    * `update` call sees every kernel in one JVM, and a megamorphic virtual
+    * call is cheaper than an interface call. */
+  sealed abstract class SketchKernel[S <: Mergeable[S]](read: Array[Byte] => S)
+      extends Serializable {
+    /** The argument types the analyzer casts the arguments to. */
+    def inputTypes: Seq[DataType]
+    def create(): S
+    /** Folds one row into `s` and returns the buffer. */
+    def update(s: S, row: InternalRow, in: Args): S
+    final def deserialize(bytes: Array[Byte]): S = read(bytes)
+    /** The name a Column-API call prints by, as Spark names a udaf. */
+    final def name: String = getClass.getSimpleName.toLowerCase(Locale.ROOT)
+  }
+
+  /** A build over a string key. */
+  sealed abstract class KeyKernel[S <: Mergeable[S]](read: Array[Byte] => S)
+      extends SketchKernel[S](read) {
+    final def inputTypes: Seq[DataType] = Seq(StringType)
+    def add(s: S, key: UTF8String): Unit
+    final def update(s: S, row: InternalRow, in: Args): S = {
+      val key = in.utf8(row, 0)
+      if (key != null) add(s, key)
+      s
+    }
+  }
+
+  /** A build over a string key and a long weight. */
+  sealed abstract class KeyWeightKernel[S <: Mergeable[S]](read: Array[Byte] => S)
+      extends SketchKernel[S](read) {
+    final def inputTypes: Seq[DataType] = Seq(StringType, LongType)
+    def add(s: S, key: UTF8String, weight: Long): Unit
+    final def update(s: S, row: InternalRow, in: Args): S = {
+      val weight = if (in.isNull(row, 1)) 0L else in.long(row, 1)
+      val key = in.utf8(row, 0)
+      if (key != null) add(s, key, weight)
+      s
+    }
+  }
+
+  /** A build over doubles. */
+  sealed abstract class DoubleKernel[S <: Mergeable[S]](read: Array[Byte] => S)
+      extends SketchKernel[S](read) {
+    final def inputTypes: Seq[DataType] = Seq(DoubleType)
+    def add(s: S, x: Double): Unit
+    final def update(s: S, row: InternalRow, in: Args): S = {
+      if (!in.isNull(row, 0)) add(s, in.double(row, 0))
+      s
+    }
+  }
+
+  /** A re-merge of finished sketches (checkpoint shards, two-level
+    * aggregation); its buffer is null until the first sketch. */
+  sealed abstract class MergeKernel[S <: Mergeable[S]](read: Array[Byte] => S)
+      extends SketchKernel[S](read) {
+    final def inputTypes: Seq[DataType] = Seq(BinaryType)
+    final def create(): S = null.asInstanceOf[S]
+    final def update(s: S, row: InternalRow, in: Args): S = {
+      val bytes = in.binary(row, 0)
+      if (bytes == null) s
+      else if (s == null) deserialize(bytes)
+      else s.merge(deserialize(bytes))
+    }
+  }
+
   // ---- Count-Min over (key, weight)
 
-  final class CmAggregator(eps: Double, delta: Double, seed: Long)
-      extends Aggregator[(String, Long), CountMinSketch, Array[Byte]] {
-    override def zero: CountMinSketch = CountMinSketch.fromErrorBounds(eps, delta, seed)
-    override def reduce(b: CountMinSketch, a: (String, Long)): CountMinSketch = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: CountMinSketch, y: CountMinSketch): CountMinSketch = x.merge(y)
-    override def finish(b: CountMinSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[CountMinSketch] = Encoders.kryo[CountMinSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class CmAggregator(eps: Double, delta: Double, seed: Long)
+      extends KeyWeightKernel[CountMinSketch](CountMinSketch.deserialize) {
+    def create(): CountMinSketch = CountMinSketch.fromErrorBounds(eps, delta, seed)
+    def add(cm: CountMinSketch, key: UTF8String, weight: Long): Unit =
+      cm.updateRaw(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed), weight)
   }
 
-  /** Re-merge pre-built CM sketches (checkpoint shards, two-level agg). */
-  final class CmMergeAggregator
-      extends Aggregator[Array[Byte], Option[CountMinSketch], Array[Byte]] {
-    override def zero: Option[CountMinSketch] = None
-    override def reduce(b: Option[CountMinSketch], a: Array[Byte]): Option[CountMinSketch] = {
-      if (a == null) b
-      else b match {
-        case None => Some(CountMinSketch.deserialize(a))
-        case Some(s) => Some(s.merge(CountMinSketch.deserialize(a)))
-      }
-    }
-    override def merge(x: Option[CountMinSketch], y: Option[CountMinSketch]) = (x, y) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (a, None) => a
-      case (None, b) => b
-    }
-    override def finish(b: Option[CountMinSketch]): Array[Byte] =
-      b.map(_.serialize()).orNull
-    override def bufferEncoder: Encoder[Option[CountMinSketch]] =
-      Encoders.kryo[Option[CountMinSketch]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  final case class CmMergeAggregator()
+      extends MergeKernel[CountMinSketch](CountMinSketch.deserialize)
 
   // ---- Heavy hitters: CM + candidate heap
 
-  final class TopKAggregator(capacity: Int, eps: Double, delta: Double, seed: Long)
-      extends Aggregator[(String, Long), TopKSketch, Array[Byte]] {
-    override def zero: TopKSketch = TopKSketch(capacity, eps, delta, seed)
-    override def reduce(b: TopKSketch, a: (String, Long)): TopKSketch = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: TopKSketch, y: TopKSketch): TopKSketch = x.merge(y)
-    override def finish(b: TopKSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[TopKSketch] = Encoders.kryo[TopKSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  /** A key becomes a `java.lang.String` only on the cold path, when it
+    * enters or displaces a heap candidate; the thunk runs inside
+    * `updateRaw`, before Spark can reuse the row buffer. */
+  final case class TopKAggregator(capacity: Int, eps: Double, delta: Double, seed: Long)
+      extends KeyWeightKernel[TopKSketch](TopKSketch.deserialize) {
+    def create(): TopKSketch = TopKSketch(capacity, eps, delta, seed)
+    def add(t: TopKSketch, key: UTF8String, weight: Long): Unit =
+      t.updateRaw(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed), weight, () => key.toString)
   }
 
-  // ---- HyperLogLog distinct count
+  // ---- HyperLogLog distinct count: XXH64 over the UTF-8 bytes, as `add(String)`
 
-  final class HllAggregator(p: Int, seed: Long)
-      extends Aggregator[String, HyperLogLog, Array[Byte]] {
-    override def zero: HyperLogLog = HyperLogLog(p, seed)
-    override def reduce(b: HyperLogLog, a: String): HyperLogLog = {
-      if (a != null) b.add(a)
-      b
-    }
-    override def merge(x: HyperLogLog, y: HyperLogLog): HyperLogLog = x.merge(y)
-    override def finish(b: HyperLogLog): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[HyperLogLog] = Encoders.kryo[HyperLogLog]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class HllAggregator(p: Int, seed: Long)
+      extends KeyKernel[HyperLogLog](HyperLogLog.deserialize) {
+    def create(): HyperLogLog = HyperLogLog(p, seed)
+    def add(h: HyperLogLog, key: UTF8String): Unit =
+      h.addHash(XXH64.hashUnsafeBytes(key.getBaseObject, key.getBaseOffset, key.numBytes, seed))
   }
 
-  /** Merge pre-built KLL shards (binary → binary) — the re-aggregation
-    * face: per-tenant/per-partition sketches built once, any rollup served
-    * by merging finished state with no rescan (the checkpoint
-    * `mergeShards` path surfaced as a grouped SQL aggregate). */
-  final class KllMergeAggregator
-      extends Aggregator[Array[Byte], Option[KllSketch], Array[Byte]] {
-    override def zero: Option[KllSketch] = None
-    override def reduce(b: Option[KllSketch], a: Array[Byte]): Option[KllSketch] = {
-      if (a == null) b
-      else b match {
-        case None => Some(KllSketch.deserialize(a))
-        case Some(s) => Some(s.merge(KllSketch.deserialize(a)))
-      }
-    }
-    override def merge(x: Option[KllSketch], y: Option[KllSketch]): Option[KllSketch] = (x, y) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (a, None) => a
-      case (None, b) => b
-    }
-    override def finish(b: Option[KllSketch]): Array[Byte] =
-      b.map(_.serialize()).orNull
-    override def bufferEncoder: Encoder[Option[KllSketch]] =
-      Encoders.kryo[Option[KllSketch]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Merge pre-built HLL shards (binary → binary) — the cardinality
-    * tier's re-aggregation face beside [[KllMergeAggregator]]: register-max
-    * is idempotent, so overlapping shard sets (sliding windows, rollups)
-    * merge without double-counting and without rescanning rows. */
-  final class HllMergeAggregator
-      extends Aggregator[Array[Byte], Option[HyperLogLog], Array[Byte]] {
-    override def zero: Option[HyperLogLog] = None
-    override def reduce(b: Option[HyperLogLog], a: Array[Byte]): Option[HyperLogLog] = {
-      if (a == null) b
-      else b match {
-        case None => Some(HyperLogLog.deserialize(a))
-        case Some(s) => Some(s.merge(HyperLogLog.deserialize(a)))
-      }
-    }
-    override def merge(x: Option[HyperLogLog], y: Option[HyperLogLog]): Option[HyperLogLog] = (x, y) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (a, None) => a
-      case (None, b) => b
-    }
-    override def finish(b: Option[HyperLogLog]): Array[Byte] =
-      b.map(_.serialize()).orNull
-    override def bufferEncoder: Encoder[Option[HyperLogLog]] =
-      Encoders.kryo[Option[HyperLogLog]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  /** Register-max is idempotent, so overlapping shard sets (sliding
+    * windows, rollups) merge without double-counting. */
+  final case class HllMergeAggregator()
+      extends MergeKernel[HyperLogLog](HyperLogLog.deserialize)
 
   // ---- Bloom filter build
 
-  final class BloomAggregator(expectedItems: Long, fpp: Double, seed: Long)
-      extends Aggregator[String, BloomFilter, Array[Byte]] {
-    override def zero: BloomFilter = BloomFilter.fromExpected(expectedItems, fpp, seed)
-    override def reduce(b: BloomFilter, a: String): BloomFilter = {
-      if (a != null) b.add(a)
-      b
-    }
-    override def merge(x: BloomFilter, y: BloomFilter): BloomFilter = x.merge(y)
-    override def finish(b: BloomFilter): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[BloomFilter] = Encoders.kryo[BloomFilter]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class BloomAggregator(expectedItems: Long, fpp: Double, seed: Long)
+      extends KeyKernel[BloomFilter](BloomFilter.deserialize) {
+    def create(): BloomFilter = BloomFilter.fromExpected(expectedItems, fpp, seed)
+    def add(b: BloomFilter, key: UTF8String): Unit =
+      b.addRaw(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed))
   }
 
   // ---- Count-Sketch over (key, weight)
 
-  final class CsAggregator(depth: Int, width: Int, seed: Long)
-      extends Aggregator[(String, Long), CountSketch, Array[Byte]] {
-    override def zero: CountSketch = CountSketch(depth, width, seed)
-    override def reduce(b: CountSketch, a: (String, Long)): CountSketch = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: CountSketch, y: CountSketch): CountSketch = x.merge(y)
-    override def finish(b: CountSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[CountSketch] = Encoders.kryo[CountSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class CsAggregator(depth: Int, width: Int, seed: Long)
+      extends KeyWeightKernel[CountSketch](CountSketch.deserialize) {
+    def create(): CountSketch = CountSketch(depth, width, seed)
+    def add(cs: CountSketch, key: UTF8String, weight: Long): Unit =
+      cs.update(Hash128(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed)), weight)
   }
 
   // ---- Misra-Gries frequent items
 
-  final class MgAggregator(capacity: Int)
-      extends Aggregator[(String, Long), MisraGries, Array[Byte]] {
-    override def zero: MisraGries = MisraGries(capacity)
-    override def reduce(b: MisraGries, a: (String, Long)): MisraGries = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: MisraGries, y: MisraGries): MisraGries = x.merge(y)
-    override def finish(b: MisraGries): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[MisraGries] = Encoders.kryo[MisraGries]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class MgAggregator(capacity: Int)
+      extends KeyWeightKernel[MisraGries](MisraGries.deserialize) {
+    def create(): MisraGries = MisraGries(capacity)
+    def add(m: MisraGries, key: UTF8String, weight: Long): Unit = m.update(key.toString, weight)
   }
 
   // ---- Filtered Space-Saving
 
-  final class FssAggregator(numEntries: Int, numBuckets: Int, seed: Long)
-      extends Aggregator[(String, Long), FilteredSpaceSaving, Array[Byte]] {
-    override def zero: FilteredSpaceSaving =
-      FilteredSpaceSaving(numEntries, numBuckets, seed)
-    override def reduce(b: FilteredSpaceSaving, a: (String, Long)): FilteredSpaceSaving = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: FilteredSpaceSaving, y: FilteredSpaceSaving) = x.merge(y)
-    override def finish(b: FilteredSpaceSaving): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[FilteredSpaceSaving] =
-      Encoders.kryo[FilteredSpaceSaving]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class FssAggregator(numEntries: Int, numBuckets: Int, seed: Long)
+      extends KeyWeightKernel[FilteredSpaceSaving](FilteredSpaceSaving.deserialize) {
+    def create(): FilteredSpaceSaving = FilteredSpaceSaving(numEntries, numBuckets, seed)
+    def add(f: FilteredSpaceSaving, key: UTF8String, weight: Long): Unit =
+      f.update(key.toString, weight)
   }
 
   // ---- KLL quantiles over doubles
 
-  final class KllAggregator(k: Int, seed: Long)
-      extends Aggregator[java.lang.Double, KllSketch, Array[Byte]] {
-    override def zero: KllSketch = KllSketch(k, seed)
-    override def reduce(b: KllSketch, a: java.lang.Double): KllSketch = {
-      if (a != null) b.update(a.doubleValue())
-      b
-    }
-    override def merge(x: KllSketch, y: KllSketch): KllSketch = x.merge(y)
-    override def finish(b: KllSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[KllSketch] = Encoders.kryo[KllSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class KllAggregator(k: Int, seed: Long)
+      extends DoubleKernel[KllSketch](KllSketch.deserialize) {
+    def create(): KllSketch = KllSketch(k, seed)
+    def add(s: KllSketch, x: Double): Unit = s.update(x)
   }
+
+  /** Per-tenant or per-partition KLL shards built once, any rollup served
+    * by merging finished state with no rescan. */
+  final case class KllMergeAggregator() extends MergeKernel[KllSketch](KllSketch.deserialize)
 
   // ---- t-digest quantiles over doubles
 
-  final class TDigestAggregator(compression: Double)
-      extends Aggregator[java.lang.Double, TDigest, Array[Byte]] {
-    override def zero: TDigest = TDigest(compression)
-    override def reduce(b: TDigest, a: java.lang.Double): TDigest = {
-      if (a != null) b.update(a.doubleValue())
-      b
-    }
-    override def merge(x: TDigest, y: TDigest): TDigest = x.merge(y)
-    override def finish(b: TDigest): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[TDigest] = Encoders.kryo[TDigest]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  final case class TDigestAggregator(compression: Double)
+      extends DoubleKernel[TDigest](TDigest.deserialize) {
+    def create(): TDigest = TDigest(compression)
+    def add(t: TDigest, x: Double): Unit = t.update(x)
   }
 
   // ---- exact top-k rows by priority (mergeable — the streaming q86 face)
@@ -240,7 +210,8 @@ object SketchAggregators {
     * (p DESC, id ASC): a merge MONOID (union-then-truncate is associative,
     * commutative, idempotent on the kept set), so it is streaming-complete-
     * mode-safe with O(k) state — the aggregate-side twin of TakeOrdered,
-    * for plans where the funnel must live INSIDE an aggregation (q97). */
+    * for plans where the funnel must live INSIDE an aggregation (q97). Not
+    * a sketch, so it stays a typed `functions.udaf` with a Kryo buffer. */
   final class TopRowsAggregator(k: Int) extends Aggregator[
       (Long, Long, Long, Long),
       scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)],

@@ -1,6 +1,6 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, Encoders}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -101,71 +101,57 @@ object SketchFunctions {
   private val kllMemo = new SketchMemo[KllSketch]
   private val tdMemo = new SketchMemo[TDigest]
 
-  private val tupleStrLong = Encoders.product[(String, Long)]
-
-  // ---- aggregate builders (Column API)
+  // ---- aggregate builders (Column API), each one NativeSketchAgg call
 
   /** Count-Min build: `cm_sketch(key, weight)` → binary sketch. */
   def cm_sketch(key: Column, weight: Column, eps: Double = 1e-4,
       delta: Double = 0.01, seed: Long = CountMinSketch.DefaultSeed): Column =
-    functions.udaf(new CmAggregator(eps, delta, seed), tupleStrLong)
-      .apply(key, weight)
+    NativeSketchAgg.column(CmAggregator(eps, delta, seed), key, weight)
 
   /** Merge pre-built CM sketches (shards → one). */
-  def cm_merge(sketch: Column): Column =
-    functions.udaf(new CmMergeAggregator, Encoders.BINARY).apply(sketch)
+  def cm_merge(sketch: Column): Column = NativeSketchAgg.column(CmMergeAggregator(), sketch)
 
   /** Heavy-hitter build: CM + candidate heap of `capacity` keys. */
   def cm_topk(key: Column, weight: Column, capacity: Int, eps: Double = 1e-4,
       delta: Double = 0.01, seed: Long = CountMinSketch.DefaultSeed): Column =
-    functions.udaf(new TopKAggregator(capacity, eps, delta, seed), tupleStrLong)
-      .apply(key, weight)
+    NativeSketchAgg.column(TopKAggregator(capacity, eps, delta, seed), key, weight)
 
   /** Count-Sketch build (signed rows, unbiased median query). */
   def cs_sketch(key: Column, weight: Column, depth: Int = 5, width: Int = 4096,
       seed: Long = CountSketch.DefaultSeed): Column =
-    functions.udaf(new CsAggregator(depth, width, seed), tupleStrLong)
-      .apply(key, weight)
+    NativeSketchAgg.column(CsAggregator(depth, width, seed), key, weight)
 
   /** Misra-Gries frequent-items summary (SketchVisor's role, provable). */
   def mg_sketch(key: Column, weight: Column, capacity: Int): Column =
-    functions.udaf(new MgAggregator(capacity), tupleStrLong).apply(key, weight)
+    NativeSketchAgg.column(MgAggregator(capacity), key, weight)
 
   /** Filtered Space-Saving summary. */
   def fss_sketch(key: Column, weight: Column, numEntries: Int,
       numBuckets: Int = 4096, seed: Long = FilteredSpaceSaving.DefaultSeed): Column =
-    functions.udaf(new FssAggregator(numEntries, numBuckets, seed), tupleStrLong)
-      .apply(key, weight)
+    NativeSketchAgg.column(FssAggregator(numEntries, numBuckets, seed), key, weight)
 
   def hll_sketch(key: Column, p: Int = 14,
       seed: Long = HyperLogLog.DefaultSeed): Column =
-    functions.udaf(new HllAggregator(p, seed), Encoders.STRING).apply(key)
+    NativeSketchAgg.column(HllAggregator(p, seed), key)
 
   def bloom_sketch(key: Column, expectedItems: Long, fpp: Double = 0.01,
       seed: Long = BloomFilter.DefaultSeed): Column =
-    functions.udaf(new BloomAggregator(expectedItems, fpp, seed), Encoders.STRING)
-      .apply(key)
+    NativeSketchAgg.column(BloomAggregator(expectedItems, fpp, seed), key)
 
   def kll_sketch(x: Column, k: Int = 200,
       seed: Long = KllSketch.DefaultSeed): Column =
-    functions.udaf(new KllAggregator(k, seed),
-      Encoders.DOUBLE)
-      .apply(x)
+    NativeSketchAgg.column(KllAggregator(k, seed), x)
 
   /** Merge pre-built KLL shards (shards → one), the quantile tier's
     * re-aggregation surface next to [[cm_merge]]. */
-  def kll_merge(sketch: Column): Column =
-    functions.udaf(new KllMergeAggregator, Encoders.BINARY).apply(sketch)
+  def kll_merge(sketch: Column): Column = NativeSketchAgg.column(KllMergeAggregator(), sketch)
 
   /** Merge pre-built HLL shards (shards → one) — idempotent register max,
     * so overlapping shard sets never double-count. */
-  def hll_merge(sketch: Column): Column =
-    functions.udaf(new HllMergeAggregator, Encoders.BINARY).apply(sketch)
+  def hll_merge(sketch: Column): Column = NativeSketchAgg.column(HllMergeAggregator(), sketch)
 
   def tdigest_sketch(x: Column, compression: Double = 100.0): Column =
-    functions.udaf(new TDigestAggregator(compression),
-      Encoders.DOUBLE)
-      .apply(x)
+    NativeSketchAgg.column(TDigestAggregator(compression), x)
 
   // ---- scalar query functions over serialized sketches
 

@@ -16,7 +16,7 @@ final class BloomFilter private (
     val seed: Long,
     val words: Array[Long],
     private var _itemsAdded: Long
-) extends Serializable {
+) extends Mergeable[BloomFilter] {
 
   def itemsAdded: Long = _itemsAdded
 
@@ -27,11 +27,13 @@ final class BloomFilter private (
   @inline private def getBit(bit: Long): Boolean =
     (words((bit >>> 6).toInt) & (1L << (bit & 63))) != 0L
 
-  @inline def addHash(h: Hash128): Unit = {
+  @inline def addHash(h: Hash128): Unit = addRaw(h.h1, h.h2)
+
+  /** [[addHash]] from the two hash halves, with no [[Hash128]]. */
+  @inline def addRaw(h1: Long, h2: Long): Unit = {
     var i = 0
     while (i < numHashes) {
-      val bit = (h.row(i) & Long.MaxValue) % numBits
-      setBit(bit)
+      setBit(((h1 + i.toLong * h2) & Long.MaxValue) % numBits)
       i += 1
     }
     _itemsAdded += 1

@@ -25,7 +25,7 @@ final class CountMinSketch private (
     val seed: Long,
     val counters: Array[Long], // flat depth*width, row-major
     private var _totalWeight: Long
-) extends Serializable {
+) extends Mergeable[CountMinSketch] {
 
   private val mask = width - 1
 

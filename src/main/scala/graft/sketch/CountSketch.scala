@@ -25,7 +25,7 @@ final class CountSketch private (
     val seed: Long,
     val counters: Array[Long],
     private var _totalWeight: Long
-) extends Serializable {
+) extends Mergeable[CountSketch] {
 
   private val mask = width - 1
   require(depth % 2 == 1, s"depth must be odd for a well-defined median: $depth")

@@ -34,7 +34,7 @@ final class FilteredSpaceSaving private (
     private val fCount: mutable.HashMap[String, Long],
     private val eCount: mutable.HashMap[String, Long],
     private var _totalWeight: Long
-) extends Serializable {
+) extends Mergeable[FilteredSpaceSaving] {
 
   private val mask = numBuckets - 1
 

@@ -52,7 +52,7 @@ final class KllSketch private (
     private var levels: Array[DoubleBuf],
     private var _n: Long,
     private var compactions: Long
-) extends Serializable {
+) extends Mergeable[KllSketch] {
 
   def n: Long = _n
   def numLevels: Int = levels.length
@@ -69,13 +69,6 @@ final class KllSketch private (
     math.max(KllSketch.MinCapacity, math.ceil(cap).toInt)
   }
 
-  private def totalCapacity: Int = {
-    var s = 0
-    var i = 0
-    while (i < levels.length) { s += capacity(i, levels.length); i += 1 }
-    s
-  }
-
   private def totalItems: Int = {
     var s = 0
     var i = 0
@@ -83,29 +76,48 @@ final class KllSketch private (
     s
   }
 
+  // Per-level capacities, their sum and the stored-item count, so that an
+  // update outside compaction is O(1). The capacities are recomputed only
+  // when the level count changes, the item count on each compaction or
+  // merge. Transient: after a Java or Kryo read, as after construction,
+  // they are unset, so the first update calls compress(), which sets them.
+  @transient private var caps: Array[Int] = _
+  @transient private var capTotal = 0
+  @transient private var items = 0
+
+  private def refresh(): Unit = {
+    caps = Array.tabulate(levels.length)(capacity(_, levels.length))
+    capTotal = caps.sum
+    items = totalItems
+  }
+
   def update(x: Double): Unit = {
     levels(0).add(x)
     _n += 1
-    if (totalItems > totalCapacity) compress()
+    items += 1
+    if (items > capTotal) compress()
   }
 
   private def grow(): Unit = {
     levels = levels :+ new DoubleBuf(8)
+    refresh()
   }
 
   /** Compact the lowest level that is at/over its capacity. */
   private def compress(): Unit = {
+    if (caps == null || caps.length != levels.length) refresh() else items = totalItems
     var guard = 0
-    while (totalItems > totalCapacity && guard < 64) {
+    while (items > capTotal && guard < 64) {
       var lvl = -1
       var i = 0
       while (lvl < 0 && i < levels.length) {
-        if (levels(i).size >= capacity(i, levels.length)) lvl = i
+        if (levels(i).size >= caps(i)) lvl = i
         i += 1
       }
       if (lvl < 0) lvl = 0
       if (lvl == levels.length - 1) grow()
       compactLevel(lvl)
+      items = totalItems
       guard += 1
     }
   }
@@ -141,7 +153,7 @@ final class KllSketch private (
     }
     _n += other._n
     compactions += other.compactions // keeps coin sequence diverging deterministically
-    if (totalItems > totalCapacity) compress()
+    compress()
     this
   }
 

@@ -21,7 +21,7 @@ final class MisraGries private (
     private val counts: mutable.HashMap[String, Long],
     private var _totalWeight: Long,
     private var _decrementTotal: Long
-) extends Serializable {
+) extends Mergeable[MisraGries] {
 
   def totalWeight: Long = _totalWeight
 

@@ -2,6 +2,14 @@ package graft.sketch
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+/** A sketch that merges another of its kind into itself and writes its
+  * fixed binary layout; the sketch aggregates drive every kernel through
+  * this pair. */
+trait Mergeable[S] extends Serializable {
+  def merge(other: S): S
+  def serialize(): Array[Byte]
+}
+
 /**
  * Little-endian fixed-layout binary (de)serialization helpers shared by all
  * sketch kernels. Every serialized sketch starts with a 4-byte magic tag so a

@@ -35,7 +35,7 @@ final class TopKSketch private (
     // against the sketch's own error budget.
     private val index: mutable.LongMap[Int],
     private val heapHashes: Array[Long]
-) extends Serializable {
+) extends Mergeable[TopKSketch] {
 
   def candidateCount: Int = heapSize
   def totalWeight: Long = cm.totalWeight

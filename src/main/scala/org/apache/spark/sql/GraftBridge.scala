@@ -2,8 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ExpressionUtils, UserDefinedFunctionUtils}
-import org.apache.spark.sql.execution.aggregate.ScalaAggregator
-import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedAggregator, UserDefinedFunction}
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedFunction}
 
 /**
  * The sketch library's one bridge between the public `Column` API and
@@ -12,8 +11,8 @@ import org.apache.spark.sql.expressions.{SparkUserDefinedFunction, UserDefinedAg
  *  - a Column builder wraps its Catalyst expression with [[column]], and
  *    reads its Column arguments with [[expression]];
  *  - a SQL function builder (`graft.GraftExtensions`) turns a `functions.udf`
- *    or `functions.udaf` value into the expression Spark's UDF registration
- *    would have built, with [[udf]] and [[udaf]].
+ *    value into the expression Spark's UDF registration would have built,
+ *    with [[udf]].
  */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,7 +21,4 @@ object GraftBridge {
 
   def udf(f: UserDefinedFunction, children: Seq[Expression]): Expression =
     UserDefinedFunctionUtils.toScalaUDF(f.asInstanceOf[SparkUserDefinedFunction], children)
-
-  def udaf(f: UserDefinedFunction, children: Seq[Expression]): Expression =
-    ScalaAggregator(f.asInstanceOf[UserDefinedAggregator[Any, Any, Any]], children)
 }
