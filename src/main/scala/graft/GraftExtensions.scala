@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.types.Decimal
 import graft.agg._
+import graft.agg.ProbeKernel._
 import graft.agg.SketchAggregators._
 import graft.sketch._
 
@@ -30,9 +30,11 @@ import graft.sketch._
  *    `hll_sketch_fast(key[, p[, seed]])`, whose trailing arguments are
  *    foldable numeric literals and whose key must be a string and weight
  *    integral,
- *  - every probe (`cm_query`, `bloom_contains`, `topk_entries`, …); the five
- *    native probes also answer to a `*_sketch` twin name
- *    (`cm_query_sketch`, …), built by the same builder,
+ *  - the probes (`cm_query`, `bloom_contains`, `topk_entries`, …), each a
+ *    [[graft.agg.SketchProbe]] whose arguments are cast as the builds'
+ *    are; `cm_query`, `cm_total`, `hll_count`, `kll_quantile` and
+ *    `topk_entries` also answer to a `*_sketch` twin name
+ *    (`cm_query_sketch`, …),
  *  - the fused array and string kernels `cosine_micro`, `dot_range`,
  *    `intersect_count_sorted` and `cdc_cuts`,
  * so pure-SQL users (thriftserver, SQL files) get the library with no
@@ -97,19 +99,15 @@ object GraftExtensions {
       build(args)
     })
 
-  /** A native probe under its Column-API name and its `*_sketch` twin: one
-    * builder, which tags the expression with the name it was called by. */
-  private def probe(name: String, cls: Class[_], usage: String, arity: Int)(build: Builder)
-      : Seq[Description] =
-    Seq(name, s"${name}_sketch").map(n => fn(n, cls, usage, arity to arity) { args =>
-      val e = build(args)
-      e.setTagValue(FunctionRegistry.FUNC_ALIAS, n)
+  /** A probe under `name`, tagged with the name it was called by. */
+  private def probe(kernel: ProbeKernel, usage: String, name: String): Description = {
+    val arity = kernel.inputTypes.length
+    fn(name, classOf[SketchProbe], usage, arity to arity) { args =>
+      val e = SketchProbe(kernel, args)
+      e.setTagValue(FunctionRegistry.FUNC_ALIAS, name)
       e
-    })
-
-  /** A `functions.udf` probe: the same value the Column API applies. */
-  private def udf(name: String, f: UserDefinedFunction, usage: String, arity: Int): Description =
-    fn(name, f.getClass, usage, arity to arity)(GraftBridge.udf(f.withName(name), _))
+    }
+  }
 
   /** A build or merge with library defaults, named by its SQL name. */
   private def agg[S <: Mergeable[S]](name: String, kernel: SketchKernel[S], usage: String)
@@ -138,11 +136,11 @@ object GraftExtensions {
       "(key, weight[, capacity[, eps[, delta[, seed]]]])", 2 to 6)(topkSketchFast()),
     fn("hll_sketch_fast", classOf[NativeSketchAgg[_]], "(key[, p[, seed]])", 1 to 3)(
       hllSketchFast()),
-    udf("cs_query", SketchFunctions.csQuery, "(sketch, key)", 2),
-    udf("mg_query", SketchFunctions.mgQuery, "(sketch, key)", 2),
-    udf("fss_query", SketchFunctions.fssQuery, "(sketch, key)", 2),
-    udf("bloom_contains", SketchFunctions.bloomContains, "(sketch, key)", 2),
-    udf("tdigest_quantile", SketchFunctions.tdigestQuantile, "(sketch, q)", 2),
+    probe(CsQuery, "(sketch, key)", "cs_query"),
+    probe(MgQuery, "(sketch, key)", "mg_query"),
+    probe(FssQuery, "(sketch, key)", "fss_query"),
+    probe(BloomContains, "(sketch, key)", "bloom_contains"),
+    probe(TDigestQuantile, "(sketch, q)", "tdigest_quantile"),
     fn("cosine_micro", classOf[CosineMicro], "(vec_a, vec_b)", 2 to 2)(
       a => CosineMicro(a(0), a(1))),
     fn("dot_range", classOf[DotRange], "(vec_a, vec_b, start, len) with literal start/len",
@@ -153,14 +151,10 @@ object GraftExtensions {
     fn("cdc_cuts", classOf[CdcCuts], "(text, window, div) with literal window/div", 3 to 3)(
       a => CdcCuts(a(0), literal("cdc_cuts", a(1), "window").intValue,
         literal("cdc_cuts", a(2), "div").intValue))
-  ) ++
-    probe("cm_query", classOf[CmQuerySketch], "(sketch, key)", 2)(a => CmQuerySketch(a(0), a(1))) ++
-    probe("cm_total", classOf[CmTotalSketch], "(sketch)", 1)(a => CmTotalSketch(a(0))) ++
-    probe("hll_count", classOf[HllCountSketch], "(sketch)", 1)(a => HllCountSketch(a(0))) ++
-    probe("kll_quantile", classOf[KllQuantileSketch], "(sketch, q)", 2)(
-      a => KllQuantileSketch(a(0), a(1))) ++
-    probe("topk_entries", classOf[TopKEntriesSketch], "(sketch, k)", 2)(
-      a => TopKEntriesSketch(a(0), a(1)))
+  ) ++ Seq(CmQuery -> "(sketch, key)", CmTotal -> "(sketch)", HllCount -> "(sketch)",
+      KllQuantile -> "(sketch, q)", TopKEntries -> "(sketch, k)").flatMap { case (k, usage) =>
+    Seq(probe(k, usage, k.name), probe(k, usage, s"${k.name}_sketch"))
+  }
 
   /** Registers one builder under `name` in a live session. */
   def register(spark: SparkSession, name: String, builder: Builder): Unit =

@@ -49,21 +49,21 @@ object SketchAggregators {
     * row, and the decoder. An abstract class, not a trait: the per-row
     * `update` call sees every kernel in one JVM, and a megamorphic virtual
     * call is cheaper than an interface call. */
-  sealed abstract class SketchKernel[S <: Mergeable[S]](read: Array[Byte] => S)
+  sealed abstract class SketchKernel[S <: Mergeable[S]](decode: Decoder[S])
       extends Serializable {
     /** The argument types the analyzer casts the arguments to. */
     def inputTypes: Seq[DataType]
     def create(): S
     /** Folds one row into `s` and returns the buffer. */
     def update(s: S, row: InternalRow, in: Args): S
-    final def deserialize(bytes: Array[Byte]): S = read(bytes)
+    final def deserialize(bytes: Array[Byte]): S = decode(bytes)
     /** The name a Column-API call prints by, as Spark names a udaf. */
     final def name: String = getClass.getSimpleName.toLowerCase(Locale.ROOT)
   }
 
   /** A build over a string key. */
-  sealed abstract class KeyKernel[S <: Mergeable[S]](read: Array[Byte] => S)
-      extends SketchKernel[S](read) {
+  sealed abstract class KeyKernel[S <: Mergeable[S]](decode: Decoder[S])
+      extends SketchKernel[S](decode) {
     final def inputTypes: Seq[DataType] = Seq(StringType)
     def add(s: S, key: UTF8String): Unit
     final def update(s: S, row: InternalRow, in: Args): S = {
@@ -74,8 +74,8 @@ object SketchAggregators {
   }
 
   /** A build over a string key and a long weight. */
-  sealed abstract class KeyWeightKernel[S <: Mergeable[S]](read: Array[Byte] => S)
-      extends SketchKernel[S](read) {
+  sealed abstract class KeyWeightKernel[S <: Mergeable[S]](decode: Decoder[S])
+      extends SketchKernel[S](decode) {
     final def inputTypes: Seq[DataType] = Seq(StringType, LongType)
     def add(s: S, key: UTF8String, weight: Long): Unit
     final def update(s: S, row: InternalRow, in: Args): S = {
@@ -87,8 +87,8 @@ object SketchAggregators {
   }
 
   /** A build over doubles. */
-  sealed abstract class DoubleKernel[S <: Mergeable[S]](read: Array[Byte] => S)
-      extends SketchKernel[S](read) {
+  sealed abstract class DoubleKernel[S <: Mergeable[S]](decode: Decoder[S])
+      extends SketchKernel[S](decode) {
     final def inputTypes: Seq[DataType] = Seq(DoubleType)
     def add(s: S, x: Double): Unit
     final def update(s: S, row: InternalRow, in: Args): S = {
@@ -99,8 +99,8 @@ object SketchAggregators {
 
   /** A re-merge of finished sketches (checkpoint shards, two-level
     * aggregation); its buffer is null until the first sketch. */
-  sealed abstract class MergeKernel[S <: Mergeable[S]](read: Array[Byte] => S)
-      extends SketchKernel[S](read) {
+  sealed abstract class MergeKernel[S <: Mergeable[S]](decode: Decoder[S])
+      extends SketchKernel[S](decode) {
     final def inputTypes: Seq[DataType] = Seq(BinaryType)
     final def create(): S = null.asInstanceOf[S]
     final def update(s: S, row: InternalRow, in: Args): S = {
@@ -114,14 +114,14 @@ object SketchAggregators {
   // ---- Count-Min over (key, weight)
 
   final case class CmAggregator(eps: Double, delta: Double, seed: Long)
-      extends KeyWeightKernel[CountMinSketch](CountMinSketch.deserialize) {
+      extends KeyWeightKernel[CountMinSketch](Decoder.Cm) {
     def create(): CountMinSketch = CountMinSketch.fromErrorBounds(eps, delta, seed)
     def add(cm: CountMinSketch, key: UTF8String, weight: Long): Unit =
       cm.updateRaw(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed), weight)
   }
 
   final case class CmMergeAggregator()
-      extends MergeKernel[CountMinSketch](CountMinSketch.deserialize)
+      extends MergeKernel[CountMinSketch](Decoder.Cm)
 
   // ---- Heavy hitters: CM + candidate heap
 
@@ -129,7 +129,7 @@ object SketchAggregators {
     * enters or displaces a heap candidate; the thunk runs inside
     * `updateRaw`, before Spark can reuse the row buffer. */
   final case class TopKAggregator(capacity: Int, eps: Double, delta: Double, seed: Long)
-      extends KeyWeightKernel[TopKSketch](TopKSketch.deserialize) {
+      extends KeyWeightKernel[TopKSketch](Decoder.TopK) {
     def create(): TopKSketch = TopKSketch(capacity, eps, delta, seed)
     def add(t: TopKSketch, key: UTF8String, weight: Long): Unit =
       t.updateRaw(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed), weight, () => key.toString)
@@ -138,7 +138,7 @@ object SketchAggregators {
   // ---- HyperLogLog distinct count: XXH64 over the UTF-8 bytes, as `add(String)`
 
   final case class HllAggregator(p: Int, seed: Long)
-      extends KeyKernel[HyperLogLog](HyperLogLog.deserialize) {
+      extends KeyKernel[HyperLogLog](Decoder.Hll) {
     def create(): HyperLogLog = HyperLogLog(p, seed)
     def add(h: HyperLogLog, key: UTF8String): Unit =
       h.addHash(XXH64.hashUnsafeBytes(key.getBaseObject, key.getBaseOffset, key.numBytes, seed))
@@ -147,12 +147,12 @@ object SketchAggregators {
   /** Register-max is idempotent, so overlapping shard sets (sliding
     * windows, rollups) merge without double-counting. */
   final case class HllMergeAggregator()
-      extends MergeKernel[HyperLogLog](HyperLogLog.deserialize)
+      extends MergeKernel[HyperLogLog](Decoder.Hll)
 
   // ---- Bloom filter build
 
   final case class BloomAggregator(expectedItems: Long, fpp: Double, seed: Long)
-      extends KeyKernel[BloomFilter](BloomFilter.deserialize) {
+      extends KeyKernel[BloomFilter](Decoder.Bloom) {
     def create(): BloomFilter = BloomFilter.fromExpected(expectedItems, fpp, seed)
     def add(b: BloomFilter, key: UTF8String): Unit =
       b.addRaw(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed))
@@ -161,16 +161,16 @@ object SketchAggregators {
   // ---- Count-Sketch over (key, weight)
 
   final case class CsAggregator(depth: Int, width: Int, seed: Long)
-      extends KeyWeightKernel[CountSketch](CountSketch.deserialize) {
+      extends KeyWeightKernel[CountSketch](Decoder.Cs) {
     def create(): CountSketch = CountSketch(depth, width, seed)
     def add(cs: CountSketch, key: UTF8String, weight: Long): Unit =
-      cs.update(Hash128(Utf8Hash.h1(key, seed), Utf8Hash.h2(key, seed)), weight)
+      cs.update(Utf8Hash.of(key, seed), weight)
   }
 
   // ---- Misra-Gries frequent items
 
   final case class MgAggregator(capacity: Int)
-      extends KeyWeightKernel[MisraGries](MisraGries.deserialize) {
+      extends KeyWeightKernel[MisraGries](Decoder.Mg) {
     def create(): MisraGries = MisraGries(capacity)
     def add(m: MisraGries, key: UTF8String, weight: Long): Unit = m.update(key.toString, weight)
   }
@@ -178,7 +178,7 @@ object SketchAggregators {
   // ---- Filtered Space-Saving
 
   final case class FssAggregator(numEntries: Int, numBuckets: Int, seed: Long)
-      extends KeyWeightKernel[FilteredSpaceSaving](FilteredSpaceSaving.deserialize) {
+      extends KeyWeightKernel[FilteredSpaceSaving](Decoder.Fss) {
     def create(): FilteredSpaceSaving = FilteredSpaceSaving(numEntries, numBuckets, seed)
     def add(f: FilteredSpaceSaving, key: UTF8String, weight: Long): Unit =
       f.update(key.toString, weight)
@@ -187,19 +187,19 @@ object SketchAggregators {
   // ---- KLL quantiles over doubles
 
   final case class KllAggregator(k: Int, seed: Long)
-      extends DoubleKernel[KllSketch](KllSketch.deserialize) {
+      extends DoubleKernel[KllSketch](Decoder.Kll) {
     def create(): KllSketch = KllSketch(k, seed)
     def add(s: KllSketch, x: Double): Unit = s.update(x)
   }
 
   /** Per-tenant or per-partition KLL shards built once, any rollup served
     * by merging finished state with no rescan. */
-  final case class KllMergeAggregator() extends MergeKernel[KllSketch](KllSketch.deserialize)
+  final case class KllMergeAggregator() extends MergeKernel[KllSketch](Decoder.Kll)
 
   // ---- t-digest quantiles over doubles
 
   final case class TDigestAggregator(compression: Double)
-      extends DoubleKernel[TDigest](TDigest.deserialize) {
+      extends DoubleKernel[TDigest](Decoder.Td) {
     def create(): TDigest = TDigest(compression)
     def add(t: TDigest, x: Double): Unit = t.update(x)
   }

@@ -1,38 +1,19 @@
 package graft.agg
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sketch.Hash128
+import graft.sketch._
 
-/**
- * Native scalar Catalyst expressions over serialized sketches: the one
- * implementation of `cm_query`, `cm_total`, `hll_count`, `kll_quantile` and
- * `topk_entries`, behind both the Column API ([[SketchFunctions]]) and the
- * SQL names, each of which also answers to a `*_sketch` twin name.
- *
- * No encoder round trip: the key is hashed straight from its `UTF8String`
- * bytes (zero-copy, the same double-hash halves as the native builds,
- * parity pinned in HashingSpec), and mistyped SQL fails at analysis rather
- * than execution. Decoding goes through the kernel's thread-local memo in
- * [[SketchFunctions]], so repeated probes of one sketch decode once per
- * thread, not once per row. A null sketch answers −1 (a count), NaN (a
- * quantile) or an empty listing; a null key answers −1; a null q or k
- * answers null.
- *
- * CodegenFallback is deliberate: the eval is one memo lookup + two XXH64
- * calls + a d-step min-loop; fallback costs one virtual call per row and
- * keeps the expression version-portable (no generated-source maintenance).
- */
 /** The ONE definition of the zero-copy UTF8String double-hash (seed
   * derivation `seed ^ Seed1/Seed2` must stay bit-identical to
   * `Hash128.ofString` — parity pinned in HashingSpec). Shared by the
-  * native build aggregates and the scalar probe expressions so the
-  * arithmetic can never drift between copies. */
+  * native build aggregates and the probes so the arithmetic can never
+  * drift between copies. */
 private[agg] object Utf8Hash {
   @inline def h1(utf8: UTF8String, seed: Long): Long =
     XXH64.hashUnsafeBytes(utf8.getBaseObject, utf8.getBaseOffset,
@@ -40,144 +21,266 @@ private[agg] object Utf8Hash {
   @inline def h2(utf8: UTF8String, seed: Long): Long =
     XXH64.hashUnsafeBytes(utf8.getBaseObject, utf8.getBaseOffset,
       utf8.numBytes, seed ^ Hash128.Seed2)
+  @inline def of(utf8: UTF8String, seed: Long): Hash128 = Hash128(h1(utf8, seed), h2(utf8, seed))
 }
 
-/** A probe names itself by the SQL name it was called by (the registry
-  * tags it), else by its Column-API name; type errors use that name. */
-sealed trait SketchProbe extends Expression with CodegenFallback {
-  protected def defaultName: String
-  /** Catalog strings of the accepted argument types, for the error. */
-  protected def signature: String
-  protected def accepts(types: Seq[DataType]): Boolean
+/**
+ * The one decoder of a sketch kind, shared by the build kernels
+ * ([[SketchAggregators.SketchKernel]]) and the probes ([[ProbeKernel]]).
+ * `apply` decodes a fresh, mutable sketch; `cached` answers from a
+ * thread-local memo, for probes, which never mutate what they read.
+ *
+ * A probe is handed the same serialized sketch once per row; a d×w CM is
+ * ~1.3MB and q07's Bloom ~540KB, so decoding per row would dominate the
+ * probe. Each of a thread's 4 memo slots keeps the caller's own array (no
+ * clone) beside its decoded value and matches in two exact steps:
+ *  - reference identity, O(1): a sketch passed as a scalar subquery
+ *    (`bloom_contains(sk.scalar(), key)`) reaches every row of a task as
+ *    the same array;
+ *  - `java.util.Arrays.equals`: a cross-joined sketch arrives as a fresh
+ *    copy per row, and a byte compare costs a fraction of a decode. The
+ *    slot then adopts the caller's array, so that caller's later rows hit
+ *    by identity.
+ * No hash or sample stands in for the bytes, so two same-shape sketches
+ * that differ in one late word never share a decode. A kept array must not
+ * be mutated afterwards; Spark never mutates a value it hands to an
+ * expression. Four slots let a row probe several sketches (q42 combines
+ * three replicas with `least`) without thrashing; eviction is round-robin.
+ *
+ * Each decoder is a singleton, so a kernel that holds one serializes as a
+ * reference to it and every task of an executor thread shares its memo.
+ */
+sealed abstract class Decoder[S <: AnyRef](parse: Array[Byte] => S) extends Serializable {
+  private final class Slots {
+    val keys = new Array[Array[Byte]](4)
+    val vs = new Array[AnyRef](4)
+    var next = 0
+  }
+  private val memo = new ThreadLocal[Slots] {
+    override def initialValue(): Slots = new Slots
+  }
 
+  def apply(bytes: Array[Byte]): S = parse(bytes)
+
+  def cached(bytes: Array[Byte]): S = {
+    val s = memo.get()
+    var i = 0
+    while (i < 4) {
+      if (s.keys(i) eq bytes) return s.vs(i).asInstanceOf[S]
+      i += 1
+    }
+    i = 0
+    while (i < 4) {
+      if (s.keys(i) != null && java.util.Arrays.equals(s.keys(i), bytes)) {
+        s.keys(i) = bytes
+        return s.vs(i).asInstanceOf[S]
+      }
+      i += 1
+    }
+    val v = parse(bytes)
+    val slot = s.next
+    s.keys(slot) = bytes; s.vs(slot) = v
+    s.next = (slot + 1) & 3
+    v
+  }
+}
+
+object Decoder {
+  case object Cm extends Decoder[CountMinSketch](CountMinSketch.deserialize)
+  case object TopK extends Decoder[TopKSketch](TopKSketch.deserialize)
+  case object Cs extends Decoder[CountSketch](CountSketch.deserialize)
+  case object Mg extends Decoder[MisraGries](MisraGries.deserialize)
+  case object Fss extends Decoder[FilteredSpaceSaving](FilteredSpaceSaving.deserialize)
+  case object Hll extends Decoder[HyperLogLog](HyperLogLog.deserialize)
+  case object Bloom extends Decoder[BloomFilter](BloomFilter.deserialize)
+  case object Kll extends Decoder[KllSketch](KllSketch.deserialize)
+  case object Td extends Decoder[TDigest](TDigest.deserialize)
+}
+
+/**
+ * The one Catalyst expression behind every query of a finished sketch,
+ * over a [[ProbeKernel]]: the point service that answers keys against
+ * sketch state, as the build side is the one [[NativeSketchAgg]] over a
+ * [[SketchAggregators.SketchKernel]]. Both the Column API
+ * ([[SketchFunctions]]) and the SQL names (`graft.GraftExtensions`) build it.
+ *
+ * Input rules are the builds': the analyzer casts each argument to the
+ * kernel's input types, so an int key becomes a string and a string q a
+ * double (a q that is not a number fails at run time), and an argument that
+ * cannot be cast fails at analysis. The sketch decodes through its
+ * [[Decoder]]'s memo, so repeated probes of one sketch decode once per
+ * thread; a string key is hashed from its `UTF8String` bytes in place.
+ *
+ * A probe prints as the SQL name it was called by (the registry tags it),
+ * else as its Column-API name; type errors use that name.
+ *
+ * CodegenFallback is deliberate: the eval is one memo lookup and the
+ * kernel's query; fallback costs one virtual call per row and keeps the
+ * expression version-portable (no generated-source maintenance).
+ */
+case class SketchProbe(kernel: ProbeKernel, children: Seq[Expression])
+    extends Expression with ImplicitCastInputTypes with CodegenFallback {
+
+  private val sketch = children.head
+  private val arg = if (children.length > 1) children(1) else null
+
+  override def inputTypes: Seq[DataType] = kernel.inputTypes
+  override def dataType: DataType = kernel.dataType
+  override def nullable: Boolean = kernel.nullable ||
+    children.zip(kernel.nulls).exists { case (c, answer) => answer == null && c.nullable }
   override def prettyName: String =
-    getTagValue(FunctionRegistry.FUNC_ALIAS).getOrElse(defaultName)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (accepts(children.map(_.dataType))) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName expects $signature, got " +
-      children.map(_.dataType.catalogString).mkString("(", ", ", ")"))
-}
-
-/** Point-frequency estimate of `key`: `cm_query(sketch, key)` → BIGINT. */
-case class CmQuerySketch(left: Expression, right: Expression)
-    extends BinaryExpression with SketchProbe {
-  protected def defaultName = "cm_query"
-  protected def signature = "(BINARY sketch, STRING key)"
-  protected def accepts(t: Seq[DataType]): Boolean = t == Seq(BinaryType, StringType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
+    getTagValue(FunctionRegistry.FUNC_ALIAS).getOrElse(kernel.name)
+  override protected def stringArgs: Iterator[Any] = children.iterator
 
   override def eval(input: InternalRow): Any = {
-    val sk = left.eval(input)
-    val key = right.eval(input)
-    if (sk == null || key == null) -1L
-    else {
-      val cm = SketchFunctions.decodeCmMemoized(sk.asInstanceOf[Array[Byte]])
-      val utf8 = key.asInstanceOf[UTF8String]
-      cm.queryRaw(Utf8Hash.h1(utf8, cm.seed), Utf8Hash.h2(utf8, cm.seed))
+    val a = if (arg == null) null else arg.eval(input)
+    if (arg != null && a == null) kernel.nulls(1)
+    else sketch.eval(input) match {
+      case null => kernel.nulls.head
+      case sk => kernel.answer(sk.asInstanceOf[Array[Byte]], a)
     }
   }
 
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CmQuerySketch =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): SketchProbe = copy(children = newChildren)
 }
 
-/** Total stream weight N of a CM sketch, for ε·N bounds:
-  * `cm_total(sketch)` → BIGINT. */
-case class CmTotalSketch(child: Expression) extends UnaryExpression with SketchProbe {
-  protected def defaultName = "cm_total"
-  protected def signature = "BINARY"
-  protected def accepts(t: Seq[DataType]): Boolean = t == Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-
-  override def eval(input: InternalRow): Any = child.eval(input) match {
-    case null => -1L
-    case sk => SketchFunctions.decodeCmMemoized(sk.asInstanceOf[Array[Byte]]).totalWeight
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CmTotalSketch =
-    copy(child = newChild)
+/**
+ * One query of a finished sketch, run by [[SketchProbe]]. A kernel declares
+ * its input types (the sketch first), its result type, its null answers and
+ * its per-row answer. `nulls(i)` is the answer when argument `i` is null;
+ * the second argument decides first, so a null q answers null even for a
+ * null sketch. The result is nullable where a null answer meets a nullable
+ * argument, or always with `nullable`: the MG and FSS listings and
+ * `hll_set_union` keep the nullable result types they were published with.
+ * An abstract class, not a trait: the per-row `answer` call is a virtual
+ * call, cheaper than an interface call.
+ */
+sealed abstract class ProbeKernel(
+    val name: String,
+    val inputTypes: Seq[DataType],
+    val dataType: DataType,
+    val nulls: Seq[Any],
+    val nullable: Boolean = false) extends Serializable {
+  /** The answer for a non-null sketch and argument (null when there is no
+    * second argument). */
+  def answer(sketch: Array[Byte], arg: Any): Any
 }
 
-/** HLL cardinality estimate: `hll_count(sketch)` → BIGINT. */
-case class HllCountSketch(child: Expression) extends UnaryExpression with SketchProbe {
-  protected def defaultName = "hll_count"
-  protected def signature = "BINARY"
-  protected def accepts(t: Seq[DataType]): Boolean = t == Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
+object ProbeKernel {
+  private val Key = Seq(BinaryType, StringType)
+  private val Q = Seq(BinaryType, DoubleType)
+  private val One = Seq(BinaryType)
+  private val NoCount: Seq[Any] = Seq(-1L, -1L)
 
-  override def eval(input: InternalRow): Any = child.eval(input) match {
-    case null => -1L
-    case sk => SketchFunctions.decodeHllMemoized(sk.asInstanceOf[Array[Byte]]).estimateLong()
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HllCountSketch =
-    copy(child = newChild)
-}
-
-/** KLL quantile: `kll_quantile(sketch, q)` → DOUBLE. Any numeric q: the
-  * natural SQL literal 0.5 parses as DECIMAL(1,1), and rejecting it would
-  * force users to spell cast(0.5 AS double). */
-case class KllQuantileSketch(left: Expression, right: Expression)
-    extends BinaryExpression with SketchProbe {
-  protected def defaultName = "kll_quantile"
-  protected def signature = "(BINARY sketch, numeric q)"
-  protected def accepts(t: Seq[DataType]): Boolean =
-    t.head == BinaryType && t(1).isInstanceOf[NumericType]
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = right.nullable
-
-  override def eval(input: InternalRow): Any = right.eval(input) match {
-    case null => null
-    case q =>
-      val qd = q match {
-        case d: Decimal => d.toDouble
-        case n: java.lang.Number => n.doubleValue()
-      }
-      left.eval(input) match {
-        case null => Double.NaN
-        case sk => SketchFunctions.decodeKllMemoized(sk.asInstanceOf[Array[Byte]]).quantile(qd)
-      }
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): KllQuantileSketch =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Heavy-hitter listing: `topk_entries(sketch, k)` →
-  * array<struct<key string, est bigint>> in deterministic (est desc,
-  * key asc) order; the type is the one the `TopKEntry` encoder gives. */
-case class TopKEntriesSketch(left: Expression, right: Expression)
-    extends BinaryExpression with SketchProbe {
-  protected def defaultName = "topk_entries"
-  protected def signature = "(BINARY sketch, integral k)"
-  protected def accepts(t: Seq[DataType]): Boolean = t.head == BinaryType && (t(1) match {
-    case LongType | IntegerType | ShortType | ByteType => true
-    case _ => false
-  })
-  override def dataType: DataType = ArrayType(StructType(Seq(
+  /** array<struct<key string, est bigint>>, the type of every heavy-hitter
+    * listing, in (est desc, key asc) order. */
+  private val EntryList = ArrayType(StructType(Seq(
     StructField("key", StringType), StructField("est", LongType, nullable = false))))
-  override def nullable: Boolean = right.nullable
+  private val FssEntryList = ArrayType(StructType(Seq(StructField("key", StringType),
+    StructField("f", LongType, nullable = false), StructField("e", LongType, nullable = false))))
+  private def listing(rows: Array[InternalRow]) =
+    new GenericArrayData(rows.asInstanceOf[Array[Any]])
+  private val NoEntries: Seq[Any] = Seq(listing(Array.empty))
 
-  override def eval(input: InternalRow): Any = right.eval(input) match {
-    case null => null
-    case k => left.eval(input) match {
-      case null => new GenericArrayData(Array.empty[Any])
-      case sk =>
-        val entries = SketchFunctions.decodeTopKMemoized(sk.asInstanceOf[Array[Byte]])
-          .topK(k.asInstanceOf[Number].intValue)
-        new GenericArrayData(entries.map { case (key, est) =>
-          InternalRow(UTF8String.fromString(key), est)
-        })
+  private def utf8(key: Any) = key.asInstanceOf[UTF8String]
+
+  /** Point-frequency estimate of a key from a CM sketch. */
+  case object CmQuery extends ProbeKernel("cm_query", Key, LongType, NoCount) {
+    def answer(sk: Array[Byte], key: Any): Any = {
+      val cm = Decoder.Cm.cached(sk)
+      cm.queryRaw(Utf8Hash.h1(utf8(key), cm.seed), Utf8Hash.h2(utf8(key), cm.seed))
     }
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopKEntriesSketch =
-    copy(left = newLeft, right = newRight)
+  /** Total stream weight N of a CM sketch, for ε·N bounds. */
+  case object CmTotal extends ProbeKernel("cm_total", One, LongType, Seq(-1L)) {
+    def answer(sk: Array[Byte], none: Any): Any = Decoder.Cm.cached(sk).totalWeight
+  }
+
+  case object CsQuery extends ProbeKernel("cs_query", Key, LongType, NoCount) {
+    def answer(sk: Array[Byte], key: Any): Any = {
+      val cs = Decoder.Cs.cached(sk)
+      cs.query(Utf8Hash.of(utf8(key), cs.seed))
+    }
+  }
+
+  // the Misra-Gries and FSS summaries key their maps by String
+  case object MgQuery extends ProbeKernel("mg_query", Key, LongType, NoCount) {
+    def answer(sk: Array[Byte], key: Any): Any = Decoder.Mg.cached(sk).query(key.toString)
+  }
+
+  case object FssQuery extends ProbeKernel("fss_query", Key, LongType, NoCount) {
+    def answer(sk: Array[Byte], key: Any): Any = Decoder.Fss.cached(sk).query(key.toString)
+  }
+
+  case object BloomContains extends ProbeKernel("bloom_contains", Key, BooleanType,
+      Seq(false, false)) {
+    def answer(sk: Array[Byte], key: Any): Any = {
+      val bloom = Decoder.Bloom.cached(sk)
+      bloom.mightContainHash(Utf8Hash.of(utf8(key), bloom.seed))
+    }
+  }
+
+  case object HllCount extends ProbeKernel("hll_count", One, LongType, Seq(-1L)) {
+    def answer(sk: Array[Byte], none: Any): Any = Decoder.Hll.cached(sk).estimateLong()
+  }
+
+  case object HllStderr extends ProbeKernel("hll_stderr", One, DoubleType, Seq(Double.NaN)) {
+    def answer(sk: Array[Byte], none: Any): Any = Decoder.Hll.cached(sk).standardError
+  }
+
+  /** Register-wise max of two HLL sketches, serialized. The merge runs on a
+    * copy: it is in place, and the decodes are the memo's. */
+  case object HllSetUnion extends ProbeKernel("hll_set_union", Seq(BinaryType, BinaryType),
+      BinaryType, Seq(null, null), nullable = true) {
+    def answer(a: Array[Byte], b: Any): Any = Decoder.Hll.cached(a).copySketch()
+      .merge(Decoder.Hll.cached(b.asInstanceOf[Array[Byte]])).serialize()
+  }
+
+  case object KllQuantile extends ProbeKernel("kll_quantile", Q, DoubleType,
+      Seq(Double.NaN, null)) {
+    def answer(sk: Array[Byte], q: Any): Any =
+      Decoder.Kll.cached(sk).quantile(q.asInstanceOf[Double])
+  }
+
+  case object KllN extends ProbeKernel("kll_n", One, LongType, Seq(-1L)) {
+    def answer(sk: Array[Byte], none: Any): Any = Decoder.Kll.cached(sk).n
+  }
+
+  case object TDigestQuantile extends ProbeKernel("tdigest_quantile", Q, DoubleType,
+      Seq(Double.NaN, null)) {
+    def answer(sk: Array[Byte], q: Any): Any =
+      Decoder.Td.cached(sk).quantile(q.asInstanceOf[Double])
+  }
+
+  case object TDigestRank extends ProbeKernel("tdigest_rank", Q, DoubleType,
+      Seq(Double.NaN, null)) {
+    def answer(sk: Array[Byte], x: Any): Any =
+      Decoder.Td.cached(sk).rank(x.asInstanceOf[Double])
+  }
+
+  /** The `k` heaviest entries of a TopK sketch. */
+  case object TopKEntries extends ProbeKernel("topk_entries", Seq(BinaryType, LongType),
+      EntryList, NoEntries :+ null) {
+    def answer(sk: Array[Byte], k: Any): Any = listing(Decoder.TopK.cached(sk)
+      .topK(k.asInstanceOf[Long].toInt)
+      .map { case (key, est) => InternalRow(UTF8String.fromString(key), est) })
+  }
+
+  case object MgEntries extends ProbeKernel("mg_entries", One, EntryList, NoEntries,
+      nullable = true) {
+    def answer(sk: Array[Byte], none: Any): Any = listing(Decoder.Mg.cached(sk).entries.toArray
+      .sortBy { case (k, v) => (-v, k) }
+      .map { case (k, v) => InternalRow(UTF8String.fromString(k), v) })
+  }
+
+  /** All (key, f, e) entries of an FSS summary: monitored count f and its
+    * error bound e, f desc. */
+  case object FssEntries extends ProbeKernel("fss_entries", One, FssEntryList, NoEntries,
+      nullable = true) {
+    def answer(sk: Array[Byte], none: Any): Any = listing(Decoder.Fss.cached(sk).entries.toArray
+      .sortBy { case (k, f, _) => (-f, k) }
+      .map { case (k, f, e) => InternalRow(UTF8String.fromString(k), f, e) })
+  }
 }

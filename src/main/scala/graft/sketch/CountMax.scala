@@ -107,20 +107,29 @@ object CountMax {
 
   def deserialize(bytes: Array[Byte]): CountMax = {
     val bb = SketchIO.reader(bytes, Magic, "CountMax")
+    SketchIO.need(bb, 4 + 4 + 8 + 8, "CountMax")
     val depth = bb.getInt
     val width = bb.getInt
     val seed = bb.getLong
     val total = bb.getLong
+    require(depth >= 1 && depth <= 16 && SketchIO.isWidth(width),
+      s"not a valid CountMax sketch: depth $depth, width $width")
+    // every slot holds at least a key length and a counter
+    SketchIO.need(bb, 12L * depth * width, "CountMax")
     val keys = new Array[String](depth * width)
     val counters = new Array[Long](depth * width)
     var i = 0
     while (i < keys.length) {
+      SketchIO.need(bb, 4, "CountMax")
       val klen = bb.getInt
+      require(klen >= -1 && klen <= bb.remaining,
+        s"not a valid CountMax sketch: key of $klen bytes, ${bb.remaining} left")
       if (klen >= 0) {
         val kb = new Array[Byte](klen)
         bb.get(kb)
         keys(i) = new String(kb, java.nio.charset.StandardCharsets.UTF_8)
       }
+      SketchIO.need(bb, 8, "CountMax")
       counters(i) = bb.getLong
       i += 1
     }

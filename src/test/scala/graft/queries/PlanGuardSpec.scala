@@ -374,7 +374,7 @@ class PlanGuardSpec extends SparkTestBase {
     // equi-join's
     val joinIdx = Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
       .map(p.indexOf).filter(_ >= 0).minOption.getOrElse(-1)
-    val probeIdx = """UDF\(Subquery subquery#\d+, \[id=#\d+\], cast\(l_orderkey""".r
+    val probeIdx = """bloom_contains\(Subquery subquery#\d+, \[id=#\d+\], cast\(l_orderkey""".r
       .findFirstMatchIn(p).map(_.start).getOrElse(-1)
     assert(joinIdx >= 0, p)
     assert(probeIdx > joinIdx, s"bloom probe must be under the join:\n$p")
@@ -388,8 +388,7 @@ class PlanGuardSpec extends SparkTestBase {
       : Seq[org.apache.spark.sql.execution.ScalarSubquery] = {
     object Walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     Walk.flatMap(df.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
-      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF
-          if u.dataType == org.apache.spark.sql.types.BooleanType => u.children.head
+      case p @ graft.agg.SketchProbe(graft.agg.ProbeKernel.BloomContains, _) => p.children.head
     })).collect { case s: org.apache.spark.sql.execution.ScalarSubquery => s }
   }
 

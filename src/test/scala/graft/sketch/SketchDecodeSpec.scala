@@ -112,4 +112,14 @@ class SketchDecodeSpec extends AnyFunSuite {
       _.putInt(nAt, 1 << 30), _.putInt(nAt, -1),
       _.putInt(nAt + 4, 1 << 30), _.putInt(nAt + 4, -2))
   }
+
+  test("CountMax decode rejects truncated blobs, oversized headers and key lengths") {
+    val cmx = CountMax(2, 64)
+    keys.foreach(cmx.update(_, 1L))
+    // header offsets: magic 0, depth 4, width 8, seed 12, total 20, then the
+    // first slot's key length 28
+    check("CountMax", cmx.serialize(), CountMax.deserialize(_).serialize())(
+      _.putInt(4, 0), _.putInt(4, 17), _.putInt(8, 100), _.putInt(8, -64),
+      _.putInt(8, 1 << 20), _.putInt(8, 1 << 31), _.putInt(28, 1 << 30), _.putInt(28, -2))
+  }
 }
