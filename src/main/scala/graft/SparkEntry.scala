@@ -26,7 +26,7 @@ object SparkEntry {
     * via the mergeable CM+heap sketch — the minimum end-to-end slice of
     * SURVEY.md §7.3: tokenize → explode → sketch-aggregate → explode top-k. */
   def entry(spark: SparkSession): DataFrame = {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val tokens = docs.select(explode(split(col("text"), " ")).as("token"))
     tokens
       .agg(cm_topk(col("token"), lit(1L), capacity = 1024, eps = 1e-4).as("sk"))
@@ -192,7 +192,7 @@ object SparkEntry {
     // single-task-per-query global sort.
     "q77_hard_negatives" -> AnnQueries.hardNegatives _,
     // q78: the flagship heavy-hitter build run THROUGH Structured
-    // Streaming micro-batches (complete mode, monoid state merge) —
+    // Streaming micro-batches (each batch's sketch folded on the driver) —
     // identical output contract to q02, whose oracle it shares verbatim.
     "q78_stream_topk" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamSketch.streamTopKUsers(s, d)),
@@ -262,7 +262,7 @@ object SparkEntry {
     // milli compression ratio via the word→symbol-count dimension join.
     "q89_bpe_tokenize" -> TextQueries.bpeTokenize _,
     // q90: the QUANTILE face of the streaming layer — q08's KLL build run
-    // THROUGH complete-mode micro-batches (merge monoid, compaction-free
+    // THROUGH micro-batches folded on the driver (merge monoid, compaction-free
     // at the gate k); shares q08's oracle verbatim. The streaming quartet:
     // stateful window (q75), heavy hitters (q78), dedup (q79/q82),
     // quantiles (q90).
@@ -318,7 +318,7 @@ object SparkEntry {
     // q104: CUBE(event_type, hour) with per-cell HLL distinct users — the
     // grouping-sets × sketch composition, exact counts as the audit twin.
     "q104_cube_distinct" -> OlapQueries.cubeDistinctUsers _,
-    // q105: the streamed HLL distinct build (complete-mode micro-batches;
+    // q105: the streamed HLL distinct build (sketches folded per micro-batch;
     // idempotent monoid ⇒ any slicing == batch) — shares q05's oracle.
     "q105_stream_hll" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamSketch.streamHllUsers(s, d)),
@@ -340,7 +340,7 @@ object SparkEntry {
     // q111: frequent co-occurring part pairs — basket arrays + in-plan
     // pair expansion (one shuffle), support floor, TakeOrdered top-20.
     "q111_frequent_pairs" -> AnalyticsQueries.frequentPartPairs _,
-    // q112: the streamed Bloom build (complete-mode micro-batches; OR
+    // q112: the streamed Bloom build (sketches folded per micro-batch; OR
     // merge is an idempotent monoid) — shares q07's oracle verbatim.
     "q112_stream_bloom" -> ((s: SparkSession, d: String) =>
       graft.streaming.StreamSketch.streamBloomOrders(s, d)),
@@ -829,7 +829,7 @@ object SparkEntry {
 
     "q05_hll_users" -> HllUsersOracleSql,
 
-    // q105: the STREAMED HLL build (complete-mode micro-batches) is an
+    // q105: the STREAMED HLL build (folded micro-batch sketches) is an
     // idempotent merge monoid ⇒ bit-identical to batch for any slicing —
     // it binds q05's oracle string verbatim (the q78/q90/q97 discipline).
     "q105_stream_hll" -> HllUsersOracleSql,
@@ -846,7 +846,7 @@ object SparkEntry {
 
     "q07_bloom_orders" -> BloomOrdersOracleSql,
 
-    // q112: the STREAMED Bloom build (complete-mode micro-batches; OR
+    // q112: the STREAMED Bloom build (folded micro-batch sketches; OR
     // merge is an idempotent monoid ⇒ bit-identical to batch for any
     // slicing) binds q07's oracle string verbatim — the q78/q90/q105
     // shared-oracle discipline, closing the streaming claim for every

@@ -378,7 +378,7 @@ object Multimodal {
     // task regardless of cores — the per-row codec work is exactly the
     // heavy-kernel case Tables.widen exists for
     graft.queries.Tables.widen(
-      spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id")))
+      graft.queries.Tables.documents(spark, sfDir).select(col("doc_id")))
       .as[Long]
       .map { id =>
         (id % 3) match {

@@ -106,36 +106,24 @@ private[graft] object SliceReplay {
   }
 
   /** Sink for COMPLETE-mode aggregates whose re-emission is bounded by
-    * construction (one sketch-sized row, or the k-row top set): each
-    * micro-batch's emission is captured via a bounded driver collect, and
-    * the LAST emission
-    * (complete mode's final merged state) is handed back as a local
-    * one-partition frame. Replaces the per-micro-batch parquet OVERWRITE +
-    * read-back sink, whose commit jobs were pure fixed cost: one write job
-    * per batch plus a read job, ~0.4–0.6 s of every complete-mode gate
-    * query's wall time at any scale (the emission is state-sized, never
-    * data-sized, so the capture stays bounded on a 100 TB stream too).
-    * Append-mode logs (q75/q93) keep their distributed parquet sinks —
-    * those are row-scaled. */
+    * construction (q97's one-row top-(k+1) buffer): each micro-batch's
+    * emission is captured via a bounded driver collect, and the LAST
+    * emission (complete mode's final merged state) is handed back. It
+    * replaced a per-micro-batch parquet OVERWRITE + read-back sink, whose
+    * write and read jobs were pure fixed cost. q79's per-hash census still
+    * overwrites parquet, and append-mode logs (q75/q93) keep their
+    * distributed parquet sinks — those are row-scaled. The streamed sketch
+    * gates (q78/q90/q105/q112) keep no state store at all: they fold each
+    * micro-batch's sketch on the driver (StreamSketch.SketchFold). */
   final class CompleteCapture {
-    @volatile private var last: (Array[org.apache.spark.sql.Row], StructType) =
-      (Array.empty, null)
+    @volatile private var last: Option[org.apache.spark.sql.Row] = None
     /** foreachBatch body: bounded collect of the re-emitted aggregate. */
     def sink(df: DataFrame, batchId: Long): Unit =
-      last = (df.collect(), df.schema)
-    /** The captured final emission as a one-partition local frame. */
-    def result(spark: SparkSession): DataFrame = {
-      val (rows, schema) = last
-      require(schema != null, "complete-mode stream emitted no batch")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
-    }
+      last = df.collect().headOption
     /** The captured final emission's single row (one-row aggregates). */
     def headRow: org.apache.spark.sql.Row = {
-      val (rows, schema) = last
-      require(schema != null && rows.nonEmpty,
-        "complete-mode stream emitted no batch")
-      rows(0)
+      require(last.nonEmpty, "complete-mode stream emitted no batch")
+      last.get
     }
   }
 

@@ -1,38 +1,113 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import graft.agg.Decoder
 import graft.agg.SketchFunctions._
 import graft.queries.Tables
+import graft.sketch.Mergeable
 
 /**
- * q78: the sketch layer's streaming face as a GATE query — heavy-hitter
- * build (CM + candidate heap, the flagship operator) run through
- * Structured Streaming micro-batches, sharing q02's oracle string
- * verbatim.
+ * The sketch layer's streaming faces as GATE queries: q78 (heavy hitters,
+ * `cm_topk`), q90 (quantiles, `kll_sketch`), q105 (cardinality,
+ * `hll_sketch`) and q112 (membership, `bloom_sketch`) build their sketch
+ * through Structured Streaming micro-batches, each sharing its batch
+ * twin's oracle string verbatim.
  *
- * Why this is exact: the sketch aggregates are mergeable MONOIDS, so a
- * complete-mode streaming aggregation — partial buffers merged into the
- * state store across micro-batches — must produce bit-identically the same
- * sketch as one batch pass, regardless of how the stream is sliced
- * (StreamingSpec pins the bit-parity; this gate pins the VALUES against
- * DuckDB). q02's sizing puts the gate in the deterministic regime
- * (capacity 4096 ≥ user keyspace → no heap trim; ε=1e-4 → collision-free
- * at the verify scale), so the streamed heavy-hitter listing equals exact
- * SQL counts.
+ * Why this is exact: the sketches are mergeable MONOIDS, so folding each
+ * micro-batch's sketch into a running sketch gives the same sketch as one
+ * batch pass, however the stream is sliced (StreamSketchSpec pins it;
+ * these gates pin the VALUES against DuckDB). Each gate's sizing puts it
+ * in the deterministic regime, so the streamed answer equals exact SQL.
  *
- * No watermark, no event-time: a global monoid aggregate is
- * order-insensitive, which is exactly the property that makes the sketch
- * library streaming-ready for free — this gate is the driver-checked proof.
- * Scale: state = ONE sketch buffer (KB–MB), constant in stream length;
- * complete-mode re-emission cost is the sketch size, not the data.
+ * The fold ([[SketchFold]]) is the paper's shape — one in-memory sketch
+ * that every packet batch is folded into and a query reads. Each
+ * micro-batch runs through `foreachBatch` as a plain batch aggregate (the
+ * library aggregator, partial buffers and all), and the driver merges
+ * that one sketch into the running one with the kind's [[Decoder]] and
+ * `Mergeable.merge`. No state store is involved: the running blob is
+ * written atomically to `<checkpoint>/sketch/<batchId>` after every batch,
+ * so a restart on the same checkpoint resumes and a replayed batch id is
+ * never counted twice. No watermark, no event-time: a global monoid
+ * aggregate is order-insensitive. Scale: the driver holds ONE sketch
+ * (KB–MB), constant in stream length.
  */
 object StreamSketch {
 
   private val Slices = 3
 
-  /** One global sketch buffer — a single state partition IS the layout. */
-  private val StatePartitions = "1"
+  /** Folds micro-batches into one running sketch of kind `decode`: each
+    * batch's `build` aggregate merges into the sketch of the batch before,
+    * and the running blob is written atomically to `checkpoint/sketch/<id>`.
+    * Batch b starts from blob b-1, or from memory when memory holds exactly
+    * b-1, so a batch id handed in twice replaces its own result. */
+  private[streaming] final class SketchFold[S <: Mergeable[S]](decode: Decoder[S],
+      build: Column, checkpoint: String) {
+    private val dir = new File(checkpoint, "sketch")
+    /** (batch id, running sketch, its blob) after the last folded batch. */
+    @volatile private var held: Option[(Long, S, Array[Byte])] = None
+
+    private def blob(id: Long) = new File(dir, id.toString)
+
+    /** foreachBatch body. */
+    def sink(batch: DataFrame, batchId: Long): Unit = {
+      val prior = held match {
+        case Some((id, s, _)) if id == batchId - 1 => Some(s)
+        case _ if batchId == 0 => None
+        case _ =>
+          val f = blob(batchId - 1)
+          require(f.isFile, s"no folded sketch for batch ${batchId - 1} under $dir")
+          Some(decode(Files.readAllBytes(f.toPath)))
+      }
+      held = None // the merge below may mutate the held sketch
+      val part = decode(batch.agg(build).head().getAs[Array[Byte]](0))
+      val running = prior.fold(part)(_.merge(part))
+      val bytes = running.serialize()
+      dir.mkdirs()
+      val tmp = new File(dir, s".$batchId.tmp")
+      Files.write(tmp.toPath, bytes)
+      Files.move(tmp.toPath, blob(batchId).toPath,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      // batch b+1 reads only blob b, and a replay of b+1 reads blob b
+      blob(batchId - 2).delete()
+      held = Some((batchId, running, bytes))
+    }
+
+    /** The running blob after the last batch folded by this sink, else
+      * the newest one on disk, as a one-row local frame with column `sk`. */
+    def result(spark: SparkSession): DataFrame = {
+      val bytes = held.map(_._3).getOrElse {
+        val ids = Option(dir.list()).getOrElse(Array.empty[String])
+          .filterNot(_.startsWith(".")).map(_.toLong)
+        require(ids.nonEmpty, s"no micro-batch was folded under $dir")
+        Files.readAllBytes(blob(ids.max).toPath)
+      }
+      spark.createDataFrame(java.util.List.of(Row(bytes)),
+        StructType(Seq(StructField("sk", BinaryType))))
+    }
+  }
+
+  /** Streams the staged arrivals under `root/in` (checkpoint `root/ckpt`)
+    * through a [[SketchFold]]; returns the final sketch frame and the
+    * number of data micro-batches. */
+  private[streaming] def foldStream[S <: Mergeable[S]](spark: SparkSession,
+      schema: StructType, root: String, decode: Decoder[S],
+      build: Column): (DataFrame, Int) = {
+    val fold = new SketchFold(decode, build, s"$root/ckpt")
+    val q = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(s"$root/in")
+      .writeStream
+      .option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch(fold.sink _)
+      .start()
+    val batches = SliceReplay.runToCompletion(q).batches
+    (fold.result(spark), batches)
+  }
 
   /** Progress of the most recent run (test evidence only). */
   @volatile private[graft] var lastRunBatches: Int = 0
@@ -46,23 +121,10 @@ object StreamSketch {
       .select(col("user_id").cast("string").as("k"),
         unix_micros(col("ts").cast("timestamp")).as("tus"))
     val schema = SliceReplay.stage(spark, ev, slices, root)
-    val sketch = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .agg(cm_topk(col("k"), lit(1L), capacity = 4096, eps = 1e-4).as("sk"))
-    // complete mode re-emits the full (one-row) aggregate each micro-batch;
-    // the LAST capture is the final merged sketch (bounded driver collect —
-    // see SliceReplay.CompleteCapture)
-    val cap = new SliceReplay.CompleteCapture
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      sketch.writeStream.outputMode("complete")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch(cap.sink _)
-        .start()
-    }
-    lastRunBatches = SliceReplay.runToCompletion(q).batches
-    cap.result(spark)
-      .select(explode(topk_entries(col("sk"), 20)).as("e"))
+    val (sk, batches) = foldStream(spark, schema, root, Decoder.TopK,
+      cm_topk(col("k"), lit(1L), capacity = 4096, eps = 1e-4))
+    lastRunBatches = batches
+    sk.select(explode(topk_entries(col("sk"), 20)).as("e"))
       .select(col("e.key").as("user_id"), col("e.est").as("est_count"))
       .orderBy(desc("est_count"), asc("user_id"))
   }
@@ -70,8 +132,8 @@ object StreamSketch {
   /** Progress of the most recent q90 run (test evidence only). */
   @volatile private[graft] var lastKllRunBatches: Int = 0
 
-  /** q90: the QUANTILE face of the streaming layer — a KLL build through
-    * complete-mode micro-batches, sharing q08's oracle string verbatim.
+  /** q90: the QUANTILE face of the streaming layer — a KLL build folded over
+    * micro-batches, sharing q08's oracle string verbatim.
     * Same exactness argument as q78 one tier over: KLL partial buffers are
     * a merge monoid, and q08's sizing (k = 65536 ≥ every verify-scale row
     * count) keeps the sketch compaction-free, so ANY slicing of the stream
@@ -80,7 +142,7 @@ object StreamSketch {
     * table's own order keys — tus here only SLICES the replay (no
     * watermark, no event-time op: a global monoid aggregate is
     * order-insensitive, and the spec varies the slicing to prove it).
-    * State = ONE sketch buffer, constant
+    * The driver holds ONE sketch, constant
     * in stream length; at production k the same plan is the approximate
     * streaming-quantile service with the q64-audited 2/k rank bound. */
   def streamKllPrice(spark: SparkSession, sfDir: String,
@@ -91,19 +153,9 @@ object StreamSketch {
       .select(col("l_extendedprice").as("x"),
         col("l_orderkey").cast("long").as("tus"))
     val schema = SliceReplay.stage(spark, li, slices, root)
-    val sketch = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .agg(kll_sketch(col("x"), k = 65536).as("sk"))
-    val cap = new SliceReplay.CompleteCapture
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      sketch.writeStream.outputMode("complete")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch(cap.sink _)
-        .start()
-    }
-    lastKllRunBatches = SliceReplay.runToCompletion(q).batches
-    val sk = cap.result(spark)
+    val (sk, batches) = foldStream(spark, schema, root, Decoder.Kll,
+      kll_sketch(col("x"), k = 65536))
+    lastKllRunBatches = batches
     Seq(0.01, 0.25, 0.5, 0.75, 0.99).toDF("p")
       .select(col("p"), kll_quantile(sk.scalar(), col("p")).as("quantile_value"))
       .orderBy("p")
@@ -113,7 +165,7 @@ object StreamSketch {
   @volatile private[graft] var lastHllRunBatches: Int = 0
 
   /** q105: the CARDINALITY face of the streaming layer — q05's HLL
-    * distinct-user build through complete-mode micro-batches, sharing
+    * distinct-user build folded over micro-batches, sharing
     * q05's oracle string verbatim; with q78 (heavy hitters) and q90
     * (quantiles) this completes the streaming build of every mergeable
     * tier in the library's sketch core. Same exactness argument: HLL
@@ -124,8 +176,8 @@ object StreamSketch {
     * The exact count in the output is the batch AUDIT over the very
     * arrival files the stream consumed (streaming cannot produce an exact
     * distinct — that is the point of the operator): the streamed artifact
-    * is the sketch, the twin pins it inside the 3σ bound. State = ONE
-    * 16 KB register array, constant in stream length. */
+    * is the sketch, the twin pins it inside the 3σ bound. The driver holds
+    * ONE 16 KB register array, constant in stream length. */
   def streamHllUsers(spark: SparkSession, sfDir: String,
       slices: Int = Slices): DataFrame = {
     val root = SliceReplay.freshRoot("q105")
@@ -133,19 +185,10 @@ object StreamSketch {
       .select(col("user_id").cast("string").as("k"),
         unix_micros(col("ts").cast("timestamp")).as("tus"))
     val schema = SliceReplay.stage(spark, ev, slices, root)
-    val sketch = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .agg(hll_sketch(col("k")).as("sk"))
-    val cap = new SliceReplay.CompleteCapture
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      sketch.writeStream.outputMode("complete")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch(cap.sink _)
-        .start()
-    }
-    lastHllRunBatches = SliceReplay.runToCompletion(q).batches
-    val sk = cap.result(spark).scalar()
+    val (frame, batches) = foldStream(spark, schema, root, Decoder.Hll,
+      hll_sketch(col("k")))
+    lastHllRunBatches = batches
+    val sk = frame.scalar()
     spark.read.schema(schema).parquet(s"$root/in")
       .agg(countDistinct(col("k")).as("exact_users"))
       .select(col("exact_users"),
@@ -159,15 +202,15 @@ object StreamSketch {
   @volatile private[graft] var lastBloomRunBatches: Int = 0
 
   /** q112: the MEMBERSHIP face of the streaming layer — q07's Bloom build
-    * through complete-mode micro-batches, sharing q07's oracle string
+    * folded over micro-batches, sharing q07's oracle string
     * verbatim. Bloom merge is bitwise OR — associative, commutative and
     * IDEMPOTENT — so any slicing of the member stream produces
     * bit-identically the batch filter; the probe side (every order
     * against the finished filter) runs batch, exactly q07's split. With
     * q78 (CM), q90 (KLL) and q105 (HLL) this closes the claim: EVERY
     * mergeable sketch tier in the library builds correctly under
-    * Structured Streaming, each pinned by a shared batch oracle. State =
-    * ONE bit array, constant in stream length. */
+    * Structured Streaming, each pinned by a shared batch oracle. The
+    * driver holds ONE bit array, constant in stream length. */
   def streamBloomOrders(spark: SparkSession, sfDir: String,
       slices: Int = Slices): DataFrame = {
     val root = SliceReplay.freshRoot("q112")
@@ -187,20 +230,10 @@ object StreamSketch {
     val expected = math.max(100000L, b.getLong(2))
     val schema = SliceReplay.stage(spark, members, slices, root,
       bounds = Some((b.getLong(0), b.getLong(1))))
-    val sketch = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .agg(bloom_sketch(col("k"), expectedItems = expected, fpp = 1e-9).as("sk"))
-    val cap = new SliceReplay.CompleteCapture
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      sketch.writeStream.outputMode("complete")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch(cap.sink _)
-        .start()
-    }
-    lastBloomRunBatches = SliceReplay.runToCompletion(q).batches
-    graft.queries.SketchQueries.bloomProbeCounts(Tables.orders(spark, sfDir),
-      cap.result(spark).select("sk"),
+    val (sk, batches) = foldStream(spark, schema, root, Decoder.Bloom,
+      bloom_sketch(col("k"), expectedItems = expected, fpp = 1e-9))
+    lastBloomRunBatches = batches
+    graft.queries.SketchQueries.bloomProbeCounts(Tables.orders(spark, sfDir), sk,
       spark.read.schema(schema).parquet(s"$root/in").select(col("k")).distinct())
   }
 }

@@ -433,6 +433,40 @@ class PlanGuardSpec extends SparkTestBase {
     }
   }
 
+  /** The physical plans of every SQL execution `f` starts, streaming
+    * micro-batches and the queries their sinks run included. */
+  private def executedPlans(f: => Unit): Seq[String] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            plans.synchronized(plans += s.physicalPlanDescription)
+          case u: org.apache.spark.sql.execution.ui.SparkListenerSQLAdaptiveExecutionUpdate =>
+            plans.synchronized(plans += u.physicalPlanDescription)
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.TestListenerBus.drain(sc) } finally sc.removeSparkListener(l)
+    plans.synchronized(plans.toList)
+  }
+
+  test("streamed sketch gates fold batch aggregates: library aggregator, no state store") {
+    for ((q, op) <- Seq("q78_stream_topk" -> "topkaggregator",
+        "q90_stream_kll" -> "kllaggregator", "q105_stream_hll" -> "hllaggregator",
+        "q112_stream_bloom" -> "bloomaggregator")) {
+      val plans = executedPlans(graft.SparkEntry.queries(q)(spark, sf("sf0.001"))
+        .write.format("noop").mode("overwrite").save())
+      assert(plans.exists(_.contains(op + "(")), s"$q runs no $op:\n${plans.mkString("\n")}")
+      val stateful = plans.filter(p => p.contains("StateStoreRestore") || p.contains("StateStoreSave"))
+      assert(stateful.isEmpty, s"$q keeps a state store:\n${stateful.mkString("\n")}")
+      spark.catalog.clearCache()
+    }
+  }
+
   test("q103 star join broadcasts the segment dimension and funnels top-10 through TakeOrdered") {
     val p = plan("q103_shipping_priority")
     assert(p.contains("BroadcastHashJoin"), p)
