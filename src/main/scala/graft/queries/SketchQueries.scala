@@ -24,6 +24,15 @@ import graft.agg.SketchFunctions._
  */
 object SketchQueries {
 
+  /** Orders an answer that is tiny by construction (a top-20 listing, one
+    * row per probe probability) inside ONE partition: a single-partition
+    * child already satisfies the Sort's ordered distribution, so the plan
+    * keeps its full Sort and takes no range Exchange, which under AQE
+    * costs a sampling job and a map-stage job. Every row passes through one
+    * task, so only a bounded answer may use it. */
+  private[graft] def sortBounded(df: DataFrame, order: Column*): DataFrame =
+    df.coalesce(1).orderBy(order: _*)
+
   /** q01: CM point-frequency per event_type (collision-free width). */
   def cmPointEventType(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
@@ -40,10 +49,15 @@ object SketchQueries {
     val ev = Tables.events(spark, sfDir)
     val sk = ev.select(col("user_id").cast("string").as("k"))
       .agg(cm_topk(col("k"), lit(1L), capacity = 4096, eps = 1e-4).as("sk"))
-    sk.select(explode(topk_entries(col("sk"), 20)).as("e"))
-      .select(col("e.key").as("user_id"), col("e.est").as("est_count"))
-      .orderBy(desc("est_count"), asc("user_id"))
+    topUsers(sk)
   }
+
+  /** The top-20 listing of the one-row TopK frame `sk` (column `sk`),
+    * heaviest first (q02, and q78 over its streamed sketch). */
+  private[graft] def topUsers(sk: DataFrame): DataFrame =
+    sortBounded(sk.select(explode(topk_entries(col("sk"), 20)).as("e"))
+      .select(col("e.key").as("user_id"), col("e.est").as("est_count")),
+      desc("est_count"), asc("user_id"))
 
   /** q03: ε·N additive-bound audit with a deliberately narrow CM over
     * l_partkey. CM never underestimates (deterministic), and at this sizing
@@ -130,22 +144,25 @@ object SketchQueries {
     bloomProbeCounts(Tables.orders(spark, sfDir), sk, members)
   }
 
-  /** q07's and q112's probe side: every order against the one-row Bloom
-    * frame `sk` (one binary column), and the exact count of orders whose
-    * customer is in `members` (one string key column). The filter rides a
-    * scalar subquery, so every row of a task hands `bloom_contains` the
-    * same array and the decode memo answers by identity; a cross join
-    * would copy the filter into every probe row. */
+  /** q07's and q112's probe side, in one aggregate over one scan of the
+    * orders: every order against the one-row Bloom frame `sk` (one binary
+    * column), and the exact count of orders whose customer is in `members`
+    * (one string key column). The filter rides a scalar subquery, so every
+    * row of a task hands `bloom_contains` the same array and the decode
+    * memo answers by identity; a cross join would copy the filter into
+    * every probe row. Membership is an IN subquery in the projection,
+    * planned as an existence join: an order counts once however often its
+    * customer appears in `members`, and an order with a null key never
+    * counts — a semi join's count. */
   private[graft] def bloomProbeCounts(ord: DataFrame, sk: DataFrame,
       members: DataFrame): DataFrame = {
     val key = col("o_custkey").cast("string")
-    val probed = ord.select(bloom_contains(sk.scalar(), key).as("hit"))
-    val trueMembers = ord.join(members.toDF("ck"), key === col("ck"), "left_semi")
-    probed.agg(
-      count(lit(1)).as("probes"),
-      sum(when(col("hit"), 1L).otherwise(0L)).as("bloom_positives"))
-      .crossJoin(trueMembers.agg(count(lit(1)).as("true_positives")))
-      .select(col("probes"), col("bloom_positives"), col("true_positives"))
+    ord.select(bloom_contains(sk.scalar(), key).as("hit"),
+        key.isin(members).as("member"))
+      .agg(
+        count(lit(1)).as("probes"),
+        sum(when(col("hit"), 1L).otherwise(0L)).as("bloom_positives"),
+        count_if(col("member")).as("true_positives"))
   }
 
   /** q28: the reference's FilteredSketch composition (C4,
@@ -404,20 +421,24 @@ object SketchQueries {
     * exact (DuckDB `quantile_disc` semantics). */
   def kllPrice(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
-    val sk = li.agg(kll_sketch(col("l_extendedprice"), k = 65536).as("sk"))
-    probsDf(spark)
-      .select(col("p"), kll_quantile(sk.scalar(), col("p")).as("quantile_value"))
-      .orderBy("p")
+    kllQuantiles(li.agg(kll_sketch(col("l_extendedprice"), k = 65536).as("sk")))
   }
+
+  /** q08's answer over the one-row KLL frame `sk`: one quantile per
+    * probe probability (q08, and q90 over its streamed sketch). */
+  private[graft] def kllQuantiles(sk: DataFrame): DataFrame =
+    sortBounded(probsDf(sk.sparkSession)
+      .select(col("p"), kll_quantile(sk.scalar(), col("p")).as("quantile_value")),
+      col("p"))
 
   /** q09: KLL quantiles of documents.n_chars (long-typed output). */
   def kllNchars(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val sk = docs.agg(kll_sketch(col("n_chars").cast("double"), k = 65536).as("sk"))
-    probsDf(spark)
+    sortBounded(probsDf(spark)
       .select(col("p"),
-        kll_quantile(sk.scalar(), col("p")).cast("long").as("quantile_value"))
-      .orderBy("p")
+        kll_quantile(sk.scalar(), col("p")).cast("long").as("quantile_value")),
+      col("p"))
   }
 
   /** q10: t-digest rank-accuracy audit on l_extendedprice: the estimated
@@ -438,7 +459,7 @@ object SketchQueries {
       .select(col("p"), col("n"),
         (abs(col("below").cast("double") / col("n").cast("double") - col("p")) <= 0.02)
           .as("rank_within_bound"))
-    ranks.orderBy("p")
+    sortBounded(ranks, col("p"))
   }
 
   // ---- q85: heavy-change detection between adjacent epochs ----

@@ -24,6 +24,11 @@ import org.apache.spark.sql.types.StructType
  * every slice inside a single task even if AQE coalesces, so each
  * partition directory holds exactly one part file to promote.
  *
+ * Every gate's staging write and streaming run go through [[scoped]],
+ * which routes `file:` paths to [[ForkFreeLocalFileSystem]] for that
+ * span: without libhadoop, Hadoop's local file system forks `chmod` and
+ * `readlink` for each file, directory and checkpoint-log commit.
+ *
  * This staging exists only to synthesize arrival from a static table —
  * production points the identical readStream plans at the real landing
  * zone (files/Kafka), where arrival order is physical.
@@ -47,15 +52,17 @@ private[graft] object SliceReplay {
   }
 
   /** Move the single parquet part file of `stageDir` to `dest` and stamp
-    * `modMs` so the file source replays slices oldest-first. No part file
-    * (empty slice) is fine — the slice is just skipped. */
+    * `modMs` so the file source replays slices oldest-first; a stamp that
+    * does not take fails, as it would replay slices out of order. No part
+    * file (empty slice) is fine — the slice is just skipped. */
   private def promotePartFile(stageDir: String, dest: String, modMs: Long): Unit = {
     val parts = Option(new File(stageDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
     require(parts.length <= 1, s"expected one part file in $stageDir")
     parts.foreach { p =>
       Files.move(p.toPath, Paths.get(dest), StandardCopyOption.REPLACE_EXISTING)
-      new File(dest).setLastModified(modMs)
+      if (!new File(dest).setLastModified(modMs))
+        throw new java.io.IOException(s"could not set the modification time of $dest")
     }
   }
 
@@ -66,7 +73,7 @@ private[graft] object SliceReplay {
     * Returns the staged schema for the readStream contract. */
   def stage(spark: SparkSession, df: DataFrame, slices: Int, root: String,
       last: Option[DataFrame] = None,
-      bounds: Option[(Long, Long)] = None): StructType = {
+      bounds: Option[(Long, Long)] = None): StructType = scoped(spark) {
     val (minTus, maxTus) = bounds.getOrElse {
       val r = df.agg(min(col("tus")), max(col("tus"))).head()
       (r.getLong(0), r.getLong(1))
@@ -89,20 +96,37 @@ private[graft] object SliceReplay {
     df.schema
   }
 
-  /** Start streaming queries with `spark.sql.shuffle.partitions` set to
-    * `statePartitions` for the duration of the plan's materialization:
-    * stateful operators inherit the setting at query start and every
-    * micro-batch pays a per-partition state commit, so the gates size the
-    * state layout to their key cardinality instead of the batch engine's
-    * 32 — the same independent-sizing knob a 100 TB run turns UP (state
-    * partitions ≈ executor cores, not batch shuffle width). Generic in the
-    * block's result so a gate can start SEVERAL queries under one sizing
-    * scope (q79 starts both its faces here and drains them concurrently). */
-  def startSized[T](spark: SparkSession, statePartitions: String)(
-      start: => T): T = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try start finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  /** Hadoop keys that route `file:` paths to the fork-free local file
+    * system, for the `FileSystem` API and the `FileContext` API. The
+    * `FileSystem` cache ignores `fs.file.impl` once "file" is cached, so
+    * the cache is bypassed for the scope. */
+  private val ForkFreeLocalIo = Seq(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true",
+    "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
+  /** Runs `body` with [[ForkFreeLocalIo]] set in the session conf and, when
+    * given, `spark.sql.shuffle.partitions` set to `statePartitions`; every
+    * key is restored on every exit path. The scope must span start, drain
+    * and stop: Spark builds a file source's log on the stream thread after
+    * `start()` returns, from the session conf of that moment. Stateful
+    * operators take their partition count at query start, and every
+    * micro-batch pays one state commit per partition, so the gates size
+    * the state layout to their key cardinality instead of the session's
+    * batch shuffle width — the knob a 100 TB run turns UP (state
+    * partitions ≈ executor cores). */
+  def scoped[T](spark: SparkSession, statePartitions: Option[String] = None)(
+      body: => T): T = {
+    val keys = ForkFreeLocalIo ++
+      statePartitions.map("spark.sql.shuffle.partitions" -> _)
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Sink for COMPLETE-mode aggregates whose re-emission is bounded by

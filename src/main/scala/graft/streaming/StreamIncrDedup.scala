@@ -55,7 +55,7 @@ object StreamIncrDedup {
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft-incr-dedup/q82").toString
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    IncrementalDedup.prepareBase(spark, base, dir)
+    SliceReplay.scoped(spark)(IncrementalDedup.prepareBase(spark, base, dir))
 
     val root = SliceReplay.freshRoot("q82")
     // deterministic monotone arrivals: planted copies re-id past the raw
@@ -80,8 +80,8 @@ object StreamIncrDedup {
       .join(index, Seq("h"), "left_outer") // stream-static, per-batch
       .filter(col("in_base").isNull)
       .select(col("h"), col("tus"))
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      negatives.unionAll(rescued)
+    val st = SliceReplay.scoped(spark, Some(StatePartitions)) {
+      SliceReplay.runToCompletion(negatives.unionAll(rescued)
         .withColumn("ts", timestamp_micros(col("tus")))
         .withWatermark("ts", WatermarkDelay)
         .dropDuplicatesWithinWatermark("h")
@@ -91,9 +91,8 @@ object StreamIncrDedup {
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("append").parquet(s"$root/survivors")
         }
-        .start()
+        .start())
     }
-    val st = SliceReplay.runToCompletion(q)
     lastRunBatches = st.batches
     lastStateRows = st.stateRows
 

@@ -42,7 +42,7 @@ object StreamJoin {
   /** Attribution horizon: purchases within 2 h after the click. */
   private[graft] val HorizonUs = 7200000000L
 
-  /** State-store layout width for the gate (see SliceReplay.startSized):
+  /** State-store layout width for the gate (see SliceReplay.scoped):
     * sized to the gate's resident state (hundreds of rows), not the batch
     * engine's shuffle width — every micro-batch pays one state-store
     * commit PER PARTITION per stateful operator, so oversized layouts are
@@ -111,15 +111,14 @@ object StreamJoin {
       .select(col("user_id"), col("cid"), col("pid"),
         (col("ptus") - col("ctus")).as("lag_us"),
         floor(col("value") * lit(1000000L)).cast("long").as("val_micro"))
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      pairs.writeStream.outputMode("append")
+    val stats = SliceReplay.scoped(spark, Some(StatePartitions)) {
+      SliceReplay.runToCompletion(pairs.writeStream.outputMode("append")
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("append").parquet(s"$root/pairs")
         }
-        .start()
+        .start())
     }
-    val stats = SliceReplay.runToCompletion(q)
     lastRunBatches = stats.batches
     lastRunStateRowsMax = stats.stateRowsMax
     val logSchema = StructType(Seq(

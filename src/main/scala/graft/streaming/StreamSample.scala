@@ -60,13 +60,12 @@ object StreamSample {
     // complete mode re-emits the one-row aggregate; the last bounded
     // capture wins (see SliceReplay.CompleteCapture)
     val cap = new SliceReplay.CompleteCapture
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      agg.writeStream.outputMode("complete")
+    lastRunBatches = SliceReplay.scoped(spark, Some(StatePartitions)) {
+      SliceReplay.runToCompletion(agg.writeStream.outputMode("complete")
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch(cap.sink _)
-        .start()
-    }
-    lastRunBatches = SliceReplay.runToCompletion(q).batches
+        .start())
+    }.batches
     val rows = TopRowsCodec.deserialize(cap.headRow.getAs[Array[Byte]]("top"))
     require(rows.length == k + 1,
       s"priority sample needs k+1 = ${k + 1} rows for tau, got ${rows.length}")

@@ -43,7 +43,7 @@ object StreamSessionize {
   private val WatermarkDelay = "30 minutes"
   private val WatermarkUs = 1800000000L
 
-  /** State-store layout width for the gate (see SliceReplay.startSized):
+  /** State-store layout width for the gate (see SliceReplay.scoped):
     * sized to the gate's resident state (hundreds of rows), not the batch
     * engine's shuffle width — every micro-batch pays one state-store
     * commit PER PARTITION per stateful operator, so oversized layouts are
@@ -70,15 +70,14 @@ object StreamSessionize {
       .agg(count(lit(1)).as("n_events"),
         (max(col("tus")) - min(col("tus"))).as("dur_us"))
       .select(col("user_id"), col("n_events"), col("dur_us"))
-    val q = SliceReplay.startSized(spark, StatePartitions) {
-      sessions.writeStream.outputMode("append")
+    val stats = SliceReplay.scoped(spark, Some(StatePartitions)) {
+      SliceReplay.runToCompletion(sessions.writeStream.outputMode("append")
         .option("checkpointLocation", s"$root/ckpt")
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("append").parquet(s"$root/sessions")
         }
-        .start()
+        .start())
     }
-    val stats = SliceReplay.runToCompletion(q)
     lastRunBatches = stats.batches
     lastRunStateRows = stats.stateRows
     val logSchema = StructType(Seq(

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
 import graft.agg.Decoder
 import graft.agg.SketchFunctions._
-import graft.queries.Tables
+import graft.queries.{SketchQueries, Tables}
 import graft.sketch.Mergeable
 
 /**
@@ -35,6 +35,12 @@ import graft.sketch.Mergeable
  * never counted twice. No watermark, no event-time: a global monoid
  * aggregate is order-insensitive. Scale: the driver holds ONE sketch
  * (KB–MB), constant in stream length.
+ *
+ * Staging and the stream run inside [[SliceReplay.scoped]], so the
+ * checkpoint logs and the staged slices are written without a shell fork
+ * per file. Each gate answers through its batch twin's own code over the
+ * folded frame (`SketchQueries.topUsers`, `kllQuantiles`,
+ * `bloomProbeCounts`), so the two can only agree.
  */
 object StreamSketch {
 
@@ -98,14 +104,15 @@ object StreamSketch {
       schema: StructType, root: String, decode: Decoder[S],
       build: Column): (DataFrame, Int) = {
     val fold = new SketchFold(decode, build, s"$root/ckpt")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch(fold.sink _)
-      .start()
-    val batches = SliceReplay.runToCompletion(q).batches
+    val batches = SliceReplay.scoped(spark) {
+      SliceReplay.runToCompletion(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(s"$root/in")
+        .writeStream
+        .option("checkpointLocation", s"$root/ckpt")
+        .foreachBatch(fold.sink _)
+        .start())
+    }.batches
     (fold.result(spark), batches)
   }
 
@@ -124,9 +131,7 @@ object StreamSketch {
     val (sk, batches) = foldStream(spark, schema, root, Decoder.TopK,
       cm_topk(col("k"), lit(1L), capacity = 4096, eps = 1e-4))
     lastRunBatches = batches
-    sk.select(explode(topk_entries(col("sk"), 20)).as("e"))
-      .select(col("e.key").as("user_id"), col("e.est").as("est_count"))
-      .orderBy(desc("est_count"), asc("user_id"))
+    SketchQueries.topUsers(sk)
   }
 
   /** Progress of the most recent q90 run (test evidence only). */
@@ -147,7 +152,6 @@ object StreamSketch {
     * streaming-quantile service with the q64-audited 2/k rank bound. */
   def streamKllPrice(spark: SparkSession, sfDir: String,
       slices: Int = Slices): DataFrame = {
-    import spark.implicits._
     val root = SliceReplay.freshRoot("q90")
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_extendedprice").as("x"),
@@ -156,9 +160,7 @@ object StreamSketch {
     val (sk, batches) = foldStream(spark, schema, root, Decoder.Kll,
       kll_sketch(col("x"), k = 65536))
     lastKllRunBatches = batches
-    Seq(0.01, 0.25, 0.5, 0.75, 0.99).toDF("p")
-      .select(col("p"), kll_quantile(sk.scalar(), col("p")).as("quantile_value"))
-      .orderBy("p")
+    SketchQueries.kllQuantiles(sk)
   }
 
   /** Progress of the most recent q105 run (test evidence only). */
@@ -233,7 +235,7 @@ object StreamSketch {
     val (sk, batches) = foldStream(spark, schema, root, Decoder.Bloom,
       bloom_sketch(col("k"), expectedItems = expected, fpp = 1e-9))
     lastBloomRunBatches = batches
-    graft.queries.SketchQueries.bloomProbeCounts(Tables.orders(spark, sfDir), sk,
-      spark.read.schema(schema).parquet(s"$root/in").select(col("k")).distinct())
+    SketchQueries.bloomProbeCounts(Tables.orders(spark, sfDir), sk,
+      spark.read.schema(schema).parquet(s"$root/in").select(col("k")))
   }
 }

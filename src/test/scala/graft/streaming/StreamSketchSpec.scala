@@ -124,6 +124,26 @@ class StreamSketchSpec extends SparkTestBase {
     }
   }
 
+  test("q07/q112: one-scan membership counts as the semi join did") {
+    import spark.implicits._
+    // customer 1 is a member twice, order 3 has no customer, customer 2 is
+    // no member
+    val members = Seq("1", "1", "4").toDF("k")
+    val ord = Seq[(Long, Option[Long])]((1, Some(1)), (2, Some(2)), (3, None),
+      (4, Some(4)), (5, Some(1))).toDF("o_orderkey", "o_custkey")
+    val sk = members.agg(bloom_sketch(col("k"), expectedItems = 1000, fpp = 1e-9).as("sk"))
+    val key = col("o_custkey").cast("string")
+    val semiJoin = ord.select(bloom_contains(sk.scalar(), key).as("hit"))
+      .agg(count(lit(1)).as("probes"),
+        sum(when(col("hit"), 1L).otherwise(0L)).as("bloom_positives"))
+      .crossJoin(ord.join(members.toDF("ck"), key === col("ck"), "left_semi")
+        .agg(count(lit(1)).as("true_positives")))
+    val got = SketchQueries.bloomProbeCounts(ord, sk, members)
+    assert(got.columns.toSeq === semiJoin.columns.toSeq)
+    assert(got.collect().toSeq === semiJoin.collect().toSeq)
+    assert(got.head().getAs[Long]("true_positives") === 3L)
+  }
+
   // ---- the fold: restart and replay ----
 
   private def bytesOf(sk: DataFrame): Array[Byte] = sk.head().getAs[Array[Byte]]("sk")
