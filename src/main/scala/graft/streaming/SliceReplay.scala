@@ -9,8 +9,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /**
- * Deterministic arrival synthesis for the streaming gate queries (q75/q78):
- * a static gate table has no arrival order, so the gate slices it into
+ * Deterministic arrival synthesis for the nine streaming gate queries
+ * (q75 q78 q79 q82 q90 q93 q97 q105 q112): a static gate table has no arrival order, so the gate slices it into
  * time-RANGE-disjoint single-file parquet slices with strictly increasing
  * modification times — the file source then replays them oldest-first, one
  * micro-batch per file. Disjoint ordered slices mean no event is ever late

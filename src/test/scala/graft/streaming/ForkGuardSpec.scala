@@ -70,7 +70,7 @@ class ForkGuardSpec extends SparkTestBase {
       }
     }
     val hadoop = starts.filter { case (_, frames) => isHadoopShell(frames) }
-    assert(hadoop.isEmpty, s"${hadoop.size} Hadoop shell commands started, e.g.:\n" +
+    assert(hadoop.size === 0, "Hadoop shell commands started, e.g.:\n" +
       hadoop.take(3).map { case (cmd, frames) => (cmd +: frames.take(12)).mkString("\n  ") }
         .mkString("\n"))
     assert(fsKeys === before)
