@@ -31,7 +31,6 @@ object Tables {
     * scan already has at least defaultParallelism splits (any production
     * table) this is a no-op, so no extra exchange appears at scale. */
   def widen(df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.widen.off").contains("1")) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -62,8 +62,13 @@ class ForkFreeRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
   * [[ForkFreeRawLocalFs]], for the `FileContext` API (checkpoint logs,
   * the file-source log and state stores). Hadoop builds it reflectively
   * from `(URI, Configuration)`; like `LocalFs`, it serves `file:///`
-  * whatever the URI. */
+  * whatever the URI. Unlike Hadoop's `LocalFs`, it also verifies checksums
+  * on `open(path)`, the call `FileContext.open(path)` makes and Spark's
+  * checkpoint manager reads its logs through: `FilterFs.open(path)` reads
+  * the raw file unchecked, so a corrupt offset or commit log was parsed. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new ForkFreeRawLocalFs(conf)) {
   override def getUriDefaultPort: Int = -1
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
 }

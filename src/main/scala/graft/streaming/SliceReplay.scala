@@ -2,20 +2,27 @@ package graft.streaming
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryProgress}
 import org.apache.spark.sql.types.StructType
 
 /**
- * Deterministic arrival synthesis for the nine streaming gate queries
- * (q75 q78 q79 q82 q90 q93 q97 q105 q112): a static gate table has no arrival order, so the gate slices it into
- * time-RANGE-disjoint single-file parquet slices with strictly increasing
- * modification times — the file source then replays them oldest-first, one
- * micro-batch per file. Disjoint ordered slices mean no event is ever late
- * w.r.t. any non-negative watermark (every new file's events exceed the
- * prior maximum event time).
+ * The one runner of the nine streaming gate queries (q75 q78 q79 q82 q90
+ * q93 q97 q105 q112): it stages a gate's arrivals, is the only source that
+ * reads them, writes their parquet logs, drains their streams and records
+ * each run.
+ *
+ * Arrival: a static gate table has no arrival order, so [[stage]] slices
+ * it into time-RANGE-disjoint single-file parquet slices with strictly
+ * increasing modification times — the file source then replays them
+ * oldest-first, one micro-batch per file. Disjoint ordered slices mean no
+ * event is ever late w.r.t. any non-negative watermark (every new file's
+ * events exceed the prior maximum event time).
  *
  * Staging is ONE aggregate (tus bounds, skipped when the caller already
  * has them) plus ONE pass over the input: rows shuffle to one task per
@@ -35,16 +42,40 @@ import org.apache.spark.sql.types.StructType
  */
 private[graft] object SliceReplay {
 
+  /** Micro-batches a gate replays its table in. */
+  val Slices = 3
+
+  /** Synthetic arrival epoch (2020-09-13) of the gates that derive event
+    * times from ids (q79, q82): a doc_id-0 arrival at the REAL epoch sits
+    * exactly on the state store's zero-initialized watermark and is
+    * discarded as late before the dedup state ever sees it (observed:
+    * 499/500 survivors at sf0.001) — every synthetic time sits far above
+    * any initial-watermark artifact instead. */
+  val BaseTus = 1600000000000000L
+
+  /** Dedup horizon of q79 and q82, past their staged synthetic range (1 ms
+    * per doc id ⇒ even a 10⁷-doc staged corpus spans under 3 h): the
+    * survivor set is globally exact at gate scale. */
+  val Horizon = "24 hours"
+
+  /** State-store layout width of every stateful gate, sized to its
+    * resident state (hundreds of rows), not to the batch engine's shuffle
+    * width: every micro-batch pays one state-store commit per partition
+    * per stateful operator, so an oversized layout is pure fixed cost
+    * (interleaved A/B at sf0.1: 8 → 2 partitions cut the gate 12–29 % with
+    * identical results). q97's one-row global aggregate keeps one store at
+    * any width. Spark reads the width when a checkpoint is new. */
+  private val StateWidth = "2"
+
   /** Per-gate staging root, REUSED across invocations (deleted and
     * recreated at entry): repeated gate/bench/decade cycles hold at most
     * one staged copy per query on disk instead of leaking a table copy
     * per sample. Callers consume the returned plan before the next
     * invocation (the gate's run-then-clearCache discipline). Test forking
     * is single-JVM/sequential, so the fixed path cannot race. */
-  def freshRoot(tag: String): String = {
-    val base = sys.props.getOrElse("graft.stream.scratch",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SCRATCH",
-        System.getProperty("java.io.tmpdir")))
+  private def freshRoot(tag: String): String = {
+    val base = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCRATCH",
+      System.getProperty("java.io.tmpdir"))
     val root = new File(base, s"graft-stream-gate/$tag")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
     new File(root, "in").mkdirs()
@@ -66,34 +97,65 @@ private[graft] object SliceReplay {
     }
   }
 
+  /** A gate's staged arrivals: the files under `root/in`, their schema,
+    * and the gate's `tag`, which names its root and its run record. */
+  final case class Staged(spark: SparkSession, tag: String, root: String,
+      schema: StructType) {
+    private def in = s"$root/in"
+    /** Checkpoint of the gate's first query. */
+    def checkpoint: String = s"$root/ckpt"
+    /** The arrivals as a stream: one slice per micro-batch, oldest first. */
+    def source: DataFrame = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(in)
+    /** The same files read as one batch table. */
+    def table: DataFrame = spark.read.schema(schema).parquet(in)
+  }
+
   /** Stage `df` (must carry a long `tus` event-time column) as `slices`
-    * disjoint time-range files under `root/in`; `last`, if given, becomes
-    * the final slice (q75's watermark sentinel). Pass `bounds` when the
-    * caller already aggregated (min tus, max tus) — saves the extra scan.
-    * Returns the staged schema for the readStream contract. */
-  def stage(spark: SparkSession, df: DataFrame, slices: Int, root: String,
+    * disjoint time-range files under a fresh root for `tag`; `last`, if
+    * given, becomes the final slice (q75's watermark sentinel). Pass
+    * `bounds` when the caller already aggregated (min tus, max tus) —
+    * saves the extra scan. */
+  def stage(spark: SparkSession, tag: String, df: DataFrame, slices: Int,
       last: Option[DataFrame] = None,
-      bounds: Option[(Long, Long)] = None): StructType = scoped(spark) {
-    val (minTus, maxTus) = bounds.getOrElse {
-      val r = df.agg(min(col("tus")), max(col("tus"))).head()
-      (r.getLong(0), r.getLong(1))
+      bounds: Option[(Long, Long)] = None): Staged = {
+    val root = freshRoot(tag)
+    scoped(spark) {
+      val (minTus, maxTus) = bounds.getOrElse {
+        val r = df.agg(min(col("tus")), max(col("tus"))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      val width = math.max(1L, (maxTus - minTus) / slices + 1)
+      val baseMs = System.currentTimeMillis() - (slices + 2) * 4000L
+      df.withColumn("__slice",
+          floor((col("tus") - lit(minTus)) / lit(width)).cast("int"))
+        .repartition(slices + 1, col("__slice"))
+        .write.mode("overwrite").partitionBy("__slice").parquet(s"$root/stage")
+      (0 until slices).foreach { i =>
+        promotePartFile(s"$root/stage/__slice=$i", s"$root/in/slice_$i.parquet",
+          baseMs + i * 4000L)
+      }
+      last.foreach { extra =>
+        extra.coalesce(1).write.mode("overwrite").parquet(s"$root/stage_last")
+        promotePartFile(s"$root/stage_last", s"$root/in/slice_last.parquet",
+          baseMs + (slices + 1) * 4000L)
+      }
     }
-    val width = math.max(1L, (maxTus - minTus) / slices + 1)
-    val baseMs = System.currentTimeMillis() - (slices + 2) * 4000L
-    df.withColumn("__slice",
-        floor((col("tus") - lit(minTus)) / lit(width)).cast("int"))
-      .repartition(slices + 1, col("__slice"))
-      .write.mode("overwrite").partitionBy("__slice").parquet(s"$root/stage")
-    (0 until slices).foreach { i =>
-      promotePartFile(s"$root/stage/__slice=$i", s"$root/in/slice_$i.parquet",
-        baseMs + i * 4000L)
-    }
-    last.foreach { extra =>
-      extra.coalesce(1).write.mode("overwrite").parquet(s"$root/stage_last")
-      promotePartFile(s"$root/stage_last", s"$root/in/slice_last.parquet",
-        baseMs + (slices + 1) * 4000L)
-    }
-    df.schema
+    Staged(spark, tag, root, df.schema)
+  }
+
+  /** A parquet table at `dir` that each micro-batch of `stream` is written
+    * to through `foreachBatch`: appended (an append-mode log), or, when
+    * `complete`, replaced by complete mode's re-emission (q79's census).
+    * It reads back with the stream's own schema, so no inference job runs. */
+  final case class ParquetLog(stream: DataFrame, dir: String,
+      complete: Boolean = false) {
+    def sink: DataStreamWriter[Row] = stream.writeStream
+      .outputMode(if (complete) "complete" else "append")
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        df.write.mode(if (complete) "overwrite" else "append").parquet(dir)
+      }
+    def read: DataFrame = stream.sparkSession.read.schema(stream.schema).parquet(dir)
   }
 
   /** Hadoop keys that route `file:` paths to the fork-free local file
@@ -106,19 +168,13 @@ private[graft] object SliceReplay {
     "fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
 
   /** Runs `body` with [[ForkFreeLocalIo]] set in the session conf and, when
-    * given, `spark.sql.shuffle.partitions` set to `statePartitions`; every
-    * key is restored on every exit path. The scope must span start, drain
-    * and stop: Spark builds a file source's log on the stream thread after
-    * `start()` returns, from the session conf of that moment. Stateful
-    * operators take their partition count at query start, and every
-    * micro-batch pays one state commit per partition, so the gates size
-    * the state layout to their key cardinality instead of the session's
-    * batch shuffle width — the knob a 100 TB run turns UP (state
-    * partitions ≈ executor cores). */
-  def scoped[T](spark: SparkSession, statePartitions: Option[String] = None)(
-      body: => T): T = {
+    * `stateful`, `spark.sql.shuffle.partitions` set to [[StateWidth]];
+    * every key is restored on every exit path. The scope must span start,
+    * drain and stop: Spark builds a file source's log on the stream thread
+    * after `start()` returns, from the session conf of that moment. */
+  def scoped[T](spark: SparkSession, stateful: Boolean = false)(body: => T): T = {
     val keys = ForkFreeLocalIo ++
-      statePartitions.map("spark.sql.shuffle.partitions" -> _)
+      (if (stateful) Seq("spark.sql.shuffle.partitions" -> StateWidth) else Nil)
     val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     try {
       keys.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -129,43 +185,46 @@ private[graft] object SliceReplay {
     }
   }
 
-  /** Sink for COMPLETE-mode aggregates whose re-emission is bounded by
-    * construction (q97's one-row top-(k+1) buffer): each micro-batch's
-    * emission is captured via a bounded driver collect, and the LAST
-    * emission (complete mode's final merged state) is handed back. It
-    * replaced a per-micro-batch parquet OVERWRITE + read-back sink, whose
-    * write and read jobs were pure fixed cost. q79's per-hash census still
-    * overwrites parquet, and append-mode logs (q75/q93) keep their
-    * distributed parquet sinks — those are row-scaled. The streamed sketch
-    * gates (q78/q90/q105/q112) keep no state store at all: they fold each
-    * micro-batch's sketch on the driver (StreamSketch.SketchFold). */
-  final class CompleteCapture {
-    @volatile private var last: Option[org.apache.spark.sql.Row] = None
-    /** foreachBatch body: bounded collect of the re-emitted aggregate. */
-    def sink(df: DataFrame, batchId: Long): Unit =
-      last = df.collect().headOption
-    /** The captured final emission's single row (one-row aggregates). */
-    def headRow: org.apache.spark.sql.Row = {
-      require(last.nonEmpty, "complete-mode stream emitted no batch")
-      last.get
+  /** (data micro-batches, state rows updated, peak resident state rows,
+    * state-store instances per stateful operator) — spec-visible evidence
+    * a gate run was genuinely incremental and stateful; `stateRowsMax` is
+    * the watermark-eviction witness (peak `numRowsTotal` across
+    * micro-batches — bounded by the horizon, not the stream, when eviction
+    * works) and `stateStores` the state layout. */
+  final case class RunStats(batches: Int, stateRows: Long, stateRowsMax: Long,
+      stateStores: Seq[Long])
+
+  private def runStats(progress: Array[StreamingQueryProgress]): RunStats =
+    RunStats(progress.count(_.numInputRows > 0),
+      progress.flatMap(_.stateOperators.map(_.numRowsUpdated)).sum,
+      progress.map(_.stateOperators.map(_.numRowsTotal).sum).foldLeft(0L)(math.max),
+      progress.find(_.stateOperators.nonEmpty).toSeq
+        .flatMap(_.stateOperators.map(_.numStateStoreInstances)))
+
+  /** The run record: each gate tag's last run, one [[RunStats]] per query. */
+  private val runs = new ConcurrentHashMap[String, Seq[RunStats]]
+
+  /** Query `query` of the last run of the gate staged as `tag`. */
+  private[graft] def lastRun(tag: String, query: Int = 0): RunStats =
+    Option(runs.get(tag)).getOrElse(sys.error(s"no run of $tag recorded"))(query)
+
+  /** Runs a gate's streams inside [[scoped]] (at [[StateWidth]] when
+    * `stateful`): starts one query per sink, the first checkpointed at
+    * `staged.checkpoint` and the i-th at `checkpoint<i>`, drains them all
+    * to completion, stops them on every exit path, and records their
+    * [[RunStats]] under `staged.tag`. Every query starts before the first
+    * is drained, so several sinks (q79's two faces) run concurrently and
+    * their micro-batch fixed costs overlap. */
+  def drain(staged: Staged, stateful: Boolean)(
+      sinks: DataStreamWriter[Row]*): Unit =
+    scoped(staged.spark, stateful) {
+      val queries = mutable.ArrayBuffer.empty[StreamingQuery]
+      try {
+        for ((sink, i) <- sinks.zipWithIndex) queries += sink
+          .option("checkpointLocation", staged.checkpoint + (if (i == 0) "" else i))
+          .start()
+        queries.foreach(_.processAllAvailable())
+        runs.put(staged.tag, queries.map(q => runStats(q.recentProgress)).toSeq)
+      } finally queries.foreach(_.stop())
     }
-  }
-
-  /** (data micro-batches, state rows updated, peak resident state rows) —
-    * spec-visible evidence a gate run was genuinely incremental and
-    * stateful; `stateRowsMax` is the watermark-eviction witness (peak
-    * `numRowsTotal` across micro-batches — bounded by the horizon, not
-    * the stream, when eviction works). */
-  final case class RunStats(batches: Int, stateRows: Long, stateRowsMax: Long)
-
-  /** Drain the stream, capture progress evidence, stop. */
-  def runToCompletion(q: StreamingQuery): RunStats =
-    try {
-      q.processAllAvailable()
-      val progress = q.recentProgress
-      RunStats(progress.count(_.numInputRows > 0),
-        progress.flatMap(_.stateOperators.map(_.numRowsUpdated)).sum,
-        progress.map(_.stateOperators.map(_.numRowsTotal).sum)
-          .foldLeft(0L)(math.max))
-    } finally { q.stop() }
 }

@@ -40,44 +40,17 @@ import graft.queries.Tables
  */
 object StreamDedup {
 
-  private val Slices = 3
-
-  /** Horizon past the staged synthetic range (1 ms per doc id ⇒ even a
-    * 10⁷-doc staged corpus spans under 3 h) — global-exact at gate scale. */
-  private val WatermarkDelay = "24 hours"
-
-  /** Distinct-hash state is small at the verify scale; a 100 TB run raises
-    * this to ≈ executor cores (see SliceReplay.scoped). */
-  private val StatePartitions = "2"
-
-  /** Progress of the most recent run (test evidence only). */
-  @volatile private[graft] var lastRunBatches: Int = 0
-  @volatile private[graft] var lastDedupStateRows: Long = 0L
-
-  /** Peak resident dedup-state rows across micro-batches of the most
-    * recent run — the eviction witness: with a horizon narrower than the
-    * stream span this stays bounded by the horizon while the distinct-hash
-    * count keeps growing (StreamDedupSpec pins it). */
-  @volatile private[graft] var lastDedupStateRowsMax: Long = 0L
-
-  /** Synthetic arrival epoch (2020-09-13): a doc_id-0 arrival at the REAL
-    * epoch sits exactly on the state store's zero-initialized watermark and
-    * is discarded as late before the dedup state ever sees it (observed:
-    * 499/500 survivors at sf0.001) — every synthetic time sits far above
-    * any initial-watermark artifact instead. */
-  private[graft] val BaseTus = 1600000000000000L
-
   /** q79: the q15 dedup census — identical output contract (and oracle
     * string) to q15, computed through the streaming path. */
   def streamDedupCensus(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
+      slices: Int = SliceReplay.Slices): DataFrame = {
     // synthetic arrival order: 1 ms per doc id. Any order gives the same
     // census (see scaladoc); this one is deterministic and monotone so the
     // slices are time-range-disjoint.
     val docs = Tables.documents(spark, sfDir)
       .select(sha2(col("text"), 256).as("h"),
-        (lit(BaseTus) + col("doc_id").cast("long") * 1000L).as("tus"))
-    streamDedupCensusOn(spark, docs, slices, WatermarkDelay)
+        (lit(SliceReplay.BaseTus) + col("doc_id").cast("long") * 1000L).as("tus"))
+    streamDedupCensusOn(spark, docs, slices, SliceReplay.Horizon)
   }
 
   /** The census over any (h, tus) frame with an explicit horizon — the
@@ -87,53 +60,30 @@ object StreamDedup {
     * duplicate re-arrives within it (the production sizing rule). */
   private[graft] def streamDedupCensusOn(spark: SparkSession, docs: DataFrame,
       slices: Int, watermarkDelay: String): DataFrame = {
-    val root = SliceReplay.freshRoot("q79")
-    val schema = SliceReplay.stage(spark, docs, slices, root)
-    def in() = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
+    val staged = SliceReplay.stage(spark, "q79", docs, slices)
+    // face 1: bounded-state exact dedup → append-mode survivor log
+    val survivors = SliceReplay.ParquetLog(staged.source
+      .withColumn("ts", timestamp_micros(col("tus")))
+      .withWatermark("ts", watermarkDelay)
+      .dropDuplicatesWithinWatermark("h")
+      .select(col("h")), s"${staged.root}/survivors")
+    // face 2: per-hash multiplicity census (complete-mode monoid count —
+    // last micro-batch's re-emission is the final exact table)
+    val counts = SliceReplay.ParquetLog(
+      staged.source.groupBy(col("h")).agg(count(lit(1)).as("c")),
+      s"${staged.root}/counts", complete = true)
+    // both faces drain CONCURRENTLY — their micro-batch/state-commit fixed
+    // costs overlap instead of summing (measured at sf0.001: 3.24 s
+    // sequential → 2.76 s concurrent while the unchanged q75 noise control
+    // read 24% SLOWER in the same window, so the load-adjusted win is
+    // ~1.5×); independent checkpoints, same staged input files
+    SliceReplay.drain(staged, stateful = true)(survivors.sink, counts.sink)
 
-    // both faces run under one sizing scope and drain CONCURRENTLY —
-    // their micro-batch/state-commit fixed costs overlap instead of
-    // summing (measured at sf0.001: 3.24 s sequential → 2.76 s concurrent
-    // while the unchanged q75 noise control read 24% SLOWER in the same
-    // window, so the load-adjusted win is ~1.5×); independent
-    // checkpoints, same staged input files
-    val st1 = SliceReplay.scoped(spark, Some(StatePartitions)) {
-      // face 1: bounded-state exact dedup → append-mode survivor log
-      val dedup = in().withColumn("ts", timestamp_micros(col("tus")))
-        .withWatermark("ts", watermarkDelay)
-        .dropDuplicatesWithinWatermark("h")
-        .select(col("h"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/ckpt_dedup")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$root/survivors")
-        }
-        .start()
-      // face 2: per-hash multiplicity census (complete-mode monoid count —
-      // last micro-batch's re-emission is the final exact table)
-      val counts = in().groupBy(col("h")).agg(count(lit(1)).as("c"))
-        .writeStream.outputMode("complete")
-        .option("checkpointLocation", s"$root/ckpt_counts")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("overwrite").parquet(s"$root/counts")
-        }
-        .start()
-      try SliceReplay.runToCompletion(dedup)
-      finally SliceReplay.runToCompletion(counts)
-    }
-    lastRunBatches = st1.batches
-    lastDedupStateRows = st1.stateRows
-    lastDedupStateRowsMax = st1.stateRowsMax
-
-    val survivors = spark.read.parquet(s"$root/survivors")
-    val counts = spark.read.parquet(s"$root/counts")
-    counts.agg(
+    counts.read.agg(
       sum(col("c")).as("n_docs"),
       sum(when(col("c") > 1, 1L).otherwise(0L)).as("dup_groups"),
       sum(when(col("c") > 1, col("c")).otherwise(0L)).as("dup_rows"))
-      .crossJoin(survivors.agg(count(lit(1)).as("distinct_texts")))
+      .crossJoin(survivors.read.agg(count(lit(1)).as("distinct_texts")))
       .select(col("n_docs"), col("distinct_texts"),
         col("dup_groups"), col("dup_rows"))
   }

@@ -39,30 +39,18 @@ import graft.queries.{IncrementalDedup, Tables}
  */
 object StreamIncrDedup {
 
-  private val Slices = 3
-  private val WatermarkDelay = "24 hours"
-  private val StatePartitions = "2"
-  private val BaseTus = 1600000000000000L // the q79 epoch-clearance constant
-
-  @volatile private[graft] var lastRunBatches: Int = 0
-  @volatile private[graft] var lastStateRows: Long = 0L
-
   def streamIncrementalDedup(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
+      slices: Int = SliceReplay.Slices): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val base = docs.filter(col("source") =!= IncrementalDedup.DeltaSource)
     val delta = IncrementalDedup.gateDelta(docs)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-incr-dedup/q82").toString
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    SliceReplay.scoped(spark)(IncrementalDedup.prepareBase(spark, base, dir))
-
-    val root = SliceReplay.freshRoot("q82")
     // deterministic monotone arrivals: planted copies re-id past the raw
     // block, so row_number over doc_id gives disjoint slice ranges
-    val staged = delta.select(sha2(col("text"), 256).as("h"),
-      (lit(BaseTus) + col("doc_id") * 1000L).as("tus"))
-    val schema = SliceReplay.stage(spark, staged, slices, root)
+    val staged = SliceReplay.stage(spark, "q82", delta.select(
+      sha2(col("text"), 256).as("h"),
+      (lit(SliceReplay.BaseTus) + col("doc_id") * 1000L).as("tus")), slices)
+    val dir = s"${staged.root}/base"
+    SliceReplay.scoped(spark)(IncrementalDedup.prepareBase(spark, base, dir))
 
     // the one-row filter, re-read by its scalar subquery each micro-batch
     val bloom = spark.read.parquet(s"$dir/bloom").scalar()
@@ -73,32 +61,21 @@ object StreamIncrDedup {
     val index = spark.read.parquet(s"$dir/index")
       .select(col("h")).distinct().withColumn("in_base", lit(true))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val in = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$root/in")
+    val in = staged.source
     val negatives = in.filter(!bloom_contains(bloom, col("h")))
     val rescued = in.filter(bloom_contains(bloom, col("h")))
       .join(index, Seq("h"), "left_outer") // stream-static, per-batch
       .filter(col("in_base").isNull)
       .select(col("h"), col("tus"))
-    val st = SliceReplay.scoped(spark, Some(StatePartitions)) {
-      SliceReplay.runToCompletion(negatives.unionAll(rescued)
-        .withColumn("ts", timestamp_micros(col("tus")))
-        .withWatermark("ts", WatermarkDelay)
-        .dropDuplicatesWithinWatermark("h")
-        .select(col("h"))
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$root/survivors")
-        }
-        .start())
-    }
-    lastRunBatches = st.batches
-    lastStateRows = st.stateRows
+    val survivors = SliceReplay.ParquetLog(negatives.unionAll(rescued)
+      .withColumn("ts", timestamp_micros(col("tus")))
+      .withWatermark("ts", SliceReplay.Horizon)
+      .dropDuplicatesWithinWatermark("h")
+      .select(col("h")), s"${staged.root}/survivors")
+    SliceReplay.drain(staged, stateful = true)(survivors.sink)
 
-    val survivors = spark.read.parquet(s"$root/survivors")
     delta.agg(count(lit(1)).as("n_delta"))
-      .crossJoin(survivors.agg(count(lit(1)).as("new_distinct")))
+      .crossJoin(survivors.read.agg(count(lit(1)).as("new_distinct")))
       .select(col("n_delta"), col("new_distinct"),
         (col("n_delta") - col("new_distinct")).as("dropped"))
   }

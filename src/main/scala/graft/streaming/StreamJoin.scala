@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType, TimestampType}
 import graft.queries.Tables
 
 /**
@@ -36,26 +35,10 @@ import graft.queries.Tables
  */
 object StreamJoin {
 
-  private val Slices = 3
   private val WatermarkDelay = "30 minutes"
 
   /** Attribution horizon: purchases within 2 h after the click. */
   private[graft] val HorizonUs = 7200000000L
-
-  /** State-store layout width for the gate (see SliceReplay.scoped):
-    * sized to the gate's resident state (hundreds of rows), not the batch
-    * engine's shuffle width — every micro-batch pays one state-store
-    * commit PER PARTITION per stateful operator, so oversized layouts are
-    * pure fixed cost (interleaved A/B at sf0.1: 8 -> 2 partitions cut the
-    * gate 12-29% with identical results). A 100 TB run sizes this up to
-    * ~executor cores via SPARK_GRAFT_STATE_PARTITIONS. */
-  private def StatePartitions: String =
-    sys.props.getOrElse("graft.q93.state.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "2"))
-
-  /** Progress of the most recent [[pairLog]] run (spec evidence only). */
-  @volatile private[graft] var lastRunBatches: Int = 0
-  @volatile private[graft] var lastRunStateRowsMax: Long = 0L
 
   /** The batch twin of the streamed interval join — the spec's ground
     * truth (the oracle states the same join in DuckDB). */
@@ -79,22 +62,12 @@ object StreamJoin {
     * pair log (user_id, cid, pid, lag_us, val_micro) — exposed for the
     * spec's cross-slice fixtures. */
   private[graft] def pairLog(spark: SparkSession, ev: DataFrame,
-      slices: Int = Slices): DataFrame = {
-    val root = SliceReplay.freshRoot("q93")
-    val staged = ev.select(col("event_id").cast("long"),
+      slices: Int = SliceReplay.Slices): DataFrame = {
+    val staged = SliceReplay.stage(spark, "q93", ev.select(col("event_id").cast("long"),
       col("user_id").cast("long"), col("ts").cast("timestamp").as("ts"),
       col("tus").cast("long"), col("event_type").cast("string"),
-      col("value").cast("double"))
-    SliceReplay.stage(spark, staged, slices, root)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("ts", TimestampType), StructField("tus", LongType),
-      StructField("event_type", org.apache.spark.sql.types.StringType),
-      StructField("value", DoubleType)))
-    def side(tpe: String): DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .filter(col("event_type") === tpe)
+      col("value").cast("double")), slices)
+    def side(tpe: String): DataFrame = staged.source.filter(col("event_type") === tpe)
     val clicks = side("click")
       .select(col("event_id").as("cid"), col("user_id"),
         col("ts").as("cts"), col("tus").as("ctus"))
@@ -111,21 +84,9 @@ object StreamJoin {
       .select(col("user_id"), col("cid"), col("pid"),
         (col("ptus") - col("ctus")).as("lag_us"),
         floor(col("value") * lit(1000000L)).cast("long").as("val_micro"))
-    val stats = SliceReplay.scoped(spark, Some(StatePartitions)) {
-      SliceReplay.runToCompletion(pairs.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$root/pairs")
-        }
-        .start())
-    }
-    lastRunBatches = stats.batches
-    lastRunStateRowsMax = stats.stateRowsMax
-    val logSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("cid", LongType),
-      StructField("pid", LongType), StructField("lag_us", LongType),
-      StructField("val_micro", LongType)))
-    spark.read.schema(logSchema).parquet(s"$root/pairs")
+    val log = SliceReplay.ParquetLog(pairs, s"${staged.root}/pairs")
+    SliceReplay.drain(staged, stateful = true)(log.sink)
+    log.read
   }
 
   /** The one-row census shared by the gate and the oracle contract. */

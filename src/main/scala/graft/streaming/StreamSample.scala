@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession, functions}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import graft.agg.SketchAggregators.{TopRowsAggregator, TopRowsCodec}
 import graft.queries.{Tables, TextQueries}
@@ -28,44 +28,47 @@ import graft.queries.{Tables, TextQueries}
  */
 object StreamSample {
 
-  private val Slices = 3
-
-  /** One bounded top-rows buffer — a single state partition IS the layout. */
-  private val StatePartitions = "1"
-
-  /** Progress of the most recent run (test evidence only). */
-  @volatile private[graft] var lastRunBatches: Int = 0
+  /** Sink for the one-row top-rows aggregate, whose complete-mode
+    * re-emission is bounded by construction: each micro-batch's emission
+    * is captured by a bounded driver collect, and the LAST one (complete
+    * mode's final merged state) is handed back. It replaced a
+    * per-micro-batch parquet OVERWRITE + read-back sink, whose write and
+    * read jobs were pure fixed cost. */
+  private final class CompleteCapture {
+    @volatile private var emission: Option[Row] = None
+    /** foreachBatch body: bounded collect of the re-emitted aggregate. */
+    def sink(df: DataFrame, batchId: Long): Unit =
+      emission = df.collect().headOption
+    /** The captured final emission's single row. */
+    def headRow: Row = {
+      require(emission.nonEmpty, "complete-mode stream emitted no batch")
+      emission.get
+    }
+  }
 
   /** q97: the q86 priority sample computed through the streaming path —
     * identical output contract (and oracle string) to q86. */
   def streamPrioritySample(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
+      slices: Int = SliceReplay.Slices): DataFrame = {
     import spark.implicits._
     val k = TextQueries.PrioritySampleK
-    val root = SliceReplay.freshRoot("q97")
     val docs = Tables.documents(spark, sfDir)
       .filter(col("n_chars").isNotNull)
       .select(col("doc_id"), col("n_chars").cast("long").as("w"),
         col("doc_id").as("tus"))
-    val schema = SliceReplay.stage(spark, docs, slices, root)
+    val staged = SliceReplay.stage(spark, "q97", docs, slices)
     val topRows = functions.udaf(new TopRowsAggregator(k + 1),
       Encoders.product[(Long, Long, Long, Long)])
-    val agg = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
+    val agg = staged.source
       .withColumn("u", expr(
         "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) + 1"))
       .withColumn("p_milli", expr("w * 4294967296 * 1000 div u"))
       .agg(topRows(col("p_milli"), col("doc_id"), col("w"), col("u")).as("top"))
     // complete mode re-emits the one-row aggregate; the last bounded
-    // capture wins (see SliceReplay.CompleteCapture)
-    val cap = new SliceReplay.CompleteCapture
-    lastRunBatches = SliceReplay.scoped(spark, Some(StatePartitions)) {
-      SliceReplay.runToCompletion(agg.writeStream.outputMode("complete")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch(cap.sink _)
-        .start())
-    }.batches
+    // capture wins
+    val cap = new CompleteCapture
+    SliceReplay.drain(staged, stateful = true)(
+      agg.writeStream.outputMode("complete").foreachBatch(cap.sink _))
     val rows = TopRowsCodec.deserialize(cap.headRow.getAs[Array[Byte]]("top"))
     require(rows.length == k + 1,
       s"priority sample needs k+1 = ${k + 1} rows for tau, got ${rows.length}")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.queries.{Sessionize, Tables}
 
 /**
@@ -39,68 +38,22 @@ import graft.queries.{Sessionize, Tables}
  */
 object StreamSessionize {
 
-  private val Slices = 3
   private val WatermarkDelay = "30 minutes"
   private val WatermarkUs = 1800000000L
-
-  /** State-store layout width for the gate (see SliceReplay.scoped):
-    * sized to the gate's resident state (hundreds of rows), not the batch
-    * engine's shuffle width — every micro-batch pays one state-store
-    * commit PER PARTITION per stateful operator, so oversized layouts are
-    * pure fixed cost (interleaved A/B at sf0.1: 8 -> 2 partitions cut the
-    * gate 12-29% with identical results). A 100 TB run sizes this up to
-    * ~executor cores via SPARK_GRAFT_STATE_PARTITIONS. */
-  private def StatePartitions: String =
-    sys.props.getOrElse("graft.q75.state.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "2"))
-
-  /** Progress of the most recent [[runStream]] (test evidence only). */
-  @volatile private[graft] var lastRunBatches: Int = 0
-  @volatile private[graft] var lastRunStateRows: Long = 0L
-
-  /** Stream the staged arrivals through session_window and return the
-    * per-session log as a DataFrame (user_id, n_events, dur_us). */
-  private def runStream(spark: SparkSession, root: String,
-      schema: StructType, sentinelUser: Long): DataFrame = {
-    val sessions = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$root/in")
-      .withWatermark("ts", WatermarkDelay)
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        (max(col("tus")) - min(col("tus"))).as("dur_us"))
-      .select(col("user_id"), col("n_events"), col("dur_us"))
-    val stats = SliceReplay.scoped(spark, Some(StatePartitions)) {
-      SliceReplay.runToCompletion(sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          df.write.mode("append").parquet(s"$root/sessions")
-        }
-        .start())
-    }
-    lastRunBatches = stats.batches
-    lastRunStateRows = stats.stateRows
-    val logSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("n_events", LongType),
-      StructField("dur_us", LongType)))
-    spark.read.schema(logSchema).parquet(s"$root/sessions")
-      .filter(col("user_id") =!= sentinelUser)
-  }
 
   /** The streaming session log over `ev` (user_id, event_id, ts, tus) via
     * `slices` time-range micro-batches — exposed for the spec's
     * boundary-straddle fixtures. */
   private[graft] def sessionLog(spark: SparkSession, ev: DataFrame,
-      slices: Int = Slices): DataFrame = {
-    val root = SliceReplay.freshRoot("q75")
-    val staged = ev.select(col("user_id").cast("long"),
+      slices: Int = SliceReplay.Slices): DataFrame = {
+    val events = ev.select(col("user_id").cast("long"),
       col("event_id").cast("long"), col("ts").cast("timestamp").as("ts"),
       col("tus").cast("long"))
     // ONE bounds pass feeds both the slice ranges and the sentinel: a
     // far-future event advancing the watermark past every real session
     // end (its own session can never close, so it never reaches the log),
     // owned by the data-derived user max(user_id) + 1
-    val b = staged.agg(min(col("tus")), max(col("tus")),
+    val b = events.agg(min(col("tus")), max(col("tus")),
       max(col("user_id"))).head()
     val (minTus, maxTus, sentinelUser) =
       (b.getLong(0), b.getLong(1), b.getLong(2) + 1L)
@@ -110,9 +63,17 @@ object StreamSessionize {
       .toDF("user_id", "event_id", "tus")
       .select(col("user_id"), col("event_id"),
         timestamp_micros(col("tus")).as("ts"), col("tus"))
-    val schema = SliceReplay.stage(spark, staged, slices, root,
+    val staged = SliceReplay.stage(spark, "q75", events, slices,
       Some(sentinel), Some((minTus, maxTus)))
-    runStream(spark, root, schema, sentinelUser)
+    val sessions = SliceReplay.ParquetLog(staged.source
+      .withWatermark("ts", WatermarkDelay)
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"),
+        (max(col("tus")) - min(col("tus"))).as("dur_us"))
+      .select(col("user_id"), col("n_events"), col("dur_us")),
+      s"${staged.root}/sessions")
+    SliceReplay.drain(staged, stateful = true)(sessions.sink)
+    sessions.read.filter(col("user_id") =!= sentinelUser)
   }
 
   /** q75: global session statistics — identical output contract (and

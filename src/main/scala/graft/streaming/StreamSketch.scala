@@ -44,8 +44,6 @@ import graft.sketch.Mergeable
  */
 object StreamSketch {
 
-  private val Slices = 3
-
   /** Folds micro-batches into one running sketch of kind `decode`: each
     * batch's `build` aggregate merges into the sketch of the batch before,
     * and the running blob is written atomically to `checkpoint/sketch/<id>`.
@@ -97,45 +95,26 @@ object StreamSketch {
     }
   }
 
-  /** Streams the staged arrivals under `root/in` (checkpoint `root/ckpt`)
-    * through a [[SketchFold]]; returns the final sketch frame and the
-    * number of data micro-batches. */
-  private[streaming] def foldStream[S <: Mergeable[S]](spark: SparkSession,
-      schema: StructType, root: String, decode: Decoder[S],
-      build: Column): (DataFrame, Int) = {
-    val fold = new SketchFold(decode, build, s"$root/ckpt")
-    val batches = SliceReplay.scoped(spark) {
-      SliceReplay.runToCompletion(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$root/in")
-        .writeStream
-        .option("checkpointLocation", s"$root/ckpt")
-        .foreachBatch(fold.sink _)
-        .start())
-    }.batches
-    (fold.result(spark), batches)
+  /** Streams `staged`'s arrivals through a [[SketchFold]] checkpointed at
+    * `staged.checkpoint`; returns the final sketch frame. */
+  private[streaming] def foldStream[S <: Mergeable[S]](staged: SliceReplay.Staged,
+      decode: Decoder[S], build: Column): DataFrame = {
+    val fold = new SketchFold(decode, build, staged.checkpoint)
+    SliceReplay.drain(staged, stateful = false)(
+      staged.source.writeStream.foreachBatch(fold.sink _))
+    fold.result(staged.spark)
   }
-
-  /** Progress of the most recent run (test evidence only). */
-  @volatile private[graft] var lastRunBatches: Int = 0
 
   /** q78: top-20 heavy-hitter users via a streamed cm_topk build —
     * identical output contract (and oracle string) to q02. */
   def streamTopKUsers(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
-    val root = SliceReplay.freshRoot("q78")
+      slices: Int = SliceReplay.Slices): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id").cast("string").as("k"),
         unix_micros(col("ts").cast("timestamp")).as("tus"))
-    val schema = SliceReplay.stage(spark, ev, slices, root)
-    val (sk, batches) = foldStream(spark, schema, root, Decoder.TopK,
-      cm_topk(col("k"), lit(1L), capacity = 4096, eps = 1e-4))
-    lastRunBatches = batches
-    SketchQueries.topUsers(sk)
+    SketchQueries.topUsers(foldStream(SliceReplay.stage(spark, "q78", ev, slices),
+      Decoder.TopK, cm_topk(col("k"), lit(1L), capacity = 4096, eps = 1e-4)))
   }
-
-  /** Progress of the most recent q90 run (test evidence only). */
-  @volatile private[graft] var lastKllRunBatches: Int = 0
 
   /** q90: the QUANTILE face of the streaming layer — a KLL build folded over
     * micro-batches, sharing q08's oracle string verbatim.
@@ -151,20 +130,13 @@ object StreamSketch {
     * in stream length; at production k the same plan is the approximate
     * streaming-quantile service with the q64-audited 2/k rank bound. */
   def streamKllPrice(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
-    val root = SliceReplay.freshRoot("q90")
+      slices: Int = SliceReplay.Slices): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_extendedprice").as("x"),
         col("l_orderkey").cast("long").as("tus"))
-    val schema = SliceReplay.stage(spark, li, slices, root)
-    val (sk, batches) = foldStream(spark, schema, root, Decoder.Kll,
-      kll_sketch(col("x"), k = 65536))
-    lastKllRunBatches = batches
-    SketchQueries.kllQuantiles(sk)
+    SketchQueries.kllQuantiles(foldStream(SliceReplay.stage(spark, "q90", li, slices),
+      Decoder.Kll, kll_sketch(col("x"), k = 65536)))
   }
-
-  /** Progress of the most recent q105 run (test evidence only). */
-  @volatile private[graft] var lastHllRunBatches: Int = 0
 
   /** q105: the CARDINALITY face of the streaming layer — q05's HLL
     * distinct-user build folded over micro-batches, sharing
@@ -181,27 +153,19 @@ object StreamSketch {
     * is the sketch, the twin pins it inside the 3σ bound. The driver holds
     * ONE 16 KB register array, constant in stream length. */
   def streamHllUsers(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
-    val root = SliceReplay.freshRoot("q105")
+      slices: Int = SliceReplay.Slices): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("user_id").cast("string").as("k"),
         unix_micros(col("ts").cast("timestamp")).as("tus"))
-    val schema = SliceReplay.stage(spark, ev, slices, root)
-    val (frame, batches) = foldStream(spark, schema, root, Decoder.Hll,
-      hll_sketch(col("k")))
-    lastHllRunBatches = batches
-    val sk = frame.scalar()
-    spark.read.schema(schema).parquet(s"$root/in")
-      .agg(countDistinct(col("k")).as("exact_users"))
+    val staged = SliceReplay.stage(spark, "q105", ev, slices)
+    val sk = foldStream(staged, Decoder.Hll, hll_sketch(col("k"))).scalar()
+    staged.table.agg(countDistinct(col("k")).as("exact_users"))
       .select(col("exact_users"),
         (abs(hll_count(sk).cast("double")
           - col("exact_users").cast("double")) <=
           greatest(lit(2.0), lit(3.0) * hll_stderr(sk)
             * col("exact_users").cast("double"))).as("hll_within_bound"))
   }
-
-  /** Progress of the most recent q112 run (test evidence only). */
-  @volatile private[graft] var lastBloomRunBatches: Int = 0
 
   /** q112: the MEMBERSHIP face of the streaming layer — q07's Bloom build
     * folded over micro-batches, sharing q07's oracle string
@@ -214,8 +178,7 @@ object StreamSketch {
     * Structured Streaming, each pinned by a shared batch oracle. The
     * driver holds ONE bit array, constant in stream length. */
   def streamBloomOrders(spark: SparkSession, sfDir: String,
-      slices: Int = Slices): DataFrame = {
-    val root = SliceReplay.freshRoot("q112")
+      slices: Int = SliceReplay.Slices): DataFrame = {
     val members = Tables.customer(spark, sfDir)
       .filter(col("c_custkey") % 3 === 0)
       .select(col("c_custkey").cast("string").as("k"),
@@ -230,12 +193,11 @@ object StreamSketch {
     val b = members.agg(min(col("tus")), max(col("tus")),
       count(lit(1))).head()
     val expected = math.max(100000L, b.getLong(2))
-    val schema = SliceReplay.stage(spark, members, slices, root,
+    val staged = SliceReplay.stage(spark, "q112", members, slices,
       bounds = Some((b.getLong(0), b.getLong(1))))
-    val (sk, batches) = foldStream(spark, schema, root, Decoder.Bloom,
+    val sk = foldStream(staged, Decoder.Bloom,
       bloom_sketch(col("k"), expectedItems = expected, fpp = 1e-9))
-    lastBloomRunBatches = batches
     SketchQueries.bloomProbeCounts(Tables.orders(spark, sfDir), sk,
-      spark.read.schema(schema).parquet(s"$root/in").select(col("k")))
+      staged.table.select(col("k")))
   }
 }

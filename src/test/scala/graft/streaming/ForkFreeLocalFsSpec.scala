@@ -103,15 +103,19 @@ class ForkFreeLocalFsSpec extends SparkTestBase {
       assert(Files.readAllBytes(Paths.get(log.toUri)).sameElements(body), name)
 
       // a flipped byte fails a checksummed read: the FileSystem API's, and
-      // FileContext's open(path, bufferSize). FileContext.open(path), which
-      // the checkpoint manager calls, checks no sum here or on Hadoop's
-      // LocalFs: FilterFs.open(path) goes straight to the raw file system.
+      // FileContext's open(path, bufferSize)
       val raf = new RandomAccessFile(d.resolve("offsets/0").toFile, "rw")
       try { raf.seek(100); raf.write(body(100) ^ 0xff) } finally raf.close()
       def readAll(in: java.io.InputStream) = try in.readAllBytes() finally in.close()
       intercept[ChecksumException](readAll(FileSystem.get(log.toUri, conf).open(log)))
       intercept[ChecksumException](
         readAll(FileContext.getFileContext(log.toUri, conf).open(log, 4096)))
+      // and FileContext.open(path), which the checkpoint manager calls, on
+      // the fork-free file system. The stock conf is Hadoop's LocalFs, whose
+      // FilterFs.open(path) goes straight to the raw file system and reads
+      // the flipped byte back unchecked.
+      if (name == "fork-free") intercept[ChecksumException](readAll(fm.open(log)))
+      else assert(readAll(fm.open(log))(100) === (body(100) ^ 0xff).toByte, name)
     }
   }
 }

@@ -78,19 +78,18 @@ class ForkGuardSpec extends SparkTestBase {
 
   test("a streaming run that throws restores the session's fs keys") {
     val before = fsKeys
-    val root = SliceReplay.freshRoot("forkguard")
     import spark.implicits._
-    val staged = Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "tus")
-    val schema = SliceReplay.stage(spark, staged, 3, root)
+    val staged = SliceReplay.stage(spark, "forkguard",
+      Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "tus"), 3)
     // the build fails inside the first micro-batch
     intercept[StreamingQueryException] {
-      StreamSketch.foldStream(spark, schema, root, Decoder.Hll,
+      StreamSketch.foldStream(staged, Decoder.Hll,
         hll_sketch(raise_error(lit("boom")).cast("string")))
     }
     assert(fsKeys === before)
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     intercept[IllegalStateException] {
-      SliceReplay.scoped(spark, Some("3"))(throw new IllegalStateException("boom"))
+      SliceReplay.scoped(spark, stateful = true)(throw new IllegalStateException("boom"))
     }
     assert(fsKeys === before)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === partitions)

@@ -18,12 +18,12 @@ class StreamDedupSpec extends SparkTestBase {
     val streamed = StreamDedup.streamDedupCensus(spark, sf("sf0.001"))
       .collect().map(_.toString).toSeq
     assert(streamed === batch)
-    assert(StreamDedup.lastRunBatches >= 3,
-      s"expected >=3 data micro-batches, got ${StreamDedup.lastRunBatches}")
+    val run = SliceReplay.lastRun("q79")
+    assert(run.batches >= 3, s"expected >=3 data micro-batches, got ${run.batches}")
     // the dedup operator must have committed one state row per distinct
     // hash it admitted — zero state rows would mean the survivor log was
     // produced by something other than the stateful dedup
-    assert(StreamDedup.lastDedupStateRows > 0L)
+    assert(run.stateRows > 0L)
   }
 
   test("narrow horizon: state bounded by the horizon, census still exact") {
@@ -36,14 +36,14 @@ class StreamDedupSpec extends SparkTestBase {
     val spark2 = spark
     import spark2.implicits._
     val docs = (0 until 1000).map { i =>
-      ("k" + (i / 2), StreamDedup.BaseTus + i.toLong * 3600000000L)
+      ("k" + (i / 2), SliceReplay.BaseTus + i.toLong * 3600000000L)
     }.toDF("h", "tus")
     val out = StreamDedup.streamDedupCensusOn(spark, docs, slices = 10,
       watermarkDelay = "2 hours").head()
     assert(out.toString === "[1000,500,500,1000]")
-    assert(StreamDedup.lastDedupStateRowsMax > 0L)
-    assert(StreamDedup.lastDedupStateRowsMax < 200L,
-      s"eviction not bounding state: peak=${StreamDedup.lastDedupStateRowsMax}")
+    val peak = SliceReplay.lastRun("q79").stateRowsMax
+    assert(peak > 0L)
+    assert(peak < 200L, s"eviction not bounding state: peak=$peak")
     spark.catalog.clearCache()
   }
 

@@ -83,12 +83,12 @@ class StreamJoinSpec extends SparkTestBase {
     // genuinely incremental, stateful, and watermark-evicted: peak resident
     // state must sit well below the full click+purchase population — a
     // never-evicting join accumulates everything and fails HERE, not at 100x
-    assert(StreamJoin.lastRunBatches >= 4,
-      s"expected >=4 data micro-batches, got ${StreamJoin.lastRunBatches}")
+    val run = SliceReplay.lastRun("q93")
+    assert(run.batches >= 4, s"expected >=4 data micro-batches, got ${run.batches}")
     val population = raw
       .filter(col("event_type").isin("click", "purchase")).count()
-    assert(StreamJoin.lastRunStateRowsMax > 0L, "join kept no state")
-    assert(StreamJoin.lastRunStateRowsMax < population,
-      s"state never evicted: peak ${StreamJoin.lastRunStateRowsMax} of $population")
+    assert(run.stateRowsMax > 0L, "join kept no state")
+    assert(run.stateRowsMax < population,
+      s"state never evicted: peak ${run.stateRowsMax} of $population")
   }
 }

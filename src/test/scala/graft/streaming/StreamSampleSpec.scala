@@ -37,8 +37,8 @@ class StreamSampleSpec extends SparkTestBase {
     val s3 = StreamSample.streamPrioritySample(spark, dir)
       .collect().map(_.toString).toSeq
     assert(s3 === batch)
-    assert(StreamSample.lastRunBatches >= 3,
-      s"expected >=3 data micro-batches, got ${StreamSample.lastRunBatches}")
+    assert(SliceReplay.lastRun("q97").batches >= 3,
+      s"expected >=3 data micro-batches, got ${SliceReplay.lastRun("q97").batches}")
     val s2 = StreamSample.streamPrioritySample(spark, dir, slices = 2)
       .collect().map(_.toString).toSeq
     assert(s2 === batch, "sample must be independent of the slicing")

@@ -73,9 +73,9 @@ class StreamSessionizeSpec extends SparkTestBase {
     assert(stream === batch)
     // the run must have been genuinely incremental AND stateful — a silent
     // rewrite into one batch pass fails here, not at 100x
-    assert(StreamSessionize.lastRunBatches >= 4,
-      s"expected >=4 data micro-batches, got ${StreamSessionize.lastRunBatches}")
-    assert(StreamSessionize.lastRunStateRows > 0L, "no state rows updated")
+    val run = SliceReplay.lastRun("q75")
+    assert(run.batches >= 4, s"expected >=4 data micro-batches, got ${run.batches}")
+    assert(run.stateRows > 0L, "no state rows updated")
   }
 
   test("sentinel never reaches the log; negative user ids are NOT stolen for it") {

@@ -26,8 +26,8 @@ class StreamSketchSpec extends SparkTestBase {
     val streamed = StreamSketch.streamTopKUsers(spark, sf("sf0.001"))
       .collect().map(_.toString).toSeq
     assert(streamed === batch)
-    assert(StreamSketch.lastRunBatches >= 3,
-      s"expected >=3 data micro-batches, got ${StreamSketch.lastRunBatches}")
+    assert(SliceReplay.lastRun("q78").batches >= 3,
+      s"expected >=3 data micro-batches, got ${SliceReplay.lastRun("q78").batches}")
   }
 
   test("slice count cannot change the result (merge is a monoid)") {
@@ -48,8 +48,8 @@ class StreamSketchSpec extends SparkTestBase {
     val streamed = StreamSketch.streamKllPrice(spark, sf("sf0.001"))
       .collect().map(_.toString).toSeq
     assert(streamed === batchKll)
-    assert(StreamSketch.lastKllRunBatches >= 3,
-      s"expected >=3 data micro-batches, got ${StreamSketch.lastKllRunBatches}")
+    assert(SliceReplay.lastRun("q90").batches >= 3,
+      s"expected >=3 data micro-batches, got ${SliceReplay.lastRun("q90").batches}")
   }
 
   test("q90: slice count cannot change the quantiles (KLL merge is a monoid)") {
@@ -67,8 +67,8 @@ class StreamSketchSpec extends SparkTestBase {
     val streamed = StreamSketch.streamHllUsers(spark, sf("sf0.001"))
       .collect().map(_.toString).toSeq
     assert(streamed === batchHll)
-    assert(StreamSketch.lastHllRunBatches >= 3,
-      s"expected >=3 data micro-batches, got ${StreamSketch.lastHllRunBatches}")
+    assert(SliceReplay.lastRun("q105").batches >= 3,
+      s"expected >=3 data micro-batches, got ${SliceReplay.lastRun("q105").batches}")
   }
 
   test("q105: slice count cannot change the cardinality (HLL merge is idempotent)") {
@@ -86,8 +86,8 @@ class StreamSketchSpec extends SparkTestBase {
     val streamed = StreamSketch.streamBloomOrders(spark, sf("sf0.001"))
       .collect().map(_.toString).toSeq
     assert(streamed === batchBloom)
-    assert(StreamSketch.lastBloomRunBatches >= 3,
-      s"expected >=3 data micro-batches, got ${StreamSketch.lastBloomRunBatches}")
+    assert(SliceReplay.lastRun("q112").batches >= 3,
+      s"expected >=3 data micro-batches, got ${SliceReplay.lastRun("q112").batches}")
   }
 
   test("q112: slice count cannot change the filter (Bloom OR-merge is idempotent)") {
@@ -165,21 +165,22 @@ class StreamSketchSpec extends SparkTestBase {
   private def restartResumes[S <: Mergeable[S]](kind: Kind[S]): Unit = {
     def view(bytes: Array[Byte]) = kind.view(kind.decode(bytes))
     val whole = view(kind.input().agg(kind.build).head().getAs[Array[Byte]](0))
-    val root = SliceReplay.freshRoot(s"fold-restart-${kind.name}")
-    val schema = SliceReplay.stage(spark, kind.input(), 3, root)
+    val staged = SliceReplay.stage(spark, s"fold-restart-${kind.name}", kind.input(), 3)
+    def fold() = StreamSketch.foldStream(staged, kind.decode, kind.build)
+    def batches = SliceReplay.lastRun(staged.tag).batches
     // the third slice arrives only after the restart
-    val third = Paths.get(root, "in", "slice_2.parquet")
-    val held = Paths.get(root, "slice_2.parquet")
+    val third = Paths.get(staged.root, "in", "slice_2.parquet")
+    val held = Paths.get(staged.root, "slice_2.parquet")
     Files.move(third, held)
-    assert(StreamSketch.foldStream(spark, schema, root, kind.decode, kind.build)._2 === 2,
-      kind.name)
+    fold()
+    assert(batches === 2, kind.name)
     Files.move(held, third)
-    val (resumed, batches) = StreamSketch.foldStream(spark, schema, root, kind.decode, kind.build)
+    val resumed = fold()
     assert(batches === 1, s"${kind.name}: the restart must fold only the third slice")
     assert(view(bytesOf(resumed)) === whole, kind.name)
     // a restart with nothing new answers from the checkpoint
-    val (idle, none) = StreamSketch.foldStream(spark, schema, root, kind.decode, kind.build)
-    assert(none === 0 && view(bytesOf(idle)) === whole, kind.name)
+    val idle = fold()
+    assert(batches === 0 && view(bytesOf(idle)) === whole, kind.name)
   }
 
   test("a restart on the same checkpoint resumes the fold: == the uninterrupted build") {
